@@ -74,50 +74,17 @@ def _last_sampled_round() -> dict[str, int]:
 
 def _interleaved() -> dict[str, tuple]:
     """Registration order = driver-sample priority (the driver checks
-    a bounded ~50-query prefix):
-
-    1. queries ADDED OR CHANGED this round — highest-risk surface,
-       must land inside the sample;
-    2. everything else, LEAST-RECENTLY-DRIVER-SAMPLED first
-       (never-sampled queries lead), so the sample window cycles
-       through the whole registry across rounds instead of permanently
-       shadowing mid-list queries (61 of 170 had never been
-       driver-checked through r4)."""
+    a bounded ~50-query prefix): LEAST-RECENTLY-DRIVER-SAMPLED first
+    (never-sampled queries lead), so the sample window cycles through
+    the whole registry across rounds instead of permanently shadowing
+    mid-list queries."""
     from pyproj_spark.queries import QUERIES
     from pyproj_spark.queries_text import QUERIES_TEXT
     merged = dict(QUERIES)
     merged.update(QUERIES_TEXT)
-    new_this_round = [
-        # round-6 (optimization round): queries whose Spark-side
-        # implementation/plan CHANGED this round — no new queries, no
-        # oracle-SQL changes; these lead the sample so the driver
-        # verifies exactly the optimized surface (operator rewrites,
-        # parallelism floors, expression rebinding; see
-        # OPTIMIZATION_r06.md). Everything else rotates
-        # least-recently-sampled as before.
-        "dtw_route", "frechet", "hmm_match", "simplify",
-        "quadkey_compact", "s2cell", "s2_rollup", "s2_bbox", "s2_pip",
-        "hexcell", "cell_moments", "grid_dbscan", "dwell",
-        "hex_smooth", "od_matrix", "knn_hex", "theil_sen",
-        "trend_cells", "pip_join", "knn_zones", "polygon_area",
-        "clip_zones", "zone_fill", "zone_diameter",
-        "jpeg_decode", "jpeg_progressive", "png_decode",
-        "frame_sample", "image_resize", "image_dhash", "tone_detect",
-        "warc_ingest", "pipeline_e2e",
-        "symspell_pairs", "dup_spans_exact", "dup_spans",
-        "decontaminate", "cm_heavy", "canonical_docs",
-        "dedup_clusters", "bigram_lm", "dsir_sample", "repetition",
-        "minhash_lsh", "entropy", "ngram_novelty",
-        "ivfpq", "pq_ann",
-    ]
-    out: dict[str, tuple] = {n: merged[n] for n in new_this_round
-                             if n in merged}
     last = _last_sampled_round()
-    rest = sorted((n for n in merged if n not in out),
-                  key=lambda n: (last.get(n, 0), n))
-    for n in rest:
-        out[n] = merged[n]
-    return out
+    return {n: merged[n] for n in sorted(
+        merged, key=lambda n: (last.get(n, 0), n))}
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -186,8 +186,7 @@ def content_context_sql(html_expr: str, min_len: int = MIN_LEN,
 def site_template_clean(df, host_col: str = "host",
                         id_col: str = "doc_id",
                         text_col: str = "text",
-                        threshold: float = 0.5,
-                        broadcast_max_rows: int = 4_000_000):
+                        threshold: float = 0.5):
     """Per-SITE template removal (the host-scoped stage between
     corpus-wide paragraph dedup and per-page boilerplate stripping):
     a line appearing in more than ``threshold`` of a host's documents
@@ -219,11 +218,7 @@ def site_template_clean(df, host_col: str = "host",
     template = (per_line.join(host_docs, host_col)
                 .filter(F.col("ndocs") > threshold * F.col("total"))
                 .select(host_col, "lhash"))
-    # the template set grows with host count — broadcast only while it
-    # is genuinely bounded, else let the anti-join shuffle
-    from pyproj_spark.operators.skew import guarded_broadcast
-    kept = lh.join(guarded_broadcast(template, broadcast_max_rows),
-                   [host_col, "lhash"], "left_anti")
+    kept = lh.join(template, [host_col, "lhash"], "left_anti")
     totals = (lh.groupBy(id_col, host_col)
               .agg(F.count(F.lit(1)).alias("n_lines")))
     re = (kept.groupBy(id_col, host_col)

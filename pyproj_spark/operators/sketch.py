@@ -231,10 +231,10 @@ def bloom_probe(ref: DataFrame, probe: DataFrame, value_col: str,
     from the reference set, and "all k bits set" IS a semi-join
     counting k position matches — identical semantics (including the
     false-positive behavior) to a bitmap probe, but shuffle-bounded by
-    |ref|*k positions which then BROADCAST. The 100-TB use: pre-filter
-    a corpus-side join against a small reference set (Spark's own
-    bloom-pruning strategy) without materializing the reference on
-    every executor row.
+    |ref|*k positions which then BROADCAST. Use it where membership
+    itself is the output; to prune a join, leave the join plain: the
+    planner's broadcast join and runtime bloom filter do that without
+    a build-time collect.
 
     Adds ``out_col`` (boolean) to ``probe``.
 
@@ -260,6 +260,7 @@ def bloom_probe(ref: DataFrame, probe: DataFrame, value_col: str,
             F.lit(m)).alias("pos"))
 
     bit = [0] * m
+    ref = ref.filter(F.col(value_col).isNotNull())
     for r in positions(ref, value_col).select("pos") \
             .distinct().collect():  # <= m rows, m is a constant
         bit[r.pos] = 1
@@ -272,17 +273,9 @@ def bloom_probe(ref: DataFrame, probe: DataFrame, value_col: str,
         for j in range(k)])
     hit = F.forall(pos_arr,
                    lambda p: F.element_at(bm, p.cast("int") + 1) == 1)
-    # AND with an always-true nondeterministic guard (partition ids
-    # are >= 0 by construction — the value is unchanged): a filter on
-    # the column then (a) cannot be pushed below the probe side's
-    # spread exchange onto the single scan task, and (b) is excluded
-    # from constraint propagation, which otherwise INFERS the k-md5
-    # test onto the reference side of the downstream equi-join and
-    # re-runs it per reference row on the blocking broadcast path
-    # (guide §4.4's nondeterministic-marker trade-off, applied to an
-    # expression; measured 2.9s -> 1.2s on the gated join).
-    hit = (F.spark_partition_id() >= 0) & hit
-    return probe.withColumn(out_col, hit)
+    # NULL is never a member; `coalesce(hit, False)` would say the
+    # same but hits a codegen NPE in Spark 4.1 on a NULL probe value
+    return probe.withColumn(out_col, F.col(value_col).isNotNull() & hit)
 
 
 def bloom_sql_positions(j_expr: str, value_expr: str,

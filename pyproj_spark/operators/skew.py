@@ -62,31 +62,6 @@ def salted_broadcast_join(big: DataFrame, small: DataFrame, key: str,
             .drop("_salt"))
 
 
-#: default row cap for guarded broadcasts of DERIVED sets (duplicated
-#: shingles, per-host template lines): ~4M rows of md5 strings is
-#: ~200 MB serialized — at the edge of what a build side should ship.
-BROADCAST_MAX_ROWS = 4_000_000
-
-
-def guarded_broadcast(df: DataFrame,
-                      max_rows: int = BROADCAST_MAX_ROWS) -> DataFrame:
-    """Broadcast hint with a size guard (the pip_join pattern applied
-    to derived sets).
-
-    A duplicated-shingle set or a template-line set is bounded only by
-    the corpus: at 100x scale an unconditional ``F.broadcast`` hint is
-    a driver/executor OOM. This probes the row count with an
-    early-terminating ``limit(max_rows + 1).count()`` against a
-    persisted input (so the probe and the join share one computation),
-    and returns the broadcast-hinted frame only when it is genuinely
-    bounded; above the cap the frame passes through un-hinted and the
-    planner (plus AQE) picks a shuffle join.
-    """
-    df = df.persist()
-    n = df.limit(max_rows + 1).count()
-    return F.broadcast(df) if n <= max_rows else df
-
-
 def spread_small_scan(df: DataFrame) -> DataFrame:
     """Scale-adaptive parallelism floor for a file-backed frame that
     feeds per-row-expensive work (tokenize/explode chains, Python

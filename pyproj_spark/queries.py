@@ -24,7 +24,6 @@ from pyspark.sql import functions as F
 from pyproj_spark.functions import cells
 from pyproj_spark.functions.transform import haversine_m, transform_xy
 from pyproj_spark.operators.pip import pip_join
-from pyproj_spark.operators.skew import spread_small_scan as _spread
 
 # ---------------------------------------------------------------- helpers
 
@@ -3629,30 +3628,17 @@ QUERIES["window_hll"] = (q_window_hll, _window_hll_sql())
 
 
 def q_bloom_join(spark, sf_dir):
-    """Bloom-pruned join — the sketch applied to join pruning (what
-    Spark's runtime bloom-filter rule does for big joins): lineitem
-    rows pre-filter through a Bloom built from high-value orders
-    BEFORE the exact join. No false negatives means the pruned join
-    returns EXACTLY the plain join's rows — which is precisely what
-    the oracle (a plain SQL join) certifies; the bloom only ever
-    discards rows the join would drop anyway."""
-    from pyproj_spark.operators.sketch import bloom_probe
+    """High-value order lines: lineitem joined to the orders above a
+    price threshold, then per-order line count and revenue. The join
+    is left plain on purpose: the planner broadcasts the small filtered
+    orders side, and its runtime bloom filter prunes lineitem rows
+    when a join is large enough to pay for one."""
     orders = _t(spark, sf_dir, "orders") \
         .filter(F.col("o_totalprice") > 400000) \
         .select("o_orderkey", "o_totalprice")
-    # spread the probe scan: the bloom test is now per-row native
-    # (no probe-side exchange at all), so a single-row-group scan
-    # would run the k md5s for every row on one task
-    li = _spread(_t(spark, sf_dir, "lineitem")
-                 .select("l_orderkey", "l_extendedprice"))
-    probed = bloom_probe(orders.select(F.col("o_orderkey")
-                                       .alias("k")),
-                         li.withColumnRenamed("l_orderkey", "k"),
-                         "k")
-    pruned = probed.filter(F.col("bloom_hit")) \
-        .withColumnRenamed("k", "l_orderkey")
-    return (pruned.join(orders,
-                        pruned["l_orderkey"] == orders["o_orderkey"])
+    li = _t(spark, sf_dir, "lineitem").select("l_orderkey",
+                                              "l_extendedprice")
+    return (li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
             .groupBy("o_orderkey")
             .agg(F.count(F.lit(1)).alias("n_lines"),
                  F.sum(F.round(F.col("l_extendedprice") * 100)
@@ -3930,45 +3916,6 @@ FROM tb GROUP BY 1
 """
 
 QUERIES["funnel"] = (q_funnel, SQL_FUNNEL)
-
-
-def q_retention(spark, sf_dir):
-    """Cohort retention matrix: users are cohorted by the ISO week of
-    their first event; each (cohort_week, week_offset) cell counts
-    users from that cohort active in that later week. Two partial-
-    aggregated groupBys (per-user first event; per (user, week)
-    activity) and one broadcast-size join — no window over the fact
-    table. Weeks are epoch-day/7 buckets so both engines bucket
-    identically (no ISO-calendar edge divergence)."""
-    ev = _t(spark, sf_dir, "events").select("user_id", "ts")
-    week = (F.floor(F.unix_micros(F.col("ts").cast("timestamp"))
-                    / F.lit(604800000000))).alias("week")
-    act = ev.select("user_id", week).distinct()
-    first = act.groupBy("user_id").agg(F.min("week").alias("cohort"))
-    return (act.join(first, "user_id")
-            .select("cohort",
-                    (F.col("week") - F.col("cohort"))
-                    .alias("week_offset"))
-            .groupBy("cohort", "week_offset")
-            .agg(F.count(F.lit(1)).alias("n_users")))
-
-
-SQL_RETENTION = """
-WITH act AS (
-  SELECT DISTINCT user_id,
-         CAST(floor(epoch_us(ts) / 604800000000) AS BIGINT) AS week
-  FROM events
-),
-first AS (
-  SELECT user_id, min(week) AS cohort FROM act GROUP BY user_id
-)
-SELECT f.cohort, a.week - f.cohort AS week_offset,
-       count(*) AS n_users
-FROM act a JOIN first f ON a.user_id = f.user_id
-GROUP BY 1, 2
-"""
-
-QUERIES["retention"] = (q_retention, SQL_RETENTION)
 
 
 def q_skewed_agg(spark, sf_dir):
@@ -4486,6 +4433,25 @@ UNION
 QUERIES["simplify"] = (q_simplify, _simplify_sql())
 
 
+def _mann_kendall_s(ns):
+    """Mann-Kendall S of the count array ``ns``: the sum of
+    sign(n_j - n_i) over index pairs i < j, as a long. Arrays shorter
+    than 2 have no pair and give 0; the guard is in the expression
+    itself, since sequence(0, -1) counts down and would index past a
+    1-element array."""
+    sz = F.size(ns)
+    pair_sign = F.flatten(F.transform(
+        F.sequence(F.lit(0), sz - 2),
+        lambda i: F.transform(
+            F.sequence(i + 1, sz - 1),
+            lambda j: F.signum(F.element_at(ns, (j + 1).cast("int"))
+                               - F.element_at(ns, (i + 1).cast("int")))
+            .cast("long"))))
+    s_col = F.aggregate(pair_sign, F.lit(0).cast("long"),
+                        lambda acc, v: acc + v)
+    return F.when(sz >= 2, s_col).otherwise(F.lit(0).cast("long"))
+
+
 def q_trend_cells(spark, sf_dir):
     """Emerging hot-spot analysis: Mann-Kendall trend test per hex
     cell over its daily event counts (the space-time companion to the
@@ -4511,9 +4477,8 @@ def q_trend_cells(spark, sf_dir):
     # is bounded by the day range, not the corpus — and derive S and
     # the tie terms from array HOFs. Same exact integers: S sums
     # sign(n_j - n_i) over day-ordered pairs, tiesum sums
-    # k(k-1)(2k+5) over per-value counts; cells with a single day
-    # produce S=0 and are dropped by the same t_days >= 2 filter that
-    # dropped them (via the inner join) before.
+    # k(k-1)(2k+5) over per-value counts; cells with a single day are
+    # dropped by the t_days >= 2 filter below.
     g = (t.groupBy("cell")
          .agg(F.array_sort(F.collect_list(F.struct("day", "n")))
               .alias("a"))
@@ -4524,15 +4489,7 @@ def q_trend_cells(spark, sf_dir):
                  .alias("ns")))
     ns = F.col("ns")
     sz = F.size(ns)
-    pair_sign = F.flatten(F.transform(
-        F.sequence(F.lit(0), sz - 2),
-        lambda i: F.transform(
-            F.sequence(i + 1, sz - 1),
-            lambda j: F.signum(F.element_at(ns, (j + 1).cast("int"))
-                               - F.element_at(ns, (i + 1).cast("int")))
-            .cast("long"))))
-    s_col = F.aggregate(pair_sign, F.lit(0).cast("long"),
-                        lambda acc, v: acc + v)
+    s_col = _mann_kendall_s(ns)
     tiesum = F.aggregate(
         F.transform(F.array_distinct(ns), lambda v: F.size(
             F.filter(ns, lambda x: x == v)).cast("long")),
@@ -6380,8 +6337,9 @@ def q_dist_transform(spark, sf_dir):
     scatter-min — each round every labeled cell offers dist+1 to its
     4 neighbors and a groupBy(min) keeps the best. No lattice edge
     table exists anywhere: the neighborhood is generated per round by
-    an explode of 4 literal offsets, so the cost is k scans of the
-    frontier regardless of raster size — the proximity raster
+    an explode of 5 literal offsets (the cell itself and its 4
+    neighbors), so the cost is k scans of the labeled cells regardless
+    of raster size — the proximity raster
     ("distance to nearest road/POI") behind coverage scoring. The
     oracle replays the identical rounds unrolled."""
     pts = _doc_points(spark, sf_dir)
@@ -6395,20 +6353,20 @@ def q_dist_transform(spark, sf_dir):
                  .cast("long"), F.lit(63))
     dist = (pts.select(gx.alias("gx"), gy.alias("gy")).distinct()
             .withColumn("d", F.lit(0)))
-    offs = F.array(F.struct(F.lit(1).alias("ox"), F.lit(0).alias("oy")),
-                   F.struct(F.lit(-1).alias("ox"), F.lit(0).alias("oy")),
-                   F.struct(F.lit(0).alias("ox"), F.lit(1).alias("oy")),
-                   F.struct(F.lit(0).alias("ox"), F.lit(-1).alias("oy")))
+    # (0, 0, +0) keeps each cell's own distance, so a round reads
+    # `dist` once and the plan grows linearly with the rounds
+    offs = F.array(*[F.struct(F.lit(ox).alias("ox"), F.lit(oy).alias("oy"),
+                              F.lit(od).alias("od"))
+                     for ox, oy, od in ((0, 0, 0), (1, 0, 1), (-1, 0, 1),
+                                        (0, 1, 1), (0, -1, 1))])
     for _ in range(6):
-        nbr = (dist.select("gx", "gy", "d", F.explode(offs).alias("k"))
-               .select((F.col("gx") + F.col("k.ox")).alias("gx"),
-                       (F.col("gy") + F.col("k.oy")).alias("gy"),
-                       (F.col("d") + 1).alias("d"))
-               .filter((F.col("gx") >= 0) & (F.col("gx") <= 63)
-                       & (F.col("gy") >= 0) & (F.col("gy") <= 63)))
-        dist = (dist.unionByName(nbr)
-                .groupBy("gx", "gy").agg(F.min("d").alias("d"))
-                .localCheckpoint(eager=False))
+        dist = (dist.select("gx", "gy", "d", F.explode(offs).alias("k"))
+                .select((F.col("gx") + F.col("k.ox")).alias("gx"),
+                        (F.col("gy") + F.col("k.oy")).alias("gy"),
+                        (F.col("d") + F.col("k.od")).alias("d"))
+                .filter((F.col("gx") >= 0) & (F.col("gx") <= 63)
+                        & (F.col("gy") >= 0) & (F.col("gy") <= 63))
+                .groupBy("gx", "gy").agg(F.min("d").alias("d")))
     return dist
 
 

@@ -2705,14 +2705,10 @@ def q_dup_spans(spark, sf_dir):
             lambda p: F.md5(F.concat_ws(
                 " ", F.slice(F.col("tk"), p, _SPAN_N)))))
         .alias("pos", "h"))
-    from pyproj_spark.operators.skew import guarded_broadcast
     dupset = (sh.select("h", "doc_id").distinct()
               .groupBy("h").agg(F.count(F.lit(1)).alias("nd"))
               .filter(F.col("nd") >= 2).select("h"))
-    # the dupset is corpus-sized in the worst case (billions of hashes
-    # at 100x): broadcast only below the row cap, else shuffle join
-    dpos = sh.join(guarded_broadcast(dupset), "h") \
-        .select("doc_id", "n_tokens", "pos")
+    dpos = sh.join(dupset, "h").select("doc_id", "n_tokens", "pos")
     w = Window.partitionBy("doc_id").orderBy("pos")
     spans = (dpos.withColumn(
         "new_span",

@@ -196,3 +196,17 @@ def test_kde_raster_matches_brute_force(spark):
     assert got == brute
     # kernel support: a contributing point is within h of the center
     assert all(s <= n * 16000000 for n, s in got.values())
+
+
+def test_mann_kendall_s_single_day_is_zero(spark):
+    """The Mann-Kendall S expression must give 0 on a 1-element count
+    array by itself, with no t_days filter in front of it to prune
+    the row."""
+    from pyspark.sql import functions as F
+
+    from pyproj_spark.queries import _mann_kendall_s
+    df = spark.createDataFrame([([5],), ([1, 2, 3],), ([3, 1, 1],)],
+                               "ns array<bigint>")
+    got = [r.s for r in df.select(_mann_kendall_s(F.col("ns")).alias("s"))
+           .collect()]
+    assert got == [0, 3, -2]

@@ -160,48 +160,42 @@ def test_knn_hex_joins_on_cell_only(spark):
     assert "CartesianProduct" not in plan
 
 
-def test_site_template_guarded_broadcast(spark):
-    """The per-host template-line set broadcasts into the anti-join
-    while bounded (the sf0.01 set is tiny), but the hint must come from
-    the size guard: forcing the cap to 0 must fall back to a shuffled
-    anti-join instead of shipping an unbounded set to every executor."""
+def test_site_template_broadcast_anti_join(spark):
+    """The per-host template-line set is small at sf0.01, so the
+    planner broadcasts it into the anti-join with no hint."""
     from pyproj_spark.queries_text import q_site_template
     plan = _plan(q_site_template(spark, SF))
     assert "BroadcastHashJoin" in plan
 
-    from pyspark.sql import functions as F
 
-    from pyproj_spark.operators.content import site_template_clean
-    d = (spark.range(40).toDF("doc_id")
-         .withColumn("host", (F.col("doc_id") % 4).cast("string"))
-         .withColumn("text", F.concat(F.lit("nav\nbody "),
-                                      F.col("doc_id").cast("string"),
-                                      F.lit("\nfooter"))))
-    fallback = _plan(site_template_clean(d, broadcast_max_rows=0))
-    assert "BroadcastHashJoin LeftAnti" not in fallback
-
-
-def test_dup_spans_guarded_broadcast(spark):
-    """The duplicated-shingle set joins back broadcast below the size
-    guard's cap — shingle positions must not shuffle on hash — and the
-    guard itself must fall back to a shuffle join above the cap."""
+def test_dup_spans_broadcast_join(spark):
+    """The duplicated-shingle set joins back broadcast with no hint:
+    shingle positions must not shuffle on hash."""
     from pyproj_spark.queries_text import q_dup_spans
     plan = _plan(q_dup_spans(spark, SF))
     assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
 
-    # above the cap the guard must NOT attach the broadcast hint (the
-    # planner may still auto-broadcast a genuinely tiny table from its
-    # size stats — that path is safe; the forced hint is the hazard)
-    from pyproj_spark.operators.skew import guarded_broadcast
 
-    def analyzed(df):
-        return df._jdf.queryExecution().analyzed().toString()
-
-    over_cap = guarded_broadcast(spark.range(10).toDF("h"), max_rows=5)
-    assert "ResolvedHint" not in analyzed(over_cap)
-    under_cap = guarded_broadcast(spark.range(3).toDF("h"), max_rows=5)
-    assert "ResolvedHint" in analyzed(under_cap)
+@pytest.mark.parametrize("name", ["bloom_join", "dist_transform",
+                                  "dup_spans", "site_template"])
+def test_build_fires_no_job_and_caches_nothing(spark, name):
+    """Building these queries is plan construction only: no Spark job
+    (no probe count, no driver-side collect, no checkpoint) and no
+    cache entry left behind for the next build to read."""
+    from pyproj_spark.queries import QUERIES
+    from pyproj_spark.queries_text import QUERIES_TEXT
+    build = {**QUERIES, **QUERIES_TEXT}[name][0]
+    sc = spark.sparkContext
+    spark.catalog.clearCache()
+    group = f"build-only:{name}"
+    sc.setJobGroup(group, f"build {name}")
+    try:
+        build(spark, SF)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_clip_tiles_no_python_udf(spark):

@@ -53,6 +53,16 @@ def test_bloom_no_false_negatives(spark):
     assert members["bloom_hit"].all()
 
 
+def test_bloom_nulls_are_never_members(spark):
+    """A NULL reference value sets no bit, and a NULL probe value is
+    a miss (False, not NULL)."""
+    from pyproj_spark.operators.sketch import bloom_probe
+    ref = spark.createDataFrame([("a",), (None,)], "v string")
+    probe = spark.createDataFrame([("a",), ("b",), (None,)], "v string")
+    got = [tuple(r) for r in bloom_probe(ref, probe, "v").collect()]
+    assert got == [("a", True), ("b", False), (None, False)]
+
+
 def test_bottomk_quantiles_accuracy_and_invariance(spark):
     """Sketch quantiles must land within O(1/sqrt(k)) rank error of
     the exact quantiles and be identical across partitionings
