@@ -15,22 +15,20 @@ FileStatusCache makes: a path's files do not change underneath a
 running session. Test fixtures are immutable, and code that rewrites
 a path mid-session should call ``spark.read.parquet`` directly.
 
-Keyed weakly by session so stopped sessions release their entries.
+The memo lives on the session object itself, so it is freed with the
+session. A module-level dict weakly keyed by session would never
+evict: every memoized DataFrame holds ``df.sparkSession``.
 """
 
 from __future__ import annotations
 
 import os
-import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 
-_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict]" = \
-    weakref.WeakKeyDictionary()
-
 
 def read_parquet_cached(spark: SparkSession, path: str) -> DataFrame:
-    per_session = _CACHE.setdefault(spark, {})
+    per_session = spark.__dict__.setdefault("_parquet_memo", {})
     key = os.path.abspath(path)
     df = per_session.get(key)
     if df is None:

@@ -39,7 +39,7 @@ def hop_distance(edges: DataFrame, seeds, max_hops: int = 6,
     reached and the anti-join keeps later (longer) discoveries out.
     """
     spark = edges.sparkSession
-    rows = _collect_small(edges, [src, dst], SMALL_LIMIT)
+    rows = _collect_small(edges, [src, dst])
     if rows is not None:
         return spark.createDataFrame(
             _hop_distance_py(rows, seeds, max_hops),
@@ -74,7 +74,7 @@ def label_propagation(edges: DataFrame, rounds: int = 3,
     set (no ordering or RNG dependence) — the property the DuckDB
     oracle relies on to replay the identical rounds.
     """
-    rows = _collect_small(edges, [src, dst], SMALL_LIMIT)
+    rows = _collect_small(edges, [src, dst])
     if rows is not None:
         return edges.sparkSession.createDataFrame(
             _label_propagation_py(rows, rounds), "node long, label long")
@@ -112,7 +112,7 @@ def shortest_paths(edges: DataFrame, seeds, rounds: int = 6,
     data-dependent convergence check in the hot path). Integer
     weights keep every distance an exact long."""
     spark = edges.sparkSession
-    rows = _collect_small(edges, [src, dst, weight], SMALL_LIMIT)
+    rows = _collect_small(edges, [src, dst, weight])
     if rows is not None:
         return spark.createDataFrame(
             _shortest_paths_py(rows, seeds, rounds), "node long, d long")
@@ -133,24 +133,25 @@ def shortest_paths(edges: DataFrame, seeds, rounds: int = 6,
 
 # ------------------------------------------------ small-graph cutover
 
-#: default edge-count threshold below which the iterative loops run
-#: driver-side (the GraphFrames-style cutover operators/cc.py:107 uses:
-#: every synchronous round costs a fixed ~0.5-1 s of tiny-job
-#: scheduling, so a 10^2-node graph pays seconds of driver rounds for
-#: microseconds of work — kcore measured 9.8 s -> <2 s at sf0.01).
-#: Outputs are identical by construction: the python replay runs the
-#: SAME bounded synchronous rounds with the same integer semantics.
+#: edge count at or below which every link-graph loop (this module,
+#: cc, pagerank, redirects) runs driver-side: each synchronous round
+#: costs a fixed ~0.5-1 s of tiny-job scheduling, so a 10^2-node graph
+#: pays seconds of driver rounds for microseconds of work (kcore
+#: measured 9.8 s -> <2 s at sf0.01). Outputs are identical by
+#: construction: the python replay runs the SAME bounded synchronous
+#: rounds with the same integer semantics. Read at call time, so
+#: setting it to 0 forces the distributed loops.
 SMALL_LIMIT = 200_000
 
 
-def _collect_small(edges: DataFrame, cols, limit: int):
+def _collect_small(edges: DataFrame, cols):
     """The collected edge list if the graph is small, else None. One
-    bounded probe: limit+1 rows via take(), never a full count of an
-    unbounded edge set."""
-    if limit <= 0:
+    bounded probe: SMALL_LIMIT+1 rows via take(), never a full count
+    of an unbounded edge set."""
+    if SMALL_LIMIT <= 0:
         return None
-    rows = edges.select(*cols).take(limit + 1)
-    return None if len(rows) > limit else rows
+    rows = edges.select(*cols).take(SMALL_LIMIT + 1)
+    return None if len(rows) > SMALL_LIMIT else rows
 
 
 def _hop_distance_py(rows, seeds, max_hops):
@@ -206,15 +207,14 @@ def _shortest_paths_py(rows, seeds, rounds):
 
 
 def kcore_survivors(und: DataFrame, k: int = 3, rounds: int = 6,
-                    src: str = "src", dst: str = "dst",
-                    small_limit: int = SMALL_LIMIT) -> DataFrame:
+                    src: str = "src", dst: str = "dst") -> DataFrame:
     """(node, deg) of the k-core approximation after ``rounds``
     synchronous peeling rounds over an UNDIRECTED edge table (both
     directions present): each round drops nodes whose degree among
     survivors is < k, then reports surviving degrees. Bounded rounds
     keep the plan replayable; the small-graph path collects the edges
     once and peels driver-side (identical rounds)."""
-    rows = _collect_small(und, [src, dst], small_limit)
+    rows = _collect_small(und, [src, dst])
     if rows is not None:
         adj: dict = {}
         for r in rows:
@@ -253,7 +253,7 @@ def temporal_reach(edges: DataFrame, seeds, rounds: int = 6,
     decrease. Seeds start at arrival -1 (before all edges). Same
     small-graph driver cutover as the other bounded loops."""
     spark = edges.sparkSession
-    rows = _collect_small(edges, [src, dst, t], SMALL_LIMIT)
+    rows = _collect_small(edges, [src, dst, t])
     if rows is not None:
         adj: dict = {}
         for r in rows:

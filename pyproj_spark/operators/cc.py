@@ -19,9 +19,10 @@ component's minimum vertex id (the deterministic canonical label).
 Convergence is detected by a signature (count + two independent
 sums-of-hash) of the canonicalized edge set — one tiny aggregate per
 round, the only driver-side probe a fixpoint algorithm cannot avoid.
-Each round ends in a LAZY localCheckpoint whose materialization is the
-signature scan itself: one pass per round, no lineage recomputation,
-no separate eager materialization pass.
+Each round ends in a localCheckpoint(eager=False): under AQE, building
+it already runs the round's shuffle map stages, and the signature scan
+persists the result — one pass per round, no lineage recomputation,
+no separate full materialization pass.
 
 Scale notes (100 TB): both stars are a groupBy + equi-join + distinct on
 the CURRENT edge set; edges strictly contract toward |V| star edges, so
@@ -37,6 +38,8 @@ import warnings
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from pyproj_spark.operators.bfs import _collect_small
 
 
 def _canon(e: DataFrame) -> DataFrame:
@@ -91,7 +94,7 @@ def _signature(e: DataFrame) -> tuple:
     return (row["n"], row["h1"], row["h2"])
 
 
-def _driver_components(raw: DataFrame, verts: DataFrame) -> DataFrame:
+def _driver_components(spark, rows, vtype) -> DataFrame:
     """Union-find with min-root tracking over a collected small edge
     set; returns the same (id, rep) table as the distributed loop."""
     parent: dict = {}
@@ -104,24 +107,21 @@ def _driver_components(raw: DataFrame, verts: DataFrame) -> DataFrame:
             parent[x], x = r, parent[x]
         return r
 
-    for row in raw.collect():
-        a, b = find(row.src), find(row.dst)
+    for src, dst in rows:
+        a, b = find(src), find(dst)
         if a != b:
             lo, hi = (a, b) if a < b else (b, a)
             parent[hi] = lo  # min vertex stays the root
     from pyspark.sql.types import StructField, StructType
-    spark = raw.sparkSession
-    vtype = verts.schema.fields[0].dataType
-    vs = [r.id for r in verts.collect()]
-    out = [(v, find(v)) for v in vs]
+    verts = dict.fromkeys(v for r in rows for v in r)
     return spark.createDataFrame(
-        out, StructType([StructField("id", vtype),
-                         StructField("rep", vtype)]))
+        [(v, find(v)) for v in verts],
+        StructType([StructField("id", vtype), StructField("rep", vtype)]))
 
 
 def connected_components(edges: DataFrame, a_col: str = "id_a",
-                         b_col: str = "id_b", max_iter: int = 30,
-                         small_limit: int = 200_000) -> DataFrame:
+                         b_col: str = "id_b", max_iter: int = 30
+                         ) -> DataFrame:
     """(id, rep) for every vertex in `edges`: rep = min vertex id in
     the vertex's connected component (deterministic canonical label).
 
@@ -131,39 +131,37 @@ def connected_components(edges: DataFrame, a_col: str = "id_a",
     (possibly unconverged) labels are returned rather than silently
     treated as final truth.
 
-    small_limit: edge sets at or below this size skip the distributed
-    loop for a driver-side union-find (the GraphFrames-style cutover:
-    each alternation round costs a fixed ~0.5-1 s of tiny-job
-    scheduling, so a 10^3-edge graph pays seconds of driver rounds
-    for microseconds of actual work — measured 8.0 s -> ~2 s on the
-    grid-DBSCAN core-cell graph). Labels are identical by
-    construction (min vertex per component). Pass 0 to force the
-    distributed path.
+    Edge sets at or below ``bfs.SMALL_LIMIT`` skip the distributed
+    loop for a driver-side union-find (the shared link-graph cutover:
+    measured 8.0 s -> ~2 s on the grid-DBSCAN core-cell graph).
+    Labels are identical by construction (min vertex per component).
     """
-    # checkpoint the raw pair stream ONCE (lazily — the count/first
-    # signature scan materializes it): every later consumer (round 1,
-    # the final vertex join) reuses the persisted blocks instead of
-    # re-executing the potentially expensive pair-producing lineage,
-    # e.g. the whole minhash pipeline (measured 29s -> ~6s at sf0.1)
+    # checkpoint the raw pair stream ONCE: every later consumer (the
+    # small-graph probe, round 1, the final vertex join) reuses the
+    # persisted blocks instead of re-executing the potentially
+    # expensive pair-producing lineage, e.g. the whole minhash
+    # pipeline (measured 29s -> ~6s at sf0.1). Not lazy when the
+    # lineage ends in a shuffle: under AQE, building the checkpointed
+    # frame already runs that shuffle's map stage.
     raw = (edges.select(F.col(a_col).alias("src"),
                         F.col(b_col).alias("dst"))
            .localCheckpoint(eager=False))
     verts = (raw.select(F.col("src").alias("id"))
              .unionByName(raw.select(F.col("dst").alias("id")))
              .distinct())
-    if small_limit:
-        # count() doubles as the checkpoint materialization the
-        # signature scan would otherwise pay
-        if raw.count() <= small_limit:
-            return _driver_components(raw, verts)
+    rows = _collect_small(raw, ["src", "dst"])
+    if rows is not None:
+        return _driver_components(raw.sparkSession, rows,
+                                  verts.schema["id"].dataType)
     e = _canon(raw).distinct().localCheckpoint(eager=False)
     sig = _signature(e)
     converged = False
     for i in range(max_iter):
-        # lazy checkpoint + the signature action = ONE materialization
-        # per round: the signature scan persists the round's edge set,
-        # and the next round (and the final star extraction) reuse the
-        # persisted blocks instead of recomputing prior rounds' lineage
+        # checkpoint + the signature action = ONE pass per round: the
+        # round's shuffles run when the frame is built (AQE), the
+        # signature scan persists its output, and the next round (and
+        # the final star extraction) reuse the persisted blocks instead
+        # of recomputing prior rounds' lineage
         e = _small_star(_large_star(e)).localCheckpoint(eager=False)
         new_sig = _signature(e)
         if new_sig == sig:

@@ -30,13 +30,13 @@ def pack_sequences(df: DataFrame, id_col: str = "doc_id",
     d = df.filter(F.col(tokens_col) > 0)
     # phase 1: range-partition on the order key (partition p holds
     # strictly smaller ids than p+1) and cumsum within each partition.
-    # Persist so the sampled range boundaries are computed ONCE — the
-    # totals pass and the main pass must see identical partitioning.
+    # Checkpoint so the sampled range boundaries are computed ONCE —
+    # the totals pass and the main pass must see identical partitioning.
     npart = int(d.sparkSession.conf.get("spark.sql.shuffle.partitions",
                                         "32"))
     d = (d.repartitionByRange(npart, F.col(id_col))
          .withColumn("_pid", F.spark_partition_id())
-         .persist())
+         .localCheckpoint(eager=False))
     w_in = Window.partitionBy("_pid").orderBy(id_col) \
         .rowsBetween(Window.unboundedPreceding, -1)
     # phase 2: cross-partition offsets — P rows, broadcast back

@@ -18,30 +18,54 @@ small-graph driver path) replay the unrolled iterations bit-for-bit.
 The iteration count is fixed by the caller — convergence-based
 stopping belongs to the driver loop, exactly like kmeans_fit.
 
-Small-graph cutover (same design as operators/cc.py): at or below
-``small_limit`` edges the loop runs driver-side in numpy with the
-IDENTICAL integer-unit arithmetic — a 100-host gate graph pays ~10
-Spark jobs of pure scheduling overhead per iteration otherwise. The
-distributed loop is untouched above the limit.
+Small-graph cutover (the one shared by every link-graph operator,
+``bfs._collect_small``): at or below ``bfs.SMALL_LIMIT`` edges the
+loop runs driver-side in numpy with the IDENTICAL integer-unit
+arithmetic — a 100-host gate graph pays ~10 Spark jobs of pure
+scheduling overhead per iteration otherwise. The distributed loop is
+untouched above the limit.
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from pyproj_spark.operators.bfs import _collect_small
+
+
+def _small_edges(e: DataFrame):
+    """The collected (src, dst) rows of the deduped edge list when its
+    ids are integral (the numpy replays index int64 arrays) and it is
+    at or below the cutover size; else None."""
+    integral = all(f.dataType.typeName() in
+                   ("long", "integer", "short", "byte")
+                   for f in e.schema.fields)
+    return _collect_small(e, e.columns) if integral else None
+
+
+def _node_table(e: DataFrame, src: str, dst: str) -> DataFrame:
+    """Every endpoint once, materialized: the distributed loops join
+    it on every iteration."""
+    return (e.select(F.col(src).alias("node"))
+            .unionByName(e.select(F.col(dst).alias("node")))
+            .distinct().localCheckpoint())
+
+
+def _index(edge_rows):
+    """(nodes, si, di): the sorted distinct node ids and each edge's
+    source/destination position in them."""
+    es = np.array([r[0] for r in edge_rows], dtype=np.int64)
+    ed = np.array([r[1] for r in edge_rows], dtype=np.int64)
+    nodes = np.unique(np.concatenate([es, ed]))
+    return nodes, np.searchsorted(nodes, es), np.searchsorted(nodes, ed)
 
 
 def _pagerank_small(spark, edge_rows, iters, damping, round_to, seeds):
     """Driver replay of the distributed loop: identical integer-unit
     sums and HALF_UP rounding, same (node, rank) output."""
-    import numpy as np
-
-    es = np.array([r[0] for r in edge_rows], dtype=np.int64)
-    ed = np.array([r[1] for r in edge_rows], dtype=np.int64)
-    nodes = np.unique(np.concatenate([es, ed]))
-    idx = {int(v): i for i, v in enumerate(nodes)}
-    si = np.array([idx[int(v)] for v in es])
-    di = np.array([idx[int(v)] for v in ed])
+    nodes, si, di = _index(edge_rows)
     n = len(nodes)
     deg = np.bincount(si, minlength=n)
     has_out = deg > 0
@@ -72,18 +96,14 @@ def _pagerank_small(spark, edge_rows, iters, damping, round_to, seeds):
         tel = np.where(is_seed, base, 0.0)
         rank = rnd(tel + damping * (in_c.astype(np.float64) / 1e12),
                    round_to)
-    out = [(int(v), float(r)) for v, r in zip(nodes, rank)]
-    from pyspark.sql.types import (DoubleType, LongType, StructField,
-                                   StructType)
     return spark.createDataFrame(
-        out, StructType([StructField("node", LongType()),
-                         StructField("rank", DoubleType())]))
+        [(int(v), float(r)) for v, r in zip(nodes, rank)],
+        "node long, rank double")
 
 
 def pagerank(edges: DataFrame, iters: int = 3, damping: float = 0.85,
              src: str = "src", dst: str = "dst",
-             round_to: int = 9, seeds: list | None = None,
-             small_limit: int = 200_000) -> DataFrame:
+             round_to: int = 9, seeds: list | None = None) -> DataFrame:
     """(node, rank) after ``iters`` iterations over the directed edge
     list. Nodes = union of srcs and dsts; parallel edges count once
     (dedup), uniform init 1/N.
@@ -94,16 +114,13 @@ def pagerank(edges: DataFrame, iters: int = 3, damping: float = 0.85,
     the same distribution or mass leaks off the seed topic) becomes
     uniform over the seed set instead of all nodes — random walk with
     restart from the seeds, the relevance-to-topic score."""
-    e = edges.select(src, dst).distinct().cache()
-    integral = all(f.dataType.typeName() in
-                   ("long", "integer", "short", "byte")
-                   for f in e.schema.fields)
-    if integral and e.count() <= small_limit:
-        return _pagerank_small(edges.sparkSession, e.collect(), iters,
+    e = edges.select(src, dst).distinct()
+    rows = _small_edges(e)
+    if rows is not None:
+        return _pagerank_small(edges.sparkSession, rows, iters,
                                damping, round_to, seeds)
-    nodes = (e.select(F.col(src).alias("node"))
-             .unionByName(e.select(F.col(dst).alias("node")))
-             .distinct().cache())
+    e = e.localCheckpoint()
+    nodes = _node_table(e, src, dst)
     n = nodes.count()
     outdeg = e.groupBy(src).agg(F.count(F.lit(1)).alias("deg"))
     src_nodes = outdeg.select(F.col(src).alias("node"))
@@ -148,21 +165,18 @@ def pagerank(edges: DataFrame, iters: int = 3, damping: float = 0.85,
     return ranks
 
 
-def _hits_small(spark, edge_rows, iters, round_to):
-    """Driver replay of the HITS loop — trivially exact: contribution
-    sums are integer micro-units on both paths."""
-    import numpy as np
-
-    es = np.array([r[0] for r in edge_rows], dtype=np.int64)
-    ed = np.array([r[1] for r in edge_rows], dtype=np.int64)
-    nodes = np.unique(np.concatenate([es, ed]))
-    idx = {int(v): i for i, v in enumerate(nodes)}
-    si = np.array([idx[int(v)] for v in es])
-    di = np.array([idx[int(v)] for v in ed])
+def _hub_auth_small(spark, edge_rows, iters, round_to, walk):
+    """Driver replay of the hub/authority loop: identical integer-unit
+    sums as the distributed path."""
+    nodes, si, di = _index(edge_rows)
     n = len(nodes)
+    # x / 1.0 == x exactly, so HITS is the walk with unit degrees
+    odeg = np.maximum(np.bincount(si, minlength=n), 1) if walk else 1.0
+    ideg = np.maximum(np.bincount(di, minlength=n), 1) if walk else 1.0
 
-    def prop(scores, from_idx, to_idx):
-        cm = np.floor(scores[from_idx] * 1e12 + 0.5).astype(np.int64)
+    def prop(scores, from_idx, to_idx, deg):
+        w = scores / deg
+        cm = np.floor(w[from_idx] * 1e12 + 0.5).astype(np.int64)
         sm = np.zeros(n, dtype=np.int64)
         np.add.at(sm, to_idx, cm)
         norm = int(sm.sum())
@@ -173,53 +187,41 @@ def _hits_small(spark, edge_rows, iters, round_to):
     h = np.ones(n)
     a = None
     for _ in range(iters):
-        a = prop(h, si, di)
-        h = prop(a, di, si)
-    out = [(int(v), float(hh), float(aa))
-           for v, hh, aa in zip(nodes, h, a)]
-    from pyspark.sql.types import (DoubleType, LongType, StructField,
-                                   StructType)
+        a = prop(h, si, di, odeg)
+        h = prop(a, di, si, ideg)
     return spark.createDataFrame(
-        out, StructType([StructField("node", LongType()),
-                         StructField("hub", DoubleType()),
-                         StructField("auth", DoubleType())]))
+        [(int(v), float(hh), float(aa)) for v, hh, aa in zip(nodes, h, a)],
+        "node long, hub double, auth double")
 
 
-def hits(edges: DataFrame, iters: int = 2, src: str = "src",
-         dst: str = "dst", round_to: int = 9,
-         small_limit: int = 200_000) -> DataFrame:
-    """HITS hubs & authorities (Kleinberg, "Authoritative sources in a
-    hyperlinked environment", JACM 1999 — public): the OTHER classic
-    web-graph score, mutually reinforcing — a page is a good authority
-    if good hubs link to it, a good hub if it links to good
-    authorities. Complements PageRank on the same host graph (HITS
-    separates directories/link pages from destination pages, which
-    PageRank's single score conflates).
-
-    Determinism is STRICTER than the pagerank loop: each propagation
-    sums CAST(round(score * 1e12) AS BIGINT) contributions — exact
+def _hub_auth(edges, iters, src, dst, round_to, walk) -> DataFrame:
+    """(node, hub, auth) by mutually reinforcing propagation; ``walk``
+    divides each contribution by the sender's degree (SALSA), without
+    it every degree is 1 (HITS). Each propagation sums
+    CAST(round(score[/deg] * 1e12) AS BIGINT) contributions — exact
     longs, associative, so distributed aggregation order cannot leak —
-    and L1 normalization divides the two exact longs (score_sum /
-    norm_sum as one double division) before the per-iteration
-    rounding. Returns (node, hub, auth)."""
-    e = edges.select(src, dst).distinct().cache()
-    integral = all(f.dataType.typeName() in
-                   ("long", "integer", "short", "byte")
-                   for f in e.schema.fields)
-    if integral and e.count() <= small_limit:
-        return _hits_small(edges.sparkSession, e.collect(), iters,
-                           round_to)
-    nodes = (e.select(F.col(src).alias("node"))
-             .unionByName(e.select(F.col(dst).alias("node")))
-             .distinct().cache())
+    and L1 normalization divides the two exact longs before the
+    per-iteration rounding."""
+    e = edges.select(src, dst).distinct()
+    rows = _small_edges(e)
+    if rows is not None:
+        return _hub_auth_small(edges.sparkSession, rows, iters,
+                               round_to, walk)
+    e = e.localCheckpoint()
+    nodes = _node_table(e, src, dst)
     h = nodes.select("node", F.lit(1.0).alias("hub"))
     a = None
 
     def propagate(scores, score_col, key_in, key_out, out_col):
-        cm = (e.join(scores.withColumnRenamed("node", key_in), key_in)
-              .select(F.col(key_out).alias("node"),
-                      F.round(F.col(score_col) * 1e12).cast("long")
-                      .alias("cm"))
+        sent = e.join(scores.withColumnRenamed("node", key_in), key_in)
+        w = F.col(score_col)
+        if walk:
+            sent = sent.join(
+                e.groupBy(key_in).agg(F.count(F.lit(1)).alias("deg")),
+                key_in)
+            w = w / F.col("deg")
+        cm = (sent.select(F.col(key_out).alias("node"),
+                          F.round(w * 1e12).cast("long").alias("cm"))
               .groupBy("node").agg(F.sum("cm").alias("sm")))
         norm = cm.agg(F.sum("sm")).first()[0]
         return (nodes.join(cm, "node", "left")
@@ -235,94 +237,31 @@ def hits(edges: DataFrame, iters: int = 2, src: str = "src",
     return h.join(a, "node").select("node", "hub", "auth")
 
 
-def _salsa_small(spark, edge_rows, iters, round_to):
-    """Driver replay of the SALSA loop — identical integer-unit sums
-    as the distributed path."""
-    import numpy as np
-
-    es = np.array([r[0] for r in edge_rows], dtype=np.int64)
-    ed = np.array([r[1] for r in edge_rows], dtype=np.int64)
-    nodes = np.unique(np.concatenate([es, ed]))
-    idx = {int(v): i for i, v in enumerate(nodes)}
-    si = np.array([idx[int(v)] for v in es])
-    di = np.array([idx[int(v)] for v in ed])
-    n = len(nodes)
-    outdeg = np.bincount(si, minlength=n)
-    indeg = np.bincount(di, minlength=n)
-
-    def prop(scores, from_idx, to_idx, deg):
-        w = scores / np.maximum(deg, 1)
-        cm = np.floor(w[from_idx] * 1e12 + 0.5).astype(np.int64)
-        sm = np.zeros(n, dtype=np.int64)
-        np.add.at(sm, to_idx, cm)
-        norm = int(sm.sum())
-        s = 10.0 ** round_to
-        return np.floor(sm.astype(np.float64) / float(norm) * s
-                        + 0.5) / s
-
-    h = np.ones(n)
-    a = None
-    for _ in range(iters):
-        a = prop(h, si, di, outdeg)
-        h = prop(a, di, si, indeg)
-    out = [(int(v), float(hh), float(aa))
-           for v, hh, aa in zip(nodes, h, a)]
-    from pyspark.sql.types import (DoubleType, LongType, StructField,
-                                   StructType)
-    return spark.createDataFrame(
-        out, StructType([StructField("node", LongType()),
-                         StructField("hub", DoubleType()),
-                         StructField("auth", DoubleType())]))
+def hits(edges: DataFrame, iters: int = 2, src: str = "src",
+         dst: str = "dst", round_to: int = 9) -> DataFrame:
+    """HITS hubs & authorities (Kleinberg, "Authoritative sources in a
+    hyperlinked environment", JACM 1999 — public): the OTHER classic
+    web-graph score, mutually reinforcing — a page is a good authority
+    if good hubs link to it, a good hub if it links to good
+    authorities. Complements PageRank on the same host graph (HITS
+    separates directories/link pages from destination pages, which
+    PageRank's single score conflates). Determinism is STRICTER than
+    the pagerank loop (see _hub_auth). Returns (node, hub, auth)."""
+    return _hub_auth(edges, iters, src, dst, round_to, walk=False)
 
 
 def salsa(edges: DataFrame, iters: int = 2, src: str = "src",
-          dst: str = "dst", round_to: int = 9,
-          small_limit: int = 200_000) -> DataFrame:
+          dst: str = "dst", round_to: int = 9) -> DataFrame:
     """SALSA (Lempel & Moran, "The stochastic approach for
     link-structure analysis", WWW 2000 — public): HITS with
     degree-normalized propagation — each step is a random-walk step on
     the bipartite hub/authority graph (a(j) = SUM h(i)/outdeg(i) over
     in-links, h(i) = SUM a(j)/indeg(j) over out-links), which removes
     HITS' TKC bias (tightly-knit communities absorbing all the score
-    mass). Same determinism contract as hits(): per-edge contributions
-    are CAST(round(score/deg * 1e12) AS BIGINT) exact longs, L1
-    normalization divides two exact longs, per-iteration rounding to
-    round_to dp so a SQL oracle replays the unrolled loop
+    mass). Same determinism contract as hits(), per-iteration rounding
+    to round_to dp so a SQL oracle replays the unrolled loop
     bit-for-bit. Returns (node, hub, auth)."""
-    e = edges.select(src, dst).distinct().cache()
-    integral = all(f.dataType.typeName() in
-                   ("long", "integer", "short", "byte")
-                   for f in e.schema.fields)
-    if integral and e.count() <= small_limit:
-        return _salsa_small(edges.sparkSession, e.collect(), iters,
-                            round_to)
-    nodes = (e.select(F.col(src).alias("node"))
-             .unionByName(e.select(F.col(dst).alias("node")))
-             .distinct().cache())
-    odeg = e.groupBy(src).agg(F.count(F.lit(1)).alias("deg"))
-    ideg = e.groupBy(dst).agg(F.count(F.lit(1)).alias("deg"))
-    h = nodes.select("node", F.lit(1.0).alias("hub"))
-    a = None
-
-    def propagate(scores, score_col, key_in, key_out, out_col, deg):
-        cm = (e.join(scores.withColumnRenamed("node", key_in), key_in)
-              .join(deg, key_in)
-              .select(F.col(key_out).alias("node"),
-                      F.round(F.col(score_col) / F.col("deg") * 1e12)
-                      .cast("long").alias("cm"))
-              .groupBy("node").agg(F.sum("cm").alias("sm")))
-        norm = cm.agg(F.sum("sm")).first()[0]
-        return (nodes.join(cm, "node", "left")
-                .select("node",
-                        F.round(F.coalesce(F.col("sm"), F.lit(0))
-                                .cast("double") / F.lit(float(norm)),
-                                round_to).alias(out_col))
-                .localCheckpoint(eager=False))
-
-    for _ in range(iters):
-        a = propagate(h, "hub", src, dst, "auth", odeg)
-        h = propagate(a, "auth", dst, src, "hub", ideg)
-    return h.join(a, "node").select("node", "hub", "auth")
+    return _hub_auth(edges, iters, src, dst, round_to, walk=True)
 
 
 def triangle_counts(edges: DataFrame, src: str = "src",

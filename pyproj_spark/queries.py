@@ -10679,6 +10679,7 @@ def q_pca_power(spark, sf_dir):
         v_u = [int(math.copysign(
             math.floor(abs(float(x) / float(m) * 1e6) + 0.5), x))
             for x in wv]
+    e.unpersist()
     out = [(p, v_u[p]) for p in range(64)]
     return spark.createDataFrame(out, "pos long, loading_micro long")
 
@@ -11001,7 +11002,8 @@ def q_geo_median(spark, sf_dir):
     hy = F.conv(F.substring(F.md5(F.concat(F.lit("y"), i)), 1, 8),
                 16, 10).cast("long")
     pt = d.select((hx % 360000 - 180000).alias("x_m"),
-                  (hy % 170000 - 85000).alias("y_m")).cache()
+                  (hy % 170000 - 85000).alias("y_m")) \
+        .localCheckpoint(eager=False)
     c = pt.agg(F.floor(F.sum("x_m") / F.count(F.lit(1)))
                .cast("long").alias("cx"),
                F.floor(F.sum("y_m") / F.count(F.lit(1)))

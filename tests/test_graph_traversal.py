@@ -1,5 +1,6 @@
 """BFS hop distance + label propagation (operators/bfs.py)."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from pyproj_spark.operators.bfs import hop_distance, label_propagation
@@ -112,3 +113,70 @@ def test_bellman_ford_bounded_rounds_contract(spark):
     got = {r["node"]: r["d"]
            for r in shortest_paths(e, seeds=[0], rounds=3).collect()}
     assert got == {0: 0, 1: 1, 2: 2, 3: 3}  # nodes 4,5 not yet reached
+
+
+# every link-graph loop, driven on one small graph: a chain with
+# shortcuts, a 3-cycle, a 4-clique (kcore survivors, redirect cycles)
+# and a non-functional redirect source (0 -> 1 and 0 -> 3)
+_PAIRS = ([(i, i + 1) for i in range(6)] + [(0, 3), (2, 5)]
+          + [(10, 11), (11, 12), (12, 10)]
+          + [(a, b) for a in range(20, 24) for b in range(20, 24)
+             if a != b]
+          + [(30, 31)])
+
+
+def _undirected(e):
+    return (e.select("src", "dst")
+            .union(e.select(F.col("dst").alias("src"),
+                            F.col("src").alias("dst")))
+            .distinct())
+
+
+def _loops():
+    from pyproj_spark.operators import bfs, cc, pagerank, redirects
+    return {
+        "hop_distance": lambda e: bfs.hop_distance(e, [0, 10], 4),
+        "label_propagation": lambda e: bfs.label_propagation(e, 3),
+        "shortest_paths": lambda e: bfs.shortest_paths(e, [0], 4),
+        "kcore_survivors":
+            lambda e: bfs.kcore_survivors(_undirected(e), k=2, rounds=3),
+        "temporal_reach": lambda e: bfs.temporal_reach(e, [0], 4),
+        "resolve_redirects":
+            lambda e: redirects.resolve_redirects(e, max_hops=4),
+        "resolve_with_distance":
+            lambda e: redirects.resolve_with_distance(e, max_hops=8),
+        "connected_components":
+            lambda e: cc.connected_components(e, "src", "dst"),
+        "pagerank": lambda e: pagerank.pagerank(e, iters=3),
+        "hits": lambda e: pagerank.hits(e, iters=2),
+        "salsa": lambda e: pagerank.salsa(e, iters=2),
+    }
+
+
+@pytest.mark.parametrize("name", sorted(_loops()))
+def test_distributed_loop_matches_driver_replay(spark, monkeypatch,
+                                                 name):
+    """SMALL_LIMIT = 0 forces every operator onto its distributed loop,
+    whose output must equal the driver replay's on the same graph."""
+    from pyproj_spark.operators import bfs
+    run = _loops()[name]
+    e = spark.createDataFrame(
+        [(a, b, (7 * a + b) % 5 + 1, (a + 2 * b) % 9) for a, b in _PAIRS],
+        "src long, dst long, w long, t long")
+
+    def collect(tag):
+        # the rounds of a distributed loop fire far more jobs than the
+        # driver path's probe + collect
+        sc, group = spark.sparkContext, f"{name}:{tag}"
+        sc.setJobGroup(group, group)
+        try:
+            rows = sorted(map(tuple, run(e).collect()))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group)), rows
+
+    driver_jobs, driver = collect("driver")
+    monkeypatch.setattr(bfs, "SMALL_LIMIT", 0)
+    dist_jobs, dist = collect("distributed")
+    assert dist_jobs > driver_jobs
+    assert driver and dist == driver

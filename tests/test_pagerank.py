@@ -103,11 +103,12 @@ def test_personalized_pagerank_localizes_to_seeds(spark):
     assert abs(glob.loc[[1, 2, 3]].sum() - 0.5) < 1e-6
 
 
-def test_small_graph_cutover_matches_distributed(spark):
+def test_small_graph_cutover_matches_distributed(spark, monkeypatch):
     """The driver replay (integer-unit sums) and the distributed loop
     must agree bit-for-bit — on the gate-shaped host graph, with and
     without seeds, and for HITS."""
     import pyspark.sql.functions as F
+    from pyproj_spark.operators import bfs
     from pyproj_spark.operators.pagerank import hits, pagerank
     edges = (spark.range(0, 3000)
              .select((F.col("id") % 97).alias("src"),
@@ -119,13 +120,16 @@ def test_small_graph_cutover_matches_distributed(spark):
         return (df.toPandas().sort_values("node")
                 .reset_index(drop=True))
 
+    def both(run):
+        fast = pdsort(run())
+        with monkeypatch.context() as m:
+            m.setattr(bfs, "SMALL_LIMIT", 0)
+            return fast, pdsort(run())
+
     for seeds in (None, [0, 7, 13]):
-        fast = pdsort(pagerank(edges, iters=3, seeds=seeds))
-        slow = pdsort(pagerank(edges, iters=3, seeds=seeds,
-                               small_limit=0))
+        fast, slow = both(lambda: pagerank(edges, iters=3, seeds=seeds))
         assert fast.equals(slow), seeds
-    fast = pdsort(hits(edges, iters=2))
-    slow = pdsort(hits(edges, iters=2, small_limit=0))
+    fast, slow = both(lambda: hits(edges, iters=2))
     assert fast.equals(slow)
 
 
@@ -154,12 +158,13 @@ def test_redirect_resolution(spark):
     assert out2[1] == 4  # 1 -> min(3,9)=3 -> 4
 
 
-def test_salsa_cutover_and_degree_normalization(spark):
+def test_salsa_cutover_and_degree_normalization(spark, monkeypatch):
     """SALSA: driver replay == distributed loop bit-for-bit, scores
     are L1-normalized, and the degree normalization shows: on a star
     where one hub links to k leaves plus a 2-cycle elsewhere, SALSA
     authority mass per leaf equals the 1/outdeg-weighted walk."""
     import pyspark.sql.functions as F
+    from pyproj_spark.operators import bfs
     from pyproj_spark.operators.pagerank import salsa
     edges = (spark.range(0, 3000)
              .select((F.col("id") % 97).alias("src"),
@@ -172,7 +177,9 @@ def test_salsa_cutover_and_degree_normalization(spark):
                 .reset_index(drop=True))
 
     fast = pdsort(salsa(edges, iters=2))
-    slow = pdsort(salsa(edges, iters=2, small_limit=0))
+    with monkeypatch.context() as m:
+        m.setattr(bfs, "SMALL_LIMIT", 0)
+        slow = pdsort(salsa(edges, iters=2))
     assert fast.equals(slow)
     assert abs(fast.hub.sum() - 1.0) < 1e-6
     assert abs(fast.auth.sum() - 1.0) < 1e-6

@@ -198,6 +198,20 @@ def test_build_fires_no_job_and_caches_nothing(spark, name):
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
+@pytest.mark.parametrize("name", [
+    "pagerank", "ppr", "hits", "salsa", "redirect_chains", "watershed",
+    "flow_length", "pca_power", "geo_median", "pack_sequences"])
+def test_build_leaves_no_cached_relation(spark, name):
+    """Builds that run driver-side passes (small-graph probes, power
+    and Weiszfeld iterations, packing's range boundaries) may fire
+    jobs, but must leave nothing in the session's CacheManager."""
+    from pyproj_spark.queries import QUERIES
+    from pyproj_spark.queries_text import QUERIES_TEXT
+    spark.catalog.clearCache()
+    {**QUERIES, **QUERIES_TEXT}[name][0](spark, SF)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_clip_tiles_no_python_udf(spark):
     """Polygon clipping stays entirely inside Catalyst expressions —
     no Python evaluation node anywhere in the plan."""
@@ -286,12 +300,27 @@ def test_rasterize_and_contours_native(spark):
         assert "CartesianProduct" not in plan
 
 
-def test_traversal_rounds_have_no_cartesian(spark):
-    """BFS / LPA / Bellman-Ford rounds must stay equi-joins."""
+def test_traversal_rounds_have_no_cartesian(spark, monkeypatch):
+    """BFS / LPA / Bellman-Ford rounds must stay equi-joins. Checked on
+    the distributed loops (the driver cutover plans a local scan), one
+    plan per round: each round ends in a checkpoint, which hides its
+    joins from the final plan."""
+    from pyproj_spark.operators import bfs
     from pyproj_spark.queries import (q_hop_distance, q_label_prop,
                                       q_shortest_path)
+    monkeypatch.setattr(bfs, "SMALL_LIMIT", 0)
+    frame = type(spark.range(1))
+    plans, checkpoint = [], frame.localCheckpoint
+
+    def recording(df, *args, **kwargs):
+        plans.append(_plan(df))
+        return checkpoint(df, *args, **kwargs)
+
+    monkeypatch.setattr(frame, "localCheckpoint", recording)
     for q in (q_hop_distance, q_label_prop, q_shortest_path):
-        plan = _plan(q(spark, SF))
+        plans.append(_plan(q(spark, SF)))
+    assert len(plans) > 3 and any("Join" in p for p in plans)
+    for plan in plans:
         assert "CartesianProduct" not in plan
         assert "BroadcastNestedLoopJoin" not in plan
 

@@ -258,31 +258,34 @@ def test_connected_components(spark):
     assert set(comp.values()) == {2}
 
 
-def test_connected_components_chain_logarithmic(spark):
+def test_connected_components_chain_logarithmic(spark, monkeypatch):
     # 1000-vertex chain (diameter 999): star contraction must converge
     # in O(log n) alternation rounds — min-label propagation would need
     # ~999. max_iter=12 doubles as the round-count assertion: exceeding
     # it emits RuntimeWarning, which we escalate to an error here.
     import warnings
+    from pyproj_spark.operators import bfs
     from pyproj_spark.operators.cc import connected_components
+    monkeypatch.setattr(bfs, "SMALL_LIMIT", 0)
     n = 1000
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], "id_a long, id_b long")
     with warnings.catch_warnings():
         warnings.simplefilter("error", RuntimeWarning)
-        comp = connected_components(chain, max_iter=12,
-                                    small_limit=0).collect()
+        comp = connected_components(chain, max_iter=12).collect()
     reps = {r["rep"] for r in comp}
     assert reps == {0} and len(comp) == n
 
 
-def test_connected_components_exhaustion_warns(spark):
+def test_connected_components_exhaustion_warns(spark, monkeypatch):
     import pytest as _pytest
+    from pyproj_spark.operators import bfs
     from pyproj_spark.operators.cc import connected_components
+    monkeypatch.setattr(bfs, "SMALL_LIMIT", 0)
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(63)], "id_a long, id_b long")
     with _pytest.warns(RuntimeWarning, match="did not converge"):
-        connected_components(chain, max_iter=1, small_limit=0).collect()
+        connected_components(chain, max_iter=1).collect()
 
 
 def test_polygon_areas_operator(spark):
@@ -615,17 +618,18 @@ def test_convex_hulls_contains_all_points(spark):
                                                       (2.0, 2.0)]
 
 
-def test_cc_driver_fast_path_matches_distributed(spark):
+def test_cc_driver_fast_path_matches_distributed(spark, monkeypatch):
     """The small-graph union-find cutover must produce IDENTICAL
     (id, rep) labels to the distributed star-contraction loop."""
+    from pyproj_spark.operators import bfs
     from pyproj_spark.operators.cc import connected_components
     edges = [(i, i + 1) for i in range(50)] \
         + [(100 + i, 100 + (i * 3) % 17) for i in range(17)] \
         + [(500, 501)]
     df = spark.createDataFrame(edges, "id_a long, id_b long")
     fast = sorted(map(tuple, connected_components(df).collect()))
-    dist = sorted(map(tuple,
-                      connected_components(df, small_limit=0).collect()))
+    monkeypatch.setattr(bfs, "SMALL_LIMIT", 0)
+    dist = sorted(map(tuple, connected_components(df).collect()))
     assert fast == dist
 
 
