@@ -42,7 +42,9 @@ def _collect_tracks(tracks: DataFrame, user_col: str, seq_col: str,
                     x_col: str, y_col: str) -> DataFrame:
     """(user, xs array<long>, ys array<long>) — one row per trajectory,
     vertices ordered by seq (sort_array on struct(seq, x, y): seq leads
-    the struct, so lexicographic struct order == seq order)."""
+    the struct, so lexicographic struct order == seq order). Vertices
+    that share a seq order by (x, y), so a duplicate seq still gives
+    one deterministic track."""
     pts = F.array_sort(F.collect_list(F.struct(
         F.col(seq_col).alias("s"),
         F.col(x_col).cast("long").alias("x"),

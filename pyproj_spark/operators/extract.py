@@ -86,6 +86,27 @@ def _epsg_code(src_crs) -> "F.Column":
     return F.split(src_crs, ":").getItem(1).cast("int")
 
 
+def _to_4326(xs: pa.Array, ys: pa.Array, codes: pa.Array
+             ) -> tuple[np.ndarray, np.ndarray]:
+    """Fresh float64 lon/lat arrays of one Arrow batch: the rows of each
+    distinct EPSG code other than 4326 go through that code's cached
+    kernel in one call."""
+    from pyproj_spark.crs.crs import CRS
+    from pyproj_spark.plans.spec import TransformSpec, get_kernel
+
+    x = np.asarray(xs.to_numpy(zero_copy_only=False), dtype=np.float64).copy()
+    y = np.asarray(ys.to_numpy(zero_copy_only=False), dtype=np.float64).copy()
+    cn = codes.to_numpy(zero_copy_only=False)
+    for code in np.unique(cn):
+        if code == 4326:
+            continue
+        ii = np.flatnonzero(cn == code)
+        k = get_kernel(TransformSpec(CRS.from_epsg(int(code)).srs,
+                                     "EPSG:4326", always_xy=True))
+        x[ii], y[ii], _ = k(x[ii], y[ii])
+    return x, y
+
+
 def normalize_to_4326(x, y, src_crs):
     """struct<x,y> Arrow-UDF: transform mixed-CRS coordinate columns to
     EPSG:4326 lon/lat, batching per distinct src_crs inside each Arrow
@@ -96,26 +117,9 @@ def normalize_to_4326(x, y, src_crs):
     kernel math is byte-identical (same float64 buffers)."""
     from pyspark.sql.functions import arrow_udf
 
-    from pyproj_spark.crs.crs import CRS
-    from pyproj_spark.plans.spec import TransformSpec, get_kernel
-
     @arrow_udf("struct<x:double,y:double>")
     def _norm(xs: pa.Array, ys: pa.Array, codes: pa.Array) -> pa.Array:
-        xo = np.asarray(xs.to_numpy(zero_copy_only=False),
-                        dtype=np.float64).copy()
-        yo = np.asarray(ys.to_numpy(zero_copy_only=False),
-                        dtype=np.float64).copy()
-        cn = codes.to_numpy(zero_copy_only=False)
-        for code in np.unique(cn):
-            if code == 4326:
-                continue
-            ii = np.flatnonzero(cn == code)
-            spec = TransformSpec(CRS.from_epsg(int(code)).srs,
-                                 "EPSG:4326", always_xy=True)
-            k = get_kernel(spec)
-            xi, yi, _ = k(xo[ii], yo[ii])
-            xo[ii] = xi
-            yo[ii] = yi
+        xo, yo = _to_4326(xs, ys, codes)
         return pa.StructArray.from_arrays(
             [pa.array(xo), pa.array(yo)], names=["x", "y"])
 
@@ -141,19 +145,7 @@ def normalize_and_project(x, y, src_crs, target: str = "EPSG:3857"):
     # buffers, so the output bits are identical (oracle-gated).
     @arrow_udf("struct<lon:double,lat:double,px:double,py:double>")
     def _np2(xs: pa.Array, ys: pa.Array, codes: pa.Array) -> pa.Array:
-        lon = np.asarray(xs.to_numpy(zero_copy_only=False),
-                         dtype=np.float64).copy()
-        lat = np.asarray(ys.to_numpy(zero_copy_only=False),
-                         dtype=np.float64).copy()
-        cn = codes.to_numpy(zero_copy_only=False)
-        for code in np.unique(cn):
-            if code == 4326:
-                continue
-            ii = np.flatnonzero(cn == code)
-            spec = TransformSpec(CRS.from_epsg(int(code)).srs,
-                                 "EPSG:4326", always_xy=True)
-            k = get_kernel(spec)
-            lon[ii], lat[ii], _ = k(lon[ii], lat[ii])
+        lon, lat = _to_4326(xs, ys, codes)
         kt = get_kernel(TransformSpec("EPSG:4326", tgt_srs, always_xy=True))
         px, py, _ = kt(lon, lat)
         return pa.StructArray.from_arrays(

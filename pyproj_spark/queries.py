@@ -3442,13 +3442,14 @@ def q_dq_checks(spark, sf_dir):
     # 1-row aggregates cross-join (all broadcast), and the 5 output
     # rows explode from a literal struct array. Same counts, same
     # rows — the anti-join count is sum(no-match) over a left join on
-    # the unique c_custkey (primary key), which is the same number.
+    # the distinct c_custkey values, which is the same number even
+    # when a key repeats.
     def cnt(cond):
         return F.sum(F.when(cond, 1).otherwise(0)).cast("long")
 
     o_agg = (orders.join(
         F.broadcast(cust.select(F.col("c_custkey").alias("o_custkey"),
-                                F.lit(1).alias("_hit"))),
+                                F.lit(1).alias("_hit")).distinct()),
         "o_custkey", "left")
         .agg(cnt(F.col("_hit").isNull()).alias("orphans"),
              F.count(F.lit(1)).alias("n_orders")))

@@ -6,6 +6,20 @@ the local core count (on a real cluster this is set per-job), and Arrow
 batching for the pandas-UDF kernels (the Spark analogue of pyproj's
 64-point micro-batches — reference ``pyproj/transformer.py:1096-1099`` —
 but sized for Arrow transfer amortization, not C-call overhead).
+
+Every Python-UDF task (``arrow_udf``, ``pandas_udf``, ``applyInPandas``,
+``mapInArrow``) starts with ``importlib.invalidate_caches()`` in
+pyspark's worker. On CPython <= 3.12 that re-reads the central
+directory of every zip archive the worker imported from, and Spark's
+default worker path holds three: pyspark.zip, the py4j source zip and
+the spark-core jar. That cost 0.12-0.15 s per task on one pinned CPU
+(CPython 3.11 and 3.12), more than a 500-row Arrow-UDF job spends
+computing. ``get_spark`` therefore
+starts the workers from :mod:`pyproj_spark.worker_daemon`, which runs
+them on the installed pyspark and py4j when those are the same
+releases. The workers must be able to import ``pyproj_spark`` (the
+driver's working directory or PYTHONPATH), as every engine UDF already
+requires.
 """
 
 from __future__ import annotations
@@ -66,6 +80,7 @@ def get_spark(app_name: str = "pyproj_spark", cores: int | None = None,
                 os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", "pyproj_spark.worker_daemon")
     )
     if java_opts:
         builder = builder.config("spark.driver.extraJavaOptions",

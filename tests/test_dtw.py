@@ -68,6 +68,16 @@ class TestDTW:
             spark.createDataFrame(rows, COLS), ref).collect()
         assert r.dtw_cost > 0
 
+    def test_duplicate_seq_orders_by_x_then_y(self, spark):
+        from pyproj_spark.operators.dtw import _collect_tracks
+        # shuffled input; three vertices share seq 1
+        rows = [(1, 2, 0, 0), (1, 1, 9, 9), (1, 1, 3, 7), (1, 0, 5, 1),
+                (1, 1, 3, 2)]
+        [r] = _collect_tracks(spark.createDataFrame(rows, COLS),
+                              "user_id", "i", "x", "y").collect()
+        assert list(zip(r._xs, r._ys)) == [(5, 1), (3, 2), (3, 7), (9, 9),
+                                           (0, 0)]
+
 
 class TestFrechet:
     def test_exact_match_and_brute(self, spark):

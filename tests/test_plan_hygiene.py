@@ -5,6 +5,8 @@ Catalyst plans so they cannot silently regress."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 SF = "/root/testdata/sf0.01"
@@ -90,6 +92,26 @@ def test_semi_anti_join_strategies(spark):
     assert "LeftSemi" in p1 and "Distinct" not in p1
     p2 = _plan(q_cold_customers(spark, SF))
     assert "LeftAnti" in p2
+
+
+def test_dq_orphan_check_survives_duplicate_customer_key(spark,
+                                                          tmp_path):
+    """dq_checks' orphan-orders count is a left join on c_custkey: a
+    repeated customer key must not multiply the order rows."""
+    from pyproj_spark.queries import q_dq_checks
+
+    def orphan_row(sf_dir):
+        [r] = (q_dq_checks(spark, sf_dir)
+               .where("check = 'orphan_orders'").collect())
+        return r.n_violations, r.n_total
+
+    for t in ("orders", "lineitem", "documents"):
+        os.symlink(f"{SF}/{t}.parquet", tmp_path / f"{t}.parquet")
+    cust = spark.read.parquet(f"{SF}/customer.parquet")
+    key = spark.read.parquet(f"{SF}/orders.parquet").first().o_custkey
+    (cust.unionByName(cust.where(cust.c_custkey == key))
+     .write.parquet(str(tmp_path / "customer.parquet")))
+    assert orphan_row(str(tmp_path)) == orphan_row(SF)
 
 
 def test_rollup_single_expand_pass(spark):

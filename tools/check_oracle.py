@@ -10,6 +10,7 @@ query names — handy while iterating on one operator.
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
@@ -34,7 +35,8 @@ def value_hash(df: pd.DataFrame) -> str:
 
 
 def main(sf_dir: str, only: set[str] | None = None):
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))))
     import __spark_entry__ as entrymod
     from pyproj_spark.session import get_spark
 
