@@ -11,11 +11,15 @@ The graft's flagship join (SURVEY.md §2.6): instead of a theta-join
   4. exact even-odd crossing test as a vectorized pandas UDF, batched per
      zone inside each Arrow batch (ring geometry is identical across a
      zone's rows, so the inner loop is one numpy pass per distinct zone).
+     The rings are collected once per zones frame and shipped with
+     sparkContext.broadcast.
 
-Exact-match contract: the even-odd test below is the same algorithm as
-the brute-force oracle in tests (FIXTURES.md §9) — join output rows must
-match exactly. Antimeridian-crossing rings are handled by wrapping
-vertex longitudes into the point's local frame.
+Exact-match contract: :func:`point_in_ring_np` is the one definition of
+the even-odd test — the brute-force oracle in tests (FIXTURES.md §9)
+and perfbench use it, and join output rows must match it exactly.
+:func:`ring_contains` is its native (Catalyst) twin for literal rings,
+bit-identical to it. Antimeridian-crossing rings are handled by
+wrapping vertex longitudes into the point's local frame.
 """
 
 from __future__ import annotations
@@ -23,9 +27,10 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
+from pyspark.sql.types import BooleanType
 
 from pyproj_spark.functions import cells
 
@@ -61,7 +66,39 @@ def point_in_ring_np(lon: np.ndarray, lat: np.ndarray,
     return (hits.sum(axis=1) % 2).astype(bool)
 
 
-from pyspark.sql.types import BooleanType
+def _ring_edges(lat: Column, ring) -> list[tuple[Column, Column]]:
+    """The per-edge terms of :func:`point_in_ring_np` over a literal
+    ring of (lon, lat) vertices: one ``(cross, x_intercept)`` pair of
+    Columns per edge, with the reference's unwrapped vertices,
+    half-open rule and evaluation order. A horizontal edge never
+    crosses (and would divide by zero), so it has no term."""
+    a = np.asarray(ring, dtype=float)
+    ref = a[0, 0]
+    rx = ref + ((a[:, 0] - ref + 180.0) % 360.0 - 180.0)
+    ry = a[:, 1]
+    edges = zip(rx.tolist(), ry.tolist(), np.roll(rx, -1).tolist(),
+                np.roll(ry, -1).tolist())
+    return [((F.lit(ya) > lat) != (F.lit(yb) > lat),
+             F.lit(xa) + (lat - F.lit(ya)) * F.lit(xb - xa)
+             / F.lit(yb - ya))
+            for xa, ya, xb, yb in edges if ya != yb]
+
+
+def ring_contains(lon: Column, lat: Column, ring) -> Column:
+    """Native twin of :func:`point_in_ring_np` for a literal ring of
+    (lon, lat) vertices: a boolean Column, bit-identical to the
+    reference (the point wraps into the ring's frame with ``pmod``).
+    Like the reference it assumes the ring spans well under 180° of
+    longitude: ``pmod`` and numpy's ``%`` may put a point within ~1e-13°
+    of the seam opposite the ring on different sides of it, where both
+    sides are outside such a ring."""
+    ref = float(ring[0][0])
+    px = F.lit(ref) + (F.pmod(lon - F.lit(ref) + F.lit(180.0),
+                              F.lit(360.0)) - F.lit(180.0))
+    tot = F.lit(0)
+    for cross, xint in _ring_edges(lat, ring):
+        tot = tot + F.when(cross & (px < xint), 1).otherwise(0)
+    return tot % 2 == 1
 
 
 def _make_pip_udf(rings_bc):
@@ -93,81 +130,32 @@ def _make_pip_udf(rings_bc):
     return _pip
 
 
-def _pip_join_struct(cand: DataFrame, lon_col: str,
-                     lat_col: str) -> DataFrame:
-    """Fallback for ring tables too big to broadcast: candidates carry
-    the ring as a struct column through the cell equi-join; a mapInPandas
-    pass parses each zone's ring ONCE per (batch, zone) and filters.
-    One extra shuffle-side payload, zero driver-side collection."""
-    import pyspark.sql.types as T
-    out_schema = T.StructType(
-        [f for f in cand.schema.fields if f.name != "ring"])
-
-    def batches(it):
-        for pdf in it:
-            keep = np.zeros(len(pdf), dtype=bool)
-            pos = {ix: i for i, ix in enumerate(pdf.index)}
-            for _zid, idx in pdf.groupby("zone_id").groups.items():
-                ring = pdf["ring"].loc[idx[0]]
-                rl = np.array([p["lon"] for p in ring])
-                rb = np.array([p["lat"] for p in ring])
-                if len(rl) == 0:
-                    continue
-                ii = np.array([pos[ix] for ix in idx])
-                keep[ii] = point_in_ring_np(
-                    pdf[lon_col].to_numpy()[ii],
-                    pdf[lat_col].to_numpy()[ii], rl, rb)
-            yield pdf.loc[keep].drop(columns=["ring"])
-
-    return cand.mapInPandas(batches, out_schema)
-
-
 def pip_join(anchors: DataFrame, zones: DataFrame,
              res: int = cells.DEFAULT_RES,
-             lon_col: str = "lon", lat_col: str = "lat",
-             broadcast_max_vertices: int = 4_000_000) -> DataFrame:
+             lon_col: str = "lon", lat_col: str = "lat") -> DataFrame:
     """anchors ⋈ zones where the point lies inside the zone ring.
 
     anchors: any DF with lon/lat columns. zones: zones_df schema
-    (zone_id, name, ring, cells) — normally a broadcastable DIMENSION
-    table: rings are collected once on the driver and shipped per
-    executor via sparkContext.broadcast. Above broadcast_max_vertices
-    total ring vertices (~64 MB at 16 B/vertex) the join switches to the
-    struct-column path: rings ride the cell equi-join and are parsed
-    once per (batch, zone) in a mapInPandas pass — slower per row but
-    never materializes the zone table on the driver.
+    (zone_id, name, ring, cells) — a DIMENSION table: its rings are
+    collected once on the driver and shipped per executor via
+    sparkContext.broadcast. A NULL or empty ring matches nothing.
     Returns anchors columns + zone_id.
     """
     a = anchors.withColumn(
         "cell", cells.cell_of(F.col(lon_col), F.col(lat_col), res))
-    # The size probe + ring collect + broadcast are ~3 driver round
-    # trips per call; a zones DIMENSION table is typically reused across
-    # many queries in a session, so the results are memoized on the
-    # DataFrame object itself (plan-side metadata, recomputed whenever
-    # the caller rebuilds the zones frame — never keyed on fact data).
-    cached = getattr(zones, "_pip_rings_cache", None)
-    if cached is not None:
-        n_vertices, rings_bc = cached
-    else:
-        n_vertices = zones.select(
-            F.sum(F.size("ring")).alias("n")).first()["n"] or 0
-        rings_bc = None
-    if n_vertices > broadcast_max_vertices:
-        zc = zones.select("zone_id", "ring",
-                          F.explode("cells").alias("cell"))
-        return _pip_join_struct(a.join(zc, "cell"), lon_col,
-                                lat_col).drop("cell")
+    # The ring collect + broadcast is a driver round trip per call; a
+    # zones DIMENSION table is typically reused across many queries in a
+    # session, so the broadcast is memoized on the DataFrame object
+    # itself (plan-side metadata, rebuilt whenever the caller rebuilds
+    # the zones frame — never keyed on fact data).
+    rings_bc = zones.__dict__.get("_pip_rings_bc")
     if rings_bc is None:
         rings = {
-            r["zone_id"]: (np.array([p["lon"] for p in r["ring"]]),
-                           np.array([p["lat"] for p in r["ring"]]))
+            r["zone_id"]: (np.array([p["lon"] for p in r["ring"] or ()]),
+                           np.array([p["lat"] for p in r["ring"] or ()]))
             for r in zones.select("zone_id", "ring").collect()}
         sc = anchors.sparkSession.sparkContext
-        rings_bc = sc.broadcast(rings)
-        try:
-            zones._pip_rings_cache = (n_vertices, rings_bc)
-        except AttributeError:  # pragma: no cover - exotic DF proxies
-            pass
+        rings_bc = zones.__dict__["_pip_rings_bc"] = sc.broadcast(rings)
     zc = zones.select("zone_id", F.explode("cells").alias("cell"))
     cand = a.join(F.broadcast(zc), "cell")
     hit = cand.filter(_make_pip_udf(rings_bc)(

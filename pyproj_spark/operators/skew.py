@@ -69,14 +69,16 @@ def spread_small_scan(df: DataFrame) -> DataFrame:
     everything up to the first exchange runs on one core regardless of
     cluster size (guide §2/§6: row-group count caps scan parallelism);
     a round-robin repartition right after the scan spreads that work.
-    At production scale the scan has >= cores partitions (the probe is
-    a plan-time inputFiles() count, ~4 ms) and this is a no-op, so the
-    repartition never COLLAPSES parallelism."""
+    It decides by the scan's planned partitions (a plan-time probe,
+    well under 1 ms) and spreads only when that at least doubles the
+    tasks, since the repartition shuffles every row once: a scan
+    planned as many partitions — many files, or one file split by row
+    groups — is returned as is, so the repartition never lowers the
+    planned parallelism. (The planner packs small files into fewer
+    partitions than files; and a file larger than the split size but
+    holding one row group plans several partitions of which only one
+    reads rows.)"""
     n = df.sparkSession.sparkContext.defaultParallelism
-    try:
-        few = len(df.inputFiles()) < n
-    except Exception:  # pragma: no cover - non-file sources
-        few = False
-    if few:
+    if 2 * df.rdd.getNumPartitions() <= n:
         return df.repartition(n)
     return df

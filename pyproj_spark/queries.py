@@ -14,6 +14,7 @@ Conventions for hash-stable comparison:
 
 from __future__ import annotations
 
+import functools
 import math
 
 import pandas as pd  # noqa: F401 — resolves pandas-UDF type hints
@@ -23,7 +24,7 @@ from pyspark.sql import functions as F
 
 from pyproj_spark.functions import cells
 from pyproj_spark.functions.transform import haversine_m, transform_xy
-from pyproj_spark.operators.pip import pip_join
+from pyproj_spark.operators.pip import _ring_edges, pip_join, ring_contains
 
 # ---------------------------------------------------------------- helpers
 
@@ -76,18 +77,14 @@ def _zone_edges_sql() -> str:
 
 _ZONES_DF_CACHE: dict = {}
 
-#: memo for driver-side pure functions of module constants (zone
-#: coverings etc.) — plan-side metadata, never derived from fact data
-_DRIVER_MEMO: dict = {}
-
 
 def _zones_df(spark):
     """The 5-zone dimension table. Memoized per SparkSession: every
     zone-joining query used to pay a fresh createDataFrame (py4j
-    serialization) plus pip_join's size-probe/collect round trips;
-    the table is a pure function of the PIP_ZONES module constants,
-    so one DataFrame per session serves them all (and pip_join's
-    on-DataFrame ring cache then hits across queries too)."""
+    serialization) plus pip_join's ring collect; the table is a pure
+    function of the PIP_ZONES module constants, so one DataFrame per
+    session serves them all (and pip_join's on-DataFrame ring
+    broadcast then hits across queries too)."""
     key = spark.sparkContext.applicationId
     hit = _ZONES_DF_CACHE.get(key)
     if hit is not None:
@@ -4121,34 +4118,39 @@ def _s2_bbox_sql():
 QUERIES["s2_bbox"] = (q_s2_bbox, _s2_bbox_sql())
 
 
+@functools.cache
+def _s2_pip_covering():
+    """The adaptive S2 coverings of PIP_ZONES at level 8: the
+    (zone_id, cell_id, certain) rows and the sorted cell levels. A pure
+    function of module constants — ~1.3 s of driver-side numpy, so it
+    runs once per process (never keyed on fact data)."""
+    from pyproj_spark.functions import s2cell
+    zr = []
+    levels = set()
+    for zid, ring in PIP_ZONES.items():
+        for cid, certain in s2cell.covering_polygon_adaptive(ring, 8):
+            zr.append((zid, int(cid), int(certain)))
+            levels.add(cid >> 58)
+    return tuple(zr), tuple(sorted(levels))
+
+
 def q_s2_pip(spark, sf_dir):
     """PIP join on the S2 index, end to end UDF-free: per-zone polygon
     coverings (driver-side, sound-superset by rect-vs-ring pruning)
     collapse to merged leaf-id ranges via Hilbert contiguity; each
     point's level-8 id probes the literal range table with one
     filter+explode (no join, no shuffle before the final project); the
-    exact even-odd crossing test runs as unrolled native expressions
-    (the same formula SQL_PIP uses, so candidate refinement is
-    bit-identical). The coverings are ADAPTIVE mixed-level (real-S2
-    shape): interior cells stay coarse and carry certain=1 — their
-    points are accepted with NO exact test; only the boundary sliver
-    is refined. The oracle is the covering-blind SQL_PIP: hash
+    exact even-odd test is ``ring_contains``, the native twin of
+    pip_join's ``point_in_ring_np``, so candidate refinement is
+    bit-identical to pip_join's. The coverings are ADAPTIVE
+    mixed-level (real-S2 shape): interior cells stay coarse and carry
+    certain=1 — their points are accepted with NO exact test; only the
+    boundary sliver is refined. The oracle is the covering-blind SQL_PIP: hash
     equality proves the covering dropped no candidate AND that no
     certain range leaked an outside point. Contrast with pip_join
     (geocell equality covering + pandas-UDF exact test)."""
     from pyproj_spark.functions import s2cell
-    # the adaptive coverings are a pure function of the PIP_ZONES
-    # module constants — ~1.3 s of driver-side numpy per call, so
-    # memoize (never keyed on fact data; recomputed per process)
-    if "s2pip_cov" not in _DRIVER_MEMO:
-        zr = []
-        levels = set()
-        for zid, ring in PIP_ZONES.items():
-            for cid, certain in s2cell.covering_polygon_adaptive(ring, 8):
-                zr.append((zid, int(cid), int(certain)))
-                levels.add(cid >> 58)
-        _DRIVER_MEMO["s2pip_cov"] = (zr, levels)
-    zr, levels = _DRIVER_MEMO["s2pip_cov"]
+    zr, levels = _s2_pip_covering()
     pts = _doc_points(spark, sf_dir)
     cell = s2cell.cell_of(F.col("lon"), F.col("lat"), 8)
     # containment as an ANCESTOR EQUI-JOIN: the mixed-level covering
@@ -4165,32 +4167,18 @@ def q_s2_pip(spark, sf_dir):
     rkey = (spark.sparkContext.applicationId, "s2pip_rdf")
     if _ZONES_DF_CACHE.get(rkey) is None:
         _ZONES_DF_CACHE[rkey] = spark.createDataFrame(
-            zr, "zone_id int, anc long, certain int")
+            list(zr), "zone_id int, anc long, certain int")
     rdf = F.broadcast(_ZONES_DF_CACHE[rkey])
     anc = F.explode(F.array(*[
-        s2cell.parent(F.col("cell"), lv) for lv in sorted(levels)]))
+        s2cell.parent(F.col("cell"), lv) for lv in levels]))
     cands = (pts.withColumn("cell", cell)
              .withColumn("anc", anc)
              .join(rdf, "anc"))
-    lon, lat = F.col("lon"), F.col("lat")
-    crossings = F.lit(None).cast("int")
+    inside = F.lit(False)
     for zid, ring in PIP_ZONES.items():
-        k = len(ring)
-        tot = F.lit(0)
-        for i in range(k):
-            x1, y1 = ring[i]
-            x2, y2 = ring[(i + 1) % k]
-            cond = (((F.lit(float(y1)) > lat)
-                     != (F.lit(float(y2)) > lat))
-                    & (lon < F.lit(float(x1))
-                       + (lat - F.lit(float(y1)))
-                       * F.lit(float(x2 - x1))
-                       / F.lit(float(y2 - y1))))
-            tot = tot + F.when(cond, 1).otherwise(0)
-        crossings = F.when(F.col("zone_id") == zid,
-                           tot).otherwise(crossings)
-    return (cands.filter((F.col("certain") == 1)
-                         | (crossings % 2 == 1))
+        inside = F.when(F.col("zone_id") == zid, ring_contains(
+            F.col("lon"), F.col("lat"), ring)).otherwise(inside)
+    return (cands.filter((F.col("certain") == 1) | inside)
             .select("doc_id", "zone_id"))
 
 
@@ -5466,28 +5454,18 @@ QUERIES["vector_tile"] = (q_vector_tile, SQL_VECTOR_TILE)
 def q_geofence(spark, sf_dir):
     """Geofence entry/exit detection: per-user event trajectories
     (deterministic positions keyed by event_id, ordered by ts) are
-    tested against zone 1 with the unrolled even-odd crossing
-    expressions, then lag(inside) finds the transitions — the
-    enter/exit event stream a location-alerting pipeline emits.
-    One window over (user, ts); the exact test is pure Catalyst; the
-    oracle replays the identical crossing sum + lag in SQL."""
+    tested against zone 1 with ``ring_contains`` (the native even-odd
+    test), then lag(inside) finds the transitions — the enter/exit
+    event stream a location-alerting pipeline emits. One window over
+    (user, ts); the exact test is pure Catalyst; the oracle replays
+    the crossing sum + lag in SQL."""
     ev = (_t(spark, sf_dir, "events")
           .filter(F.col("user_id") % 20 == 0))
     lon = (F.col("event_id") * 31 % 70000) / 1000.0 - 15.0
     lat = (F.col("event_id") * 57 % 45000) / 1000.0 + 25.0
-    ring = PIP_ZONES[1]
-    k = len(ring)
-    tot = F.lit(0)
-    for i in range(k):
-        x1, y1 = ring[i]
-        x2, y2 = ring[(i + 1) % k]
-        cond = (((F.lit(float(y1)) > lat) != (F.lit(float(y2)) > lat))
-                & (lon < F.lit(float(x1))
-                   + (lat - F.lit(float(y1)))
-                   * F.lit(float(x2 - x1)) / F.lit(float(y2 - y1))))
-        tot = tot + F.when(cond, 1).otherwise(0)
-    d = (ev.select("user_id", "ts", "event_id",
-                   (tot % 2 == 1).cast("int").alias("inside")))
+    d = ev.select("user_id", "ts", "event_id",
+                  ring_contains(lon, lat, PIP_ZONES[1])
+                  .cast("int").alias("inside"))
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     d = d.withColumn("prev", F.lag("inside").over(w))
     return (d.filter(F.col("prev").isNotNull()
@@ -6093,8 +6071,10 @@ def q_zone_fill(spark, sf_dir):
     100 TB this is a driver-side-literal x 128-row spine, O(zones)
     work. Completes the raster family: points (raster_pyramid), lines
     (rasterize_lines), polygons (here), and back (contours). The
-    oracle replays the identical crossings per row. sf_dir is unused
-    (pure geometry) but kept for the driver contract."""
+    per-edge crossings are the even-odd test's own terms
+    (operators/pip.py::_ring_edges); the oracle replays them per row.
+    sf_dir is unused (pure geometry) but kept for the driver
+    contract."""
     wx = 360.0 / 256
     hy = 170.0 / 128
     outs = []
@@ -6102,16 +6082,9 @@ def q_zone_fill(spark, sf_dir):
         spine = spark.range(0, 128).select(
             F.col("id").cast("long").alias("py"))
         yc = F.lit(-85.0) + (F.col("py") + 0.5) * F.lit(hy)
-        n = len(ring)
         cnt = F.lit(0)
-        lo, hi = F.lit(1e9), F.lit(-1e9)
         los, his = [F.lit(1e9)], [F.lit(-1e9)]
-        for i in range(n):
-            x1, y1 = ring[i]
-            x2, y2 = ring[(i + 1) % n]
-            cross = (F.lit(float(y1)) > yc) != (F.lit(float(y2)) > yc)
-            xc = (F.lit(float(x1)) + (yc - F.lit(float(y1)))
-                  * F.lit(float(x2 - x1)) / F.lit(float(y2 - y1)))
+        for cross, xc in _ring_edges(yc, ring):
             cnt = cnt + F.when(cross, 1).otherwise(0)
             los.append(F.when(cross, xc).otherwise(F.lit(1e9)))
             his.append(F.when(cross, xc).otherwise(F.lit(-1e9)))
@@ -7598,7 +7571,6 @@ def q_zonal_stats(spark, sf_dir):
     the raster agg is bounded by the grid size (360x170), never by
     corpus size. The oracle replays raster + even-odd + agg from raw
     coordinates, covering-blind."""
-    from pyproj_spark.operators.pip import pip_join
     pts = _doc_points(spark, sf_dir)
     ras = (pts.select(F.floor("lon").cast("long").alias("gx"),
                       F.floor("lat").cast("long").alias("gy"))

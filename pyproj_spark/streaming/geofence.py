@@ -9,9 +9,9 @@ long the stream runs; arbitrarily late-arriving batches are the
 caller's watermark problem, as with every per-key ordered stateful op.
 
 The point-in-polygon test itself runs BEFORE the stateful stage as
-the same unrolled native even-odd crossing expressions the batch
-query uses (functions, not Python state), so the pandas stage only
-diffs consecutive flags.
+the same native even-odd test the batch query uses
+(``operators.pip.ring_contains``, functions, not Python state), so the
+pandas stage only diffs consecutive flags.
 """
 
 from __future__ import annotations
@@ -20,28 +20,14 @@ from collections.abc import Iterable, Iterator
 
 import pandas as pd
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from pyproj_spark.operators.pip import ring_contains
+
 OUT_SCHEMA = "user_id long, event_id long, transition string"
 STATE_SCHEMA = "inside int"
-
-
-def inside_ring(lon: Column, lat: Column, ring) -> Column:
-    """Even-odd crossing test as unrolled native expressions (the
-    exact formula SQL_PIP / q_s2_pip use)."""
-    k = len(ring)
-    tot = F.lit(0)
-    for i in range(k):
-        x1, y1 = ring[i]
-        x2, y2 = ring[(i + 1) % k]
-        cond = (((F.lit(float(y1)) > lat) != (F.lit(float(y2)) > lat))
-                & (lon < F.lit(float(x1))
-                   + (lat - F.lit(float(y1)))
-                   * F.lit(float(x2 - x1)) / F.lit(float(y2 - y1))))
-        tot = tot + F.when(cond, 1).otherwise(0)
-    return (tot % 2 == 1).cast("int")
 
 
 def _transitions_fn(key, pdfs: Iterable[pd.DataFrame],
@@ -81,7 +67,8 @@ def streaming_geofence(events: DataFrame, ring) -> DataFrame:
     lag-window query exactly — the parity the test locks."""
     flagged = events.select(
         "user_id", "ts", "event_id",
-        inside_ring(F.col("lon"), F.col("lat"), ring).alias("inside"))
+        ring_contains(F.col("lon"), F.col("lat"), ring)
+        .cast("int").alias("inside"))
     return (flagged.groupBy("user_id")
             .applyInPandasWithState(
                 _transitions_fn, OUT_SCHEMA, STATE_SCHEMA, "append",

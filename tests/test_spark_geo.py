@@ -14,9 +14,10 @@ from pyproj_spark.functions.tiles import tile_xy_from_lonlat
 from pyproj_spark.functions.transform import transform_xy
 from pyproj_spark.operators.extract import extract_anchors, extract_anchors_py
 from pyproj_spark.operators.knn import knn_ring, knn_to_zones
-from pyproj_spark.operators.pip import pip_join, point_in_ring_np
+from pyproj_spark.operators.pip import (pip_join, point_in_ring_np,
+                                        ring_contains)
 from pyproj_spark.sources.pages import pages_df, pages_pandas
-from pyproj_spark.sources.zones import make_zone_rings, zones_df
+from pyproj_spark.sources.zones import ZONE_SCHEMA, make_zone_rings, zones_df
 
 N_PAGES = 600
 
@@ -133,6 +134,78 @@ def test_pip_join_exact(spark, anchors):
                         zid))
     assert len(expect) > 0
     assert got_set == expect
+
+
+def test_ring_contains_matches_point_in_ring_np(spark):
+    """The native twin is the reference, bit for bit: seeded random
+    points, every vertex and points on every vertex latitude, for an
+    antimeridian-crossing ring, a concave ring with horizontal edges
+    and a plain one."""
+    rings = {r[0]: r[2] for r in make_zone_rings(200)}
+    anti = rings[147]
+    lons = [p[0] for p in anti]
+    assert max(lons) - min(lons) > 180      # crosses the antimeridian
+    flat = [(0.0, 0.0), (4.0, 0.0), (4.0, 3.0), (2.0, 1.0), (0.0, 3.0)]
+    rng = np.random.default_rng(11)
+    for ring in (anti, flat, rings[5]):
+        rl = np.array([p[0] for p in ring])
+        rb = np.array([p[1] for p in ring])
+        cx, cy = rl[0], rb.mean()
+        lon = np.concatenate([
+            rng.uniform(cx - 8, cx + 8, 3000),
+            rl,
+            rng.uniform(cx - 8, cx + 8, 20 * len(rb)),
+            rng.uniform(-180, 180, 500)])
+        lat = np.concatenate([
+            rng.uniform(cy - 8, cy + 8, 3000),
+            rb,
+            np.repeat(rb, 20),
+            rng.uniform(-89, 89, 500)])
+        lon = np.remainder(lon + 180.0, 360.0) - 180.0
+        pdf = pd.DataFrame({"i": np.arange(len(lon)), "lon": lon,
+                            "lat": lat})
+        got = (spark.createDataFrame(pdf)
+               .select("i", ring_contains(F.col("lon"), F.col("lat"),
+                                          ring).alias("inside"))
+               .toPandas().sort_values("i"))
+        expect = point_in_ring_np(lon, lat, rl, rb)
+        assert expect.any() and not expect.all()
+        assert (got["inside"].to_numpy() == expect).all()
+
+
+def test_pip_join_null_ring_matches_nothing(spark):
+    """A zones row with a NULL ring (the schema allows it) matches no
+    point, like an empty ring, instead of failing the ring collect."""
+    ring = [(0.0, 0.0), (4.0, 0.0), (4.0, 4.0), (0.0, 4.0)]
+    rl = np.array([p[0] for p in ring])
+    rb = np.array([p[1] for p in ring])
+    cov = cells.covering_np(rl, rb, cells.DEFAULT_RES).tolist()
+    verts = [{"lon": a, "lat": b} for a, b in ring]
+    zones = spark.createDataFrame(
+        [(1, "null", None, cov), (2, "empty", [], cov),
+         (3, "square", verts, cov)], ZONE_SCHEMA)
+    pts = spark.createDataFrame([(0, 1.0, 1.0), (1, 3.0, 2.5)],
+                                "id long, lon double, lat double")
+    got = sorted(tuple(r) for r in pip_join(pts, zones)
+                 .select("id", "zone_id").collect())
+    assert got == [(0, 3), (1, 3)]
+
+
+def test_pip_join_build_fires_one_job_then_none(spark, anchors):
+    """Building on a fresh zones frame runs one job (the ring collect);
+    a second build on the same frame reuses its ring broadcast."""
+    zdf = zones_df(spark, n_zones=20)
+    sc = spark.sparkContext
+    jobs = []
+    for k in range(2):
+        group = f"pip-build-{k}"
+        sc.setJobGroup(group, "pip_join build")
+        try:
+            pip_join(anchors, zdf)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+    assert jobs == [1, 0]
 
 
 def test_covering_contains_all_inside_points(spark):
@@ -350,20 +423,6 @@ def test_jaccard_capped_star_edges_connectivity(spark):
     edges = stars.unionByName(pairs.select("id_a", "id_b"))
     comp = connected_components(edges)
     assert {r["rep"] for r in comp.collect()} == {0}
-
-
-def test_pip_join_struct_fallback_matches_broadcast(spark, anchors):
-    # force the over-threshold struct-column path and require exact
-    # agreement with the broadcast path
-    zdf = zones_df(spark, n_zones=30)
-    fast = set(map(tuple, pip_join(anchors, zdf)
-                   .select("url", "anchor_idx", "zone_id")
-                   .toPandas().to_numpy()))
-    slow = set(map(tuple, pip_join(anchors, zdf, broadcast_max_vertices=1)
-                   .select("url", "anchor_idx", "zone_id")
-                   .toPandas().to_numpy()))
-    assert len(fast) > 0
-    assert fast == slow
 
 
 def test_decode_png_all_filters():

@@ -31,6 +31,29 @@ class TestSpreadSmallScan:
         assert out is df
 
 
+    def test_one_file_many_row_groups_is_a_noop(self, spark, tmp_path):
+        """One file whose row groups plan more scan partitions than
+        cores must not be repartitioned down to the core count."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        p = str(tmp_path / "rowgroups.parquet")
+        rng = np.random.default_rng(3)
+        t = pa.table({"id": np.arange(400_000),
+                      "x": rng.random(400_000)})
+        pq.write_table(t, p, row_group_size=50_000, compression="none")
+        assert pq.ParquetFile(p).metadata.num_row_groups == 8
+        key = "spark.sql.files.maxPartitionBytes"
+        old = spark.conf.get(key)
+        spark.conf.set(key, str(512 * 1024))
+        try:
+            df = spark.read.parquet(p)
+            n = spark.sparkContext.defaultParallelism
+            assert df.rdd.getNumPartitions() > n
+            assert spread_small_scan(df) is df
+        finally:
+            spark.conf.set(key, old)
+
+
 class TestMixedShapeBatches:
     def test_viterbi_mixed_step_counts_one_frame(self, spark):
         """Two trajectories with DIFFERENT step counts must decode

@@ -237,8 +237,8 @@ def test_streaming_geofence_matches_batch(spark, tmp_path):
     import time as _time
 
     from pyspark.sql import Window
-    from pyproj_spark.streaming.geofence import (inside_ring,
-                                                 streaming_geofence)
+    from pyproj_spark.operators.pip import ring_contains
+    from pyproj_spark.streaming.geofence import streaming_geofence
     ring = [(0.0, 30.0), (40.0, 32.0), (50.0, 60.0), (10.0, 65.0),
             (-10.0, 50.0)]
     d = str(tmp_path / "ev_stream")
@@ -257,8 +257,8 @@ def test_streaming_geofence_matches_batch(spark, tmp_path):
     # batch reference: same flags, lag window
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     flags = batch.select("user_id", "ts", "event_id",
-                         inside_ring(F.col("lon"), F.col("lat"),
-                                     ring).alias("inside"))
+                         ring_contains(F.col("lon"), F.col("lat"),
+                                       ring).cast("int").alias("inside"))
     ref = (flags.withColumn("prev", F.lag("inside").over(w))
            .filter(F.col("prev").isNotNull()
                    & (F.col("prev") != F.col("inside")))
@@ -293,8 +293,8 @@ def test_streaming_geofence_state_carries_across_batches(spark,
     import time as _time
 
     from pyspark.sql import Window
-    from pyproj_spark.streaming.geofence import (inside_ring,
-                                                 streaming_geofence)
+    from pyproj_spark.operators.pip import ring_contains
+    from pyproj_spark.streaming.geofence import streaming_geofence
     ring = [(0.0, 30.0), (40.0, 32.0), (50.0, 60.0), (10.0, 65.0),
             (-10.0, 50.0)]
     d = str(tmp_path / "ev_stream2")
@@ -312,8 +312,8 @@ def test_streaming_geofence_state_carries_across_batches(spark,
     batch = spark.read.parquet(d)
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     flags = batch.select("user_id", "ts", "event_id",
-                         inside_ring(F.col("lon"), F.col("lat"),
-                                     ring).alias("inside"))
+                         ring_contains(F.col("lon"), F.col("lat"),
+                                       ring).cast("int").alias("inside"))
     ref = (flags.withColumn("prev", F.lag("inside").over(w))
            .filter(F.col("prev").isNotNull()
                    & (F.col("prev") != F.col("inside")))
@@ -348,8 +348,8 @@ def test_streaming_geofence_multichunk_group(spark, tmp_path):
     import time as _time
 
     from pyspark.sql import Window
-    from pyproj_spark.streaming.geofence import (inside_ring,
-                                                 streaming_geofence)
+    from pyproj_spark.operators.pip import ring_contains
+    from pyproj_spark.streaming.geofence import streaming_geofence
     ring = [(0.0, 30.0), (40.0, 32.0), (50.0, 60.0), (10.0, 65.0),
             (-10.0, 50.0)]
     d = str(tmp_path / "ev_stream3")
@@ -369,8 +369,8 @@ def test_streaming_geofence_multichunk_group(spark, tmp_path):
     batch = spark.read.parquet(d)
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     flags = batch.select("user_id", "ts", "event_id",
-                         inside_ring(F.col("lon"), F.col("lat"),
-                                     ring).alias("inside"))
+                         ring_contains(F.col("lon"), F.col("lat"),
+                                       ring).cast("int").alias("inside"))
     ref = (flags.withColumn("prev", F.lag("inside").over(w))
            .filter(F.col("prev").isNotNull()
                    & (F.col("prev") != F.col("inside")))
@@ -458,8 +458,8 @@ def test_geofence_group_spanning_many_arrow_chunks(spark, tmp_path):
     import pandas as pd
     from pyspark.sql import functions as F
 
-    from pyproj_spark.streaming.geofence import (inside_ring,
-                                                 streaming_geofence)
+    from pyproj_spark.operators.pip import ring_contains
+    from pyproj_spark.streaming.geofence import streaming_geofence
 
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "64")
     try:
@@ -476,7 +476,8 @@ def test_geofence_group_spanning_many_arrow_chunks(spark, tmp_path):
         from pyspark.sql import Window
         w = Window.partitionBy("user_id").orderBy("ts", "event_id")
         flags = df.withColumn(
-            "inside", inside_ring(F.col("lon"), F.col("lat"), ring))
+            "inside",
+            ring_contains(F.col("lon"), F.col("lat"), ring).cast("int"))
         batch = (flags.withColumn("prev", F.lag("inside").over(w))
                  .filter(F.col("prev").isNotNull()
                          & (F.col("inside") != F.col("prev")))

@@ -40,7 +40,9 @@ def main(sf_dir: str, only: set[str] | None = None):
     import __spark_entry__ as entrymod
     from pyproj_spark.session import get_spark
 
-    spark = get_spark("oracle-check", cores=8, shuffle_partitions=16)
+    # up to 8 cores, never more than this process may run on
+    cores = min(8, len(os.sched_getaffinity(0)))
+    spark = get_spark("oracle-check", cores=cores, shuffle_partitions=16)
     con = duckdb.connect()
     for t in ("region nation customer supplier part orders lineitem "
               "events documents embeddings").split():
