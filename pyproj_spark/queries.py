@@ -1793,16 +1793,17 @@ def q_pipeline_e2e(spark, sf_dir):
     (gzip members on odd files) with a geo anchor embedded in each
     page's HTML; sources/warc.py parses the container bytes and
     extracts text; operators/extract.py pulls the anchors back out of
-    the extracted text (regex, byte-identity contract); the pandas-UDF
-    kernel transforms them to EPSG:3857; native tile math assigns
-    slippy z=8 tiles; and per-tile counts aggregate. The oracle
+    the extracted text (regex, byte-identity contract); one Arrow-UDF
+    crossing (extract.normalize_and_project, the flagship's) normalizes
+    them to EPSG:4326 and projects them to EPSG:3857; native tile math
+    assigns slippy z=8 tiles; and per-tile counts aggregate. The oracle
     computes the same tiles arithmetically straight from the anchor
     formula — every stage in between (WARC framing, charset decode,
     tag stripping, anchor regex, float round-trip through text,
     projection, tiling) must be exact for the hash to match."""
     from pyproj_spark.functions.tiles import tile_xy
-    from pyproj_spark.functions.transform import transform_xy
-    from pyproj_spark.operators.extract import extract_anchors
+    from pyproj_spark.operators.extract import (extract_anchors,
+                                                normalize_and_project)
     from pyproj_spark.sources.warc import build_warc, warc_pages
 
     d = _doc_points(spark, sf_dir) \
@@ -1832,10 +1833,9 @@ def q_pipeline_e2e(spark, sf_dir):
     warcs = (d.groupBy("warc_id")
              .applyInPandas(_build, "warc_id long, content binary"))
     pages = warc_pages(warcs).select("url", "text")
-    anchors = extract_anchors(pages, normalize_crs=True)
-    xy = transform_xy("EPSG:4326", "EPSG:3857",
-                      F.col("lon"), F.col("lat"))
-    tx, ty = tile_xy(F.col("xy.x"), F.col("xy.y"), 8)
+    anchors = extract_anchors(pages, normalize_crs=False)
+    xy = normalize_and_project(F.col("x"), F.col("y"), F.col("src_crs"))
+    tx, ty = tile_xy(F.col("xy.px"), F.col("xy.py"), 8)
     return (anchors.withColumn("xy", xy)
             .select(tx.alias("tx"), ty.alias("ty"), "url")
             .groupBy("tx", "ty")
@@ -6306,16 +6306,18 @@ QUERIES["bearing_hist"] = (q_bearing_hist, SQL_BEARING_HIST)
 # ------------------------------------------------ distance transform
 
 def q_dist_transform(spark, sf_dir):
-    """Raster distance transform: L1 (city-block) distance from every
-    grid cell to the nearest occupied cell, by k=6 rounds of
-    scatter-min — each round every labeled cell offers dist+1 to its
-    4 neighbors and a groupBy(min) keeps the best. No lattice edge
-    table exists anywhere: the neighborhood is generated per round by
-    an explode of 5 literal offsets (the cell itself and its 4
-    neighbors), so the cost is k scans of the labeled cells regardless
-    of raster size — the proximity raster
-    ("distance to nearest road/POI") behind coverage scoring. The
-    oracle replays the identical rounds unrolled."""
+    """Raster distance transform: L1 (city-block) distance, up to 6,
+    from every cell of the 64x64 web-mercator grid to the nearest
+    occupied cell — the proximity raster ("distance to nearest
+    road/POI") behind coverage scoring. It is the result of k=6 rounds
+    of 4-neighbour scatter-min (each labeled cell offers dist+1 to its
+    in-grid neighbours, a groupBy keeps the minimum), computed in one
+    pass by :func:`_grid_l1_distance`: a shortest 4-neighbour path
+    between two cells of a rectangular grid never has to leave it, so
+    the rounds leave each cell its L1 distance to the nearest occupied
+    cell, which one explode of the offsets within L1 distance 6 and one
+    min give directly. The oracle replays the six rounds unrolled, so
+    it stays an independent check."""
     pts = _doc_points(spark, sf_dir)
     gx = F.least(F.floor((F.col("lon") + 180.0) / 360.0 * 64)
                  .cast("long"), F.lit(63))
@@ -6325,23 +6327,37 @@ def q_dist_transform(spark, sf_dir):
     merc = F.log(F.tan(math.pi / 4 + F.radians(lat_c) / 2))
     gy = F.least(F.floor((1.0 - merc / math.pi) / 2.0 * 64)
                  .cast("long"), F.lit(63))
-    dist = (pts.select(gx.alias("gx"), gy.alias("gy")).distinct()
-            .withColumn("d", F.lit(0)))
-    # (0, 0, +0) keeps each cell's own distance, so a round reads
-    # `dist` once and the plan grows linearly with the rounds
-    offs = F.array(*[F.struct(F.lit(ox).alias("ox"), F.lit(oy).alias("oy"),
-                              F.lit(od).alias("od"))
-                     for ox, oy, od in ((0, 0, 0), (1, 0, 1), (-1, 0, 1),
-                                        (0, 1, 1), (0, -1, 1))])
-    for _ in range(6):
-        dist = (dist.select("gx", "gy", "d", F.explode(offs).alias("k"))
-                .select((F.col("gx") + F.col("k.ox")).alias("gx"),
-                        (F.col("gy") + F.col("k.oy")).alias("gy"),
-                        (F.col("d") + F.col("k.od")).alias("d"))
-                .filter((F.col("gx") >= 0) & (F.col("gx") <= 63)
-                        & (F.col("gy") >= 0) & (F.col("gy") <= 63))
-                .groupBy("gx", "gy").agg(F.min("d").alias("d")))
-    return dist
+    # the distinct caps the explode at 85 x 4096 rows at any input size
+    return _grid_l1_distance(
+        pts.select(gx.alias("gx"), gy.alias("gy")).distinct())
+
+
+def _grid_l1_distance(occ: DataFrame) -> DataFrame:
+    """(gx, gy, d) for every cell of the n x n grid (n = 64) within L1
+    distance k (k = 6) of an occupied cell of ``occ`` (gx, gy), d that
+    distance: k rounds of 4-neighbour scatter-min in one explode and one
+    groupBy.
+
+    After k rounds a cell holds the length of the shortest in-grid
+    4-neighbour path of at most k steps from any occupied cell. The grid
+    is a rectangle, so a monotone staircase path between two in-grid
+    cells never leaves it and that length is their L1 distance. So each
+    occupied cell offers |ox| + |oy| to every in-grid cell at offset
+    (ox, oy) with |ox| + |oy| <= k (2k^2 + 2k + 1 offsets, generated
+    natively), and the minimum per cell is the k-round result."""
+    k, n = 6, 64
+    ax = F.abs(F.col("ox"))
+    return (occ.select("gx", "gy",
+                       F.explode(F.sequence(F.lit(-k), F.lit(k)))
+                       .alias("ox"))
+            .select("gx", "gy", "ox",
+                    F.explode(F.sequence(ax - k, k - ax)).alias("oy"))
+            .select((F.col("gx") + F.col("ox")).alias("gx"),
+                    (F.col("gy") + F.col("oy")).alias("gy"),
+                    (ax + F.abs(F.col("oy"))).alias("d"))
+            .filter((F.col("gx") >= 0) & (F.col("gx") < n)
+                    & (F.col("gy") >= 0) & (F.col("gy") < n))
+            .groupBy("gx", "gy").agg(F.min("d").alias("d")))
 
 
 def _dist_transform_sql():

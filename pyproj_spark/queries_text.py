@@ -84,7 +84,7 @@ SELECT doc_id, CAST(n_chars AS BIGINT) AS n_chars,
        round(CASE WHEN n_tokens > 0 THEN n_chars / CAST(n_tokens AS DOUBLE)
                   ELSE 0.0 END, 4) AS mean_token_len,
        CAST(len(regexp_extract_all(text,
-            '''(?:s|t|re|ve|m|ll|d)| ?[A-Za-z]+| ?[0-9]+| ?[^A-Za-z0-9\s]+'))
+            '''(?:s|t|re|ve|m|ll|d)| ?[A-Za-z]+| ?[0-9]+| ?[^A-Za-z0-9\\s]+'))
             AS BIGINT) AS n_bpe_tokens
 FROM t
 """

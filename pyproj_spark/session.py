@@ -20,6 +20,22 @@ them on the installed pyspark and py4j when those are the same
 releases. The workers must be able to import ``pyproj_spark`` (the
 driver's working directory or PYTHONPATH), as every engine UDF already
 requires.
+
+Building a plan is py4j traffic, and pyspark 4.1 adds to it: every
+Column function is wrapped in ``errors.utils._with_origin``, which asks
+the JVM for the active session and the
+``spark.sql.stackTracesInDataFrameContext`` conf, then sets and clears
+``PySparkCurrentOrigin`` around the call, so that an error can name the
+Python ``file:line`` that built the failing Column. Building
+``F.col("a") + F.lit(i)`` costs 27 py4j commands with it and 7 without.
+``get_spark`` sets ``spark.python.sql.dataFrameDebugging.enabled`` to
+false: building all 294 registered queries once at sf0.01 took 69 s
+instead of 94 s (build only, 4 vCPU, ``local[2]``, median of 3
+processes). The trade-off: an error keeps Spark's error class and
+message, and its DataFrame query context still names the operation,
+but no longer the Python call site. pyspark reads the conf once per
+process, at the first Column call made under an active session, so the
+first session of a process decides.
 """
 
 from __future__ import annotations
@@ -81,6 +97,7 @@ def get_spark(app_name: str = "pyproj_spark", cores: int | None = None,
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
         .config("spark.python.daemon.module", "pyproj_spark.worker_daemon")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     if java_opts:
         builder = builder.config("spark.driver.extraJavaOptions",

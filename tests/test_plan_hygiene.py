@@ -199,6 +199,13 @@ def test_dup_spans_broadcast_join(spark):
     assert "CartesianProduct" not in plan
 
 
+def test_pipeline_e2e_crosses_into_python_once(spark):
+    """Anchors are normalized and projected by one Arrow UDF (the
+    flagship's ``normalize_and_project``), not by two chained ones."""
+    from pyproj_spark.queries import q_pipeline_e2e
+    assert _plan(q_pipeline_e2e(spark, SF)).count("ArrowEvalPython") == 1
+
+
 @pytest.mark.parametrize("name", ["bloom_join", "dist_transform",
                                   "dup_spans", "site_template"])
 def test_build_fires_no_job_and_caches_nothing(spark, name):

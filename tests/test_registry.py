@@ -7,12 +7,14 @@ from __future__ import annotations
 
 import ast
 import collections
+import glob
 import os
+import warnings
 
 import pytest
 
-PKG = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(
-    __file__))), "pyproj_spark")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PKG = os.path.join(ROOT, "pyproj_spark")
 REGISTRIES = {"queries.py": "QUERIES", "queries_text.py": "QUERIES_TEXT"}
 
 
@@ -56,3 +58,24 @@ def test_no_name_bound_twice(fname):
 def test_registries_are_disjoint():
     keys = [set(_bindings(f, r)[0]) for f, r in REGISTRIES.items()]
     assert sorted(keys[0] & keys[1]) == []
+
+
+def test_sources_compile_without_warnings():
+    """An invalid escape such as ``"\\s"`` in a non-raw string warns on
+    every import (DeprecationWarning, SyntaxWarning from Python 3.12)
+    and is meant to become a SyntaxError."""
+    paths = sorted(glob.glob(os.path.join(PKG, "**", "*.py"), recursive=True)
+                   + glob.glob(os.path.join(ROOT, "tools", "**", "*.py"),
+                               recursive=True))
+    assert len(paths) > 10
+    bad = []
+    for path in paths:
+        with open(path) as f:
+            src = f.read()
+        with warnings.catch_warnings():
+            warnings.simplefilter("error")
+            try:
+                compile(src, path, "exec")
+            except SyntaxError as e:
+                bad.append(f"{os.path.relpath(path, ROOT)}: {e}")
+    assert bad == []
