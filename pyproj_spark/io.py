@@ -27,10 +27,17 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 
+def session_memo(spark: SparkSession, key, make):
+    """``make()``, built once per (SparkSession, key) and kept on the
+    session object. For plan-side values only: relations and small
+    driver-built tables, never rows or results."""
+    per_session = spark.__dict__.setdefault("_memo", {})
+    value = per_session.get(key)
+    if value is None:
+        value = per_session[key] = make()
+    return value
+
+
 def read_parquet_cached(spark: SparkSession, path: str) -> DataFrame:
-    per_session = spark.__dict__.setdefault("_parquet_memo", {})
-    key = os.path.abspath(path)
-    df = per_session.get(key)
-    if df is None:
-        df = per_session[key] = spark.read.parquet(path)
-    return df
+    path = os.path.abspath(path)
+    return session_memo(spark, path, lambda: spark.read.parquet(path))

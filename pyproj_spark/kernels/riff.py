@@ -8,7 +8,7 @@ surface real: audio sample extraction (PCM WAV), video frame sampling
 baseline-JPEG decoder). Matching fixture ENCODERS synthesize
 deterministic bitstreams for tests and oracle queries. Compressed
 audio (MP3/AAC) and inter-frame video codecs (H.264 …) genuinely need
-external libraries and stay stubbed in ``decode_features``.
+external libraries and are not decoded.
 """
 
 from __future__ import annotations

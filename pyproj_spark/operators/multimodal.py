@@ -1,43 +1,82 @@
 """Multimodal column plumbing: opaque binary blobs + typed metadata.
 
 Images/audio/video are carried as ``binary`` columns with typed
-metadata; decode / feature-extract run as Arrow-batched ``mapInPandas``
-over the binary column. Container-header parsing (format + pixel
-dimensions for PNG/GIF/BMP/JPEG) is REAL — implemented from the public
-container specs over raw bytes — and PNG pixel decode is REAL too
-(stdlib zlib IDAT inflate + scanline unfilter, ``decode_png``), as is
-baseline JPEG pixel decode (ITU-T T.81 Huffman + IDCT implemented in
-``kernels/jpeg.py``, surfaced here via ``jpeg_stats``). Only
-audio/video decode remains stubbed (``decode_features`` — those codecs
-genuinely need external libraries absent from this container); the
-Spark-side plumbing (schema, batch shape, partition behavior) is real
-and tested either way.
+metadata; decode / feature-extract run as one Arrow-batched
+``mapInArrow`` stage per operator (``map_rows``) over the binary
+column. Every decode is REAL, implemented from the public specs over
+raw bytes with stdlib + numpy only: container headers (format + pixel
+dimensions for PNG/GIF/BMP/JPEG), PNG pixels (zlib IDAT inflate +
+scanline unfilter, ``decode_png``), baseline and progressive JPEG
+(ITU-T T.81 Huffman + IDCT, ``kernels/jpeg.py``), PCM WAV audio and
+AVI/MJPG video frames (``kernels/riff.py``). Compressed audio
+(MP3/AAC) and inter-frame video codecs (H.264 ...) are out of scope.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
+import functools
+from collections.abc import Callable, Iterable, Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def binary_meta(df: DataFrame, bin_col: str = "payload") -> DataFrame:
-    """Native metadata over a binary column: size + magic prefix hex."""
-    return df.select(
-        "url",
-        F.length(F.col(bin_col)).cast("long").alias("n_bytes"),
-        F.hex(F.substring(F.col(bin_col), 1, 4)).alias("magic_hex"),
-        F.md5(F.col(bin_col)).alias("content_md5"),
-    )
+@functools.cache
+def _schemas(ddl: str):
+    """(Spark StructType, Arrow schema) of a DDL string, parsed once per
+    process."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+    struct = _parse_datatype_string(ddl)
+    return struct, to_arrow_schema(struct)
+
+
+def map_rows(df: DataFrame, cols: Sequence[str], schema: str,
+             fn: Callable[..., Iterable[tuple]]) -> DataFrame:
+    """Map each row of ``df[cols]`` through the plain Python function
+    ``fn(*values)``, which returns zero or more output tuples in the
+    column order of ``schema``, as one ``mapInArrow`` stage. ``schema``
+    is the stage's only declaration of its output: each Arrow batch is
+    built straight from it."""
+    struct, arrow = _schemas(schema)
+
+    def _map(batches):
+        import pyarrow as pa
+        for batch in batches:
+            out = [row for vals in zip(*(c.to_pylist()
+                                         for c in batch.columns))
+                   for row in fn(*vals)]
+            cols_out = zip(*out) if out else [()] * len(arrow)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(c, f.type) for c, f in zip(cols_out, arrow)],
+                schema=arrow)
+
+    return df.select(*cols).mapInArrow(_map, struct)
+
+
+def _decode_rows(df: DataFrame, bin_col: str, schema: str,
+                 decode: Callable[[str, bytes], Iterable[tuple]]
+                 ) -> DataFrame:
+    """``map_rows`` over ``(url, bin_col)`` with the decoders' shared
+    decode-or-skip policy: a NULL payload, or a blob whose decode raises
+    ValueError/NotImplementedError, yields no rows. A blob's rows count
+    only if its whole decode succeeds."""
+
+    def rows(url, payload):
+        if payload is None:
+            return ()
+        try:
+            return list(decode(url, payload))
+        except (ValueError, NotImplementedError):
+            return ()
+
+    return map_rows(df, ["url", bin_col], schema, rows)
 
 
 def _parse_image_header(b: bytes):
     """(format, width, height) from raw container headers — REAL
-    parsing, no image library needed (only the pixel decode is stubbed):
-    PNG IHDR, GIF logical screen, BMP info header, JPEG SOF scan."""
+    parsing, no image library needed: PNG IHDR, GIF logical screen, BMP
+    info header, JPEG SOF scan."""
     import struct
     if b is None or len(b) < 10:
         return None, None, None
@@ -77,30 +116,20 @@ IMAGE_META_SCHEMA = ("url string, format string, width int, height int, "
 
 
 def image_meta(df: DataFrame, bin_col: str = "payload") -> DataFrame:
-    """Image container metadata over a binary column via Arrow-batched
-    mapInPandas: format + pixel dimensions parsed from the raw header
-    bytes (PNG/GIF/BMP/JPEG). The per-row byte walk is genuinely
-    irregular (JPEG segment scan), so it runs as Python inside the
-    Arrow batch — a few bytes per row, not a pixel decode."""
-
+    """Image container metadata over a binary column: format + pixel
+    dimensions parsed from the raw header bytes (PNG/GIF/BMP/JPEG). The
+    per-row byte walk is genuinely irregular (JPEG segment scan), so it
+    runs as Python inside the Arrow batch — a few bytes per row, not a
+    pixel decode. Every row is kept: an unparsable or NULL payload gets
+    NULL metadata."""
     from pyproj_spark.kernels.jpeg import exif_orientation
 
-    def _meta(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            parsed = []
-            for u, b in zip(pdf["url"], pdf[bin_col]):
-                fmt, w, h = _parse_image_header(b)
-                orient = exif_orientation(bytes(b)) \
-                    if fmt == "jpeg" else None
-                parsed.append((u, fmt, w, h,
-                               len(b) if b is not None else 0, orient))
-            yield pd.DataFrame(
-                parsed, columns=["url", "format", "width", "height",
-                                 "n_bytes", "orientation"]).astype(
-                {"width": "Int32", "height": "Int32", "n_bytes": "int64",
-                 "orientation": "Int32"})
+    def meta(url, b):
+        fmt, w, h = _parse_image_header(b)
+        orient = exif_orientation(b) if fmt == "jpeg" else None
+        return [(url, fmt, w, h, len(b) if b is not None else 0, orient)]
 
-    return df.select("url", bin_col).mapInPandas(_meta, IMAGE_META_SCHEMA)
+    return map_rows(df, ["url", bin_col], IMAGE_META_SCHEMA, meta)
 
 
 def decode_png(b: bytes):
@@ -185,29 +214,20 @@ PNG_STATS_SCHEMA = ("url string, width int, height int, n_channels int, "
                     "mean_luma double")
 
 
+def _pixel_stats(decode):
+    def stats(url, b):
+        px = decode(b)
+        yield url, px.shape[1], px.shape[0], px.shape[2], float(px.mean())
+    return stats
+
+
 def png_stats(df: DataFrame, bin_col: str = "payload") -> DataFrame:
     """Real pixel-level image features over a binary column: decode each
     PNG (decode_png above) inside Arrow batches and emit dimensions +
-    mean pixel value across all channels. This is the decode slot that
-    was previously stubbed; rows that fail to decode are dropped."""
-
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for u, b in zip(pdf["url"], pdf[bin_col]):
-                try:
-                    px = decode_png(bytes(b))
-                except (ValueError, NotImplementedError):
-                    continue
-                rows.append((u, px.shape[1], px.shape[0], px.shape[2],
-                             float(px.mean())))
-            yield pd.DataFrame(
-                rows, columns=["url", "width", "height", "n_channels",
-                               "mean_luma"]).astype(
-                {"width": "int32", "height": "int32",
-                 "n_channels": "int32", "mean_luma": "float64"})
-
-    return df.select("url", bin_col).mapInPandas(_stats, PNG_STATS_SCHEMA)
+    mean pixel value across all channels. Rows that fail to decode are
+    dropped."""
+    return _decode_rows(df, bin_col, PNG_STATS_SCHEMA,
+                        _pixel_stats(decode_png))
 
 
 def jpeg_stats(df: DataFrame, bin_col: str = "payload") -> DataFrame:
@@ -216,24 +236,8 @@ def jpeg_stats(df: DataFrame, bin_col: str = "payload") -> DataFrame:
     inside Arrow batches, emitting dimensions + mean pixel value. Rows
     that fail to decode (or non-baseline variants) are dropped."""
     from pyproj_spark.kernels.jpeg import decode_jpeg
-
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for u, b in zip(pdf["url"], pdf[bin_col]):
-                try:
-                    px = decode_jpeg(bytes(b))
-                except (ValueError, NotImplementedError):
-                    continue
-                rows.append((u, px.shape[1], px.shape[0], px.shape[2],
-                             float(px.mean())))
-            yield pd.DataFrame(
-                rows, columns=["url", "width", "height", "n_channels",
-                               "mean_luma"]).astype(
-                {"width": "int32", "height": "int32",
-                 "n_channels": "int32", "mean_luma": "float64"})
-
-    return df.select("url", bin_col).mapInPandas(_stats, PNG_STATS_SCHEMA)
+    return _decode_rows(df, bin_col, PNG_STATS_SCHEMA,
+                        _pixel_stats(decode_jpeg))
 
 
 WAV_SCHEMA = ("url string, sample_rate int, n_samples long, "
@@ -250,28 +254,14 @@ def wav_features(df: DataFrame, bin_col: str = "payload") -> DataFrame:
 
     from pyproj_spark.kernels.riff import decode_wav
 
-    def _feat(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for u, b in zip(pdf["url"], pdf[bin_col]):
-                try:
-                    s, rate = decode_wav(bytes(b))
-                except (ValueError, NotImplementedError):
-                    continue
-                x = s.astype(np.float64)
-                rows.append((u, rate, s.shape[0], s.shape[1],
-                             s.shape[0] / rate,
-                             float(np.sqrt((x * x).mean())),
-                             int(np.abs(s).max(initial=0))))
-            yield pd.DataFrame(
-                rows, columns=["url", "sample_rate", "n_samples",
-                               "n_channels", "duration_s", "rms",
-                               "peak"]).astype(
-                {"sample_rate": "int32", "n_samples": "int64",
-                 "n_channels": "int32", "duration_s": "float64",
-                 "rms": "float64", "peak": "int32"})
+    def feat(url, b):
+        s, rate = decode_wav(b)
+        x = s.astype(np.float64)
+        yield (url, rate, s.shape[0], s.shape[1], s.shape[0] / rate,
+               float(np.sqrt((x * x).mean())),
+               int(np.abs(s).max(initial=0)))
 
-    return df.select("url", bin_col).mapInPandas(_feat, WAV_SCHEMA)
+    return _decode_rows(df, bin_col, WAV_SCHEMA, feat)
 
 
 FRAME_SCHEMA = ("url string, frame_idx int, width int, height int, "
@@ -283,35 +273,19 @@ def video_frame_sample(df: DataFrame, bin_col: str = "payload",
     """Real video frame sampling over a binary column: parse the AVI
     container (kernels/riff.py avi_frames), keep every ``every_k``-th
     frame, and decode each kept MJPG frame with the baseline-JPEG
-    decoder — one output row per sampled frame. Undecodable rows and
-    frames are dropped."""
+    decoder — one output row per sampled frame. A video whose container
+    or any sampled frame fails to decode is dropped."""
     from pyproj_spark.kernels.jpeg import decode_jpeg
     from pyproj_spark.kernels.riff import avi_frames
 
-    def _sample(batches: Iterator[pd.DataFrame]
-                ) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for u, b in zip(pdf["url"], pdf[bin_col]):
-                try:
-                    frames, _fps = avi_frames(bytes(b))
-                except ValueError:
-                    continue
-                for idx in range(0, len(frames), every_k):
-                    try:
-                        px = decode_jpeg(frames[idx])
-                    except (ValueError, NotImplementedError):
-                        continue
-                    rows.append((u, idx, px.shape[1], px.shape[0],
-                                 px.shape[2], float(px.mean())))
-            yield pd.DataFrame(
-                rows, columns=["url", "frame_idx", "width", "height",
-                               "n_channels", "mean_luma"]).astype(
-                {"frame_idx": "int32", "width": "int32",
-                 "height": "int32", "n_channels": "int32",
-                 "mean_luma": "float64"})
+    def sample(url, b):
+        frames, _fps = avi_frames(b)
+        for idx in range(0, len(frames), every_k):
+            px = decode_jpeg(frames[idx])
+            yield (url, idx, px.shape[1], px.shape[0], px.shape[2],
+                   float(px.mean()))
 
-    return df.select("url", bin_col).mapInPandas(_sample, FRAME_SCHEMA)
+    return _decode_rows(df, bin_col, FRAME_SCHEMA, sample)
 
 
 def resize_nearest(px, out_h: int, out_w: int):
@@ -375,68 +349,13 @@ def image_resize(df: DataFrame, bin_col: str = "payload",
     resizer = {"nearest": resize_nearest,
                "bilinear": resize_bilinear}[method]
 
-    def _resize(batches: Iterator[pd.DataFrame]
-                ) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for u, b in zip(pdf["url"], pdf[bin_col]):
-                raw = bytes(b)
-                try:
-                    px = decode_image(raw)
-                except (ValueError, NotImplementedError):
-                    continue
-                small = resizer(px, out_h, out_w)
-                rows.append((u, out_w, out_h, px.shape[2],
-                             float(np.asarray(small,
-                                              dtype=np.float64).mean())))
-            yield pd.DataFrame(
-                rows, columns=["url", "width", "height", "n_channels",
-                               "mean_luma"]).astype(
-                {"width": "int32", "height": "int32",
-                 "n_channels": "int32", "mean_luma": "float64"})
+    def resize(url, b):
+        px = decode_image(b)
+        small = resizer(px, out_h, out_w)
+        yield (url, out_w, out_h, px.shape[2],
+               float(np.asarray(small, dtype=np.float64).mean()))
 
-    return df.select("url", bin_col).mapInPandas(_resize,
-                                                 PNG_STATS_SCHEMA)
-
-
-DECODED_SCHEMA = ("url string, n_bytes long, width int, height int, "
-                  "n_channels int, feature_norm double")
-
-
-def decode_features(df: DataFrame, bin_col: str = "payload",
-                    deterministic_fake: bool = True) -> DataFrame:
-    """'Decode' binary blobs and extract features via mapInPandas.
-
-    STUB: the generic slot for codecs that need external libraries
-    (audio/video — PNG and baseline JPEG decode are real, see
-    png_stats/jpeg_stats). With deterministic_fake=True a reproducible
-    fake decode
-    (dimensions/features derived from blob bytes) exercises the full
-    Arrow batch path; with False it raises NotImplementedError exactly
-    where a cv2/PIL/ffmpeg call would go.
-    """
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not deterministic_fake:
-                raise NotImplementedError(
-                    "binary decode requires an image/audio library; "
-                    "plug cv2/PIL/torchaudio here")
-            blobs = pdf[bin_col]
-            n = blobs.str.len().astype("int64")
-            # deterministic fake: pretend the first bytes encode dims
-            first = blobs.str[0:1].apply(
-                lambda b: b[0] if len(b) else 0).astype("int32")
-            yield pd.DataFrame({
-                "url": pdf["url"],
-                "n_bytes": n,
-                "width": (first % 64 + 1).astype("int32"),
-                "height": ((first // 64) % 64 + 1).astype("int32"),
-                "n_channels": pd.Series([3] * len(pdf), dtype="int32"),
-                "feature_norm": (n % 1000) / 1000.0,
-            })
-
-    return df.select("url", bin_col).mapInPandas(_decode, DECODED_SCHEMA)
+    return _decode_rows(df, bin_col, PNG_STATS_SCHEMA, resize)
 
 
 def audio_tone_detect(df: DataFrame, bin_col: str = "payload",
@@ -453,31 +372,23 @@ def audio_tone_detect(df: DataFrame, bin_col: str = "payload",
 
     from pyproj_spark.kernels.riff import decode_wav
 
-    def _det(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for u, b in zip(pdf["url"], pdf[bin_col]):
-                try:
-                    s, rate = decode_wav(bytes(b))
-                except (ValueError, NotImplementedError):
-                    continue
-                x = s.astype(np.float64)[:, 0]
-                n = np.arange(x.shape[0])
-                es = []
-                for f in freqs:
-                    w = 2.0 * np.pi * f * n / rate
-                    es.append(float(np.dot(x, np.cos(w)) ** 2
-                                    + np.dot(x, np.sin(w)) ** 2))
-                best = int(np.argmax(es))  # first max = lowest freq
-                total = sum(es)
-                rows.append((u, int(freqs[best]),
-                             round(es[best] / total, 6)
-                             if total > 0 else 0.0))
-            yield pd.DataFrame(
-                rows, columns=["url", "detected_hz", "energy_share"])
+    def detect(url, b):
+        s, rate = decode_wav(b)
+        x = s.astype(np.float64)[:, 0]
+        n = np.arange(x.shape[0])
+        es = []
+        for f in freqs:
+            w = 2.0 * np.pi * f * n / rate
+            es.append(float(np.dot(x, np.cos(w)) ** 2
+                            + np.dot(x, np.sin(w)) ** 2))
+        best = int(np.argmax(es))  # first max = lowest freq
+        total = sum(es)
+        yield (url, int(freqs[best]),
+               round(es[best] / total, 6) if total > 0 else 0.0)
 
-    return df.mapInPandas(
-        _det, "url string, detected_hz int, energy_share double")
+    return _decode_rows(df, bin_col,
+                        "url string, detected_hz int, energy_share double",
+                        detect)
 
 
 def encode_png(arr) -> bytes:
@@ -515,35 +426,25 @@ def image_dhash(df: DataFrame, bin_col: str = "payload") -> DataFrame:
     downsample to 9x8 (src = i*src_dim // dst_dim, the image_resize
     convention), then 64 horizontal-gradient bits row-major as a
     '0'/'1' string. Resilient to re-encode/resize/brightness-scale —
-    the image twin of simhash for text. One mapInPandas stage;
+    the image twin of simhash for text. One mapInArrow stage;
     undecodable blobs are skipped like image_resize."""
     import numpy as np
 
-    def _dhash(batches: Iterator[pd.DataFrame]
-               ) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for u, b in zip(pdf["url"], pdf[bin_col]):
-                try:
-                    px = decode_image(bytes(b)).astype(np.int64)
-                except (ValueError, NotImplementedError):
-                    continue
-                h, w = px.shape[:2]
-                if px.shape[2] == 1:
-                    luma = px[:, :, 0]
-                else:
-                    luma = (299 * px[:, :, 0] + 587 * px[:, :, 1]
-                            + 114 * px[:, :, 2]) // 1000
-                xs = (np.arange(9) * w) // 9
-                ys = (np.arange(8) * h) // 8
-                g = luma[np.ix_(ys, xs)]
-                bits = (g[:, 1:] > g[:, :-1]).astype(np.uint8)
-                rows.append((u, "".join(
-                    "1" if v else "0" for v in bits.ravel())))
-            yield pd.DataFrame(rows, columns=["url", "dhash"])
+    def dhash(url, b):
+        px = decode_image(b).astype(np.int64)
+        h, w = px.shape[:2]
+        if px.shape[2] == 1:
+            luma = px[:, :, 0]
+        else:
+            luma = (299 * px[:, :, 0] + 587 * px[:, :, 1]
+                    + 114 * px[:, :, 2]) // 1000
+        xs = (np.arange(9) * w) // 9
+        ys = (np.arange(8) * h) // 8
+        g = luma[np.ix_(ys, xs)]
+        bits = (g[:, 1:] > g[:, :-1]).astype(np.uint8)
+        yield url, "".join("1" if v else "0" for v in bits.ravel())
 
-    return df.select("url", bin_col).mapInPandas(
-        _dhash, "url string, dhash string")
+    return _decode_rows(df, bin_col, "url string, dhash string", dhash)
 
 
 def audio_fingerprint(df: DataFrame, bin_col: str = "payload",
@@ -555,34 +456,25 @@ def audio_fingerprint(df: DataFrame, bin_col: str = "payload",
     sum of squared samples, one bit per consecutive-frame energy
     rise. Gain-scaling leaves every comparison's sign unchanged, so
     the fingerprint is volume-invariant — the audio twin of
-    image_dhash. One mapInPandas stage; undecodable blobs skipped."""
+    image_dhash. One mapInArrow stage; undecodable blobs and clips
+    shorter than two frames are skipped."""
     import numpy as np
 
     from pyproj_spark.kernels.riff import decode_wav
 
-    def _fp(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for u, b in zip(pdf["url"], pdf[bin_col]):
-                try:
-                    samples, _rate = decode_wav(bytes(b))
-                except (ValueError, NotImplementedError):
-                    continue
-                s = np.asarray(samples, dtype=np.int64)
-                if s.ndim > 1:
-                    s = s[:, 0]
-                nf = len(s) // frame
-                if nf < 2:
-                    continue
-                e = (s[:nf * frame].reshape(nf, frame) ** 2).sum(axis=1)
-                bits = "".join("1" if e[k + 1] > e[k] else "0"
-                               for k in range(nf - 1))
-                rows.append((u, nf, bits))
-            yield pd.DataFrame(rows,
-                               columns=["url", "n_frames", "fp"])
+    def fingerprint(url, b):
+        samples, _rate = decode_wav(b)
+        s = np.asarray(samples, dtype=np.int64)
+        if s.ndim > 1:
+            s = s[:, 0]
+        nf = len(s) // frame
+        if nf >= 2:
+            e = (s[:nf * frame].reshape(nf, frame) ** 2).sum(axis=1)
+            yield url, nf, "".join("1" if e[k + 1] > e[k] else "0"
+                                   for k in range(nf - 1))
 
-    return df.select("url", bin_col).mapInPandas(
-        _fp, "url string, n_frames int, fp string")
+    return _decode_rows(df, bin_col, "url string, n_frames int, fp string",
+                        fingerprint)
 
 
 def sniff_mime(payload):

@@ -75,20 +75,18 @@ def _zone_edges_sql() -> str:
             + ") AS e(zone_id, x1, y1, x2, y2)")
 
 
-_ZONES_DF_CACHE: dict = {}
-
-
 def _zones_df(spark):
-    """The 5-zone dimension table. Memoized per SparkSession: every
-    zone-joining query used to pay a fresh createDataFrame (py4j
-    serialization) plus pip_join's ring collect; the table is a pure
-    function of the PIP_ZONES module constants, so one DataFrame per
-    session serves them all (and pip_join's on-DataFrame ring
-    broadcast then hits across queries too)."""
-    key = spark.sparkContext.applicationId
-    hit = _ZONES_DF_CACHE.get(key)
-    if hit is not None:
-        return hit
+    """The 5-zone dimension table, one DataFrame per SparkSession
+    (``io.session_memo``): every zone-joining query used to pay a fresh
+    createDataFrame (py4j serialization) plus pip_join's ring collect;
+    the table is a pure function of the PIP_ZONES module constants, so
+    one DataFrame per session serves them all (and pip_join's
+    on-DataFrame ring broadcast then hits across queries too)."""
+    from pyproj_spark.io import session_memo
+    return session_memo(spark, "zones_df", lambda: _make_zones_df(spark))
+
+
+def _make_zones_df(spark):
     from pyproj_spark.sources.zones import ZONE_SCHEMA
     import numpy as np
     rows = []
@@ -99,10 +97,7 @@ def _zones_df(spark):
         rows.append((zid, f"z{zid}",
                      [{"lon": float(a), "lat": float(b)} for a, b in ring],
                      cov))
-    df = spark.createDataFrame(rows, ZONE_SCHEMA)
-    _ZONES_DF_CACHE.clear()          # one live session at a time
-    _ZONES_DF_CACHE[key] = df
-    return df
+    return spark.createDataFrame(rows, ZONE_SCHEMA)
 
 
 # ------------------------------------------------------------ geo queries
@@ -4164,11 +4159,11 @@ def q_s2_pip(spark, sf_dir):
     # 17 s at sf0.1 for 2.9k ranges); the equi-join hashes once per
     # ancestor level and runs the exact test only on hash matches
     # (17 -> ~2.5 s).
-    rkey = (spark.sparkContext.applicationId, "s2pip_rdf")
-    if _ZONES_DF_CACHE.get(rkey) is None:
-        _ZONES_DF_CACHE[rkey] = spark.createDataFrame(
-            list(zr), "zone_id int, anc long, certain int")
-    rdf = F.broadcast(_ZONES_DF_CACHE[rkey])
+    from pyproj_spark.io import session_memo
+    rdf = F.broadcast(session_memo(
+        spark, "s2_pip_ranges",
+        lambda: spark.createDataFrame(
+            list(zr), "zone_id int, anc long, certain int")))
     anc = F.explode(F.array(*[
         s2cell.parent(F.col("cell"), lv) for lv in levels]))
     cands = (pts.withColumn("cell", cell)

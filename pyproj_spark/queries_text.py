@@ -9,6 +9,8 @@ Cross-engine determinism notes:
 
 from __future__ import annotations
 
+import functools
+
 import pandas as pd  # noqa: F401 — resolves pandas-UDF type hints
 
 from pyspark.sql import Window
@@ -463,50 +465,148 @@ SELECT id_a, rank, id_b, sim FROM ranked WHERE rank <= 3
 """
 
 
+# ------------------------------------------------ multimodal fixture blobs
+# Each decode query below synthesizes real container bytes per doc from
+# doc_id in one map_rows stage, then runs the gated decoder over them.
+# An encode that depends on doc_id only through a few residues is
+# memoized per Python worker; the gated decode still runs once per row.
+
+def _doc_urls(spark, sf_dir):
+    return _docs(spark, sf_dir).select(
+        F.col("doc_id").cast("string").alias("url"), "doc_id")
+
+
+def _with_blobs(docs, blob):
+    """``(url, payload)`` with ``payload = blob(doc_id)``. A fixture
+    that raises fails its task: no decode-or-skip here."""
+    from pyproj_spark.operators.multimodal import map_rows
+    return map_rows(docs, ["url", "doc_id"], "url string, payload binary",
+                    lambda url, d: [(url, blob(d))])
+
+
+def _rgb(d: int, w: int, h: int):
+    """The w x h RGB gradient every image fixture is drawn from."""
+    import numpy as np
+    x, y = np.meshgrid(np.arange(w), np.arange(h))
+    return np.stack([(x * 7 + d) % 256, (y * 13 + d * 3) % 256,
+                     (x + y) % 256], -1).astype(np.uint8)
+
+
+def _png_blob(d: int) -> bytes:
+    from pyproj_spark.operators.multimodal import encode_png
+    return encode_png(_rgb(d, d % 16 + 1, d % 12 + 1))
+
+
+def _blocks8(vals):
+    """Each value of a block grid blown up to a constant 8x8 block."""
+    import numpy as np
+    return np.repeat(np.repeat(vals, 8, 0), 8, 1).astype(np.uint8)
+
+
+@functools.cache
+def _baseline_jpeg(bw: int, bh: int, dmod: int) -> bytes:
+    import numpy as np
+
+    from pyproj_spark.kernels.jpeg import encode_jpeg
+    bx, by = np.meshgrid(np.arange(bw), np.arange(bh))
+    return encode_jpeg(_blocks8((bx * 29 + by * 31 + dmod * 17) % 256))
+
+
+def _jpeg_blob(d: int) -> bytes:
+    return _baseline_jpeg(d % 3 + 1, d % 2 + 1, d % 256)
+
+
+@functools.cache
+def _progressive_jpeg(bw: int, bh: int, dmod: int) -> bytes:
+    import numpy as np
+
+    from pyproj_spark.kernels.jpeg import encode_jpeg_progressive
+    bx, by = np.meshgrid(np.arange(bw), np.arange(bh))
+    return encode_jpeg_progressive(
+        _blocks8((bx * 37 + by * 41 + dmod * 13) % 256),
+        restart_interval=2)
+
+
+def _progressive_blob(d: int) -> bytes:
+    return _progressive_jpeg(d % 2 + 1, d % 3 + 1, d % 251)
+
+
+@functools.cache
+def _mjpg_frame(v: int) -> bytes:
+    import numpy as np
+
+    from pyproj_spark.kernels.jpeg import encode_jpeg
+    return encode_jpeg(np.full((16, 16), v, dtype=np.uint8))
+
+
+def _avi_blob(d: int) -> bytes:
+    from pyproj_spark.kernels.riff import encode_avi_mjpg
+    return encode_avi_mjpg([_mjpg_frame((f * 53 + d * 17) % 256)
+                            for f in range(d % 5 + 2)], fps=10.0)
+
+
+def _sawtooth_wav(d: int, n: int, step: int, mul: int, period: int
+                  ) -> bytes:
+    """n samples of ((i * step + d * mul) % period) - period // 2."""
+    import numpy as np
+
+    from pyproj_spark.kernels.riff import encode_wav
+    s = ((np.arange(n) * step + d * mul) % period) - period // 2
+    return encode_wav(s, rate=8000, bits=16)
+
+
+@functools.cache
+def _tone_wav(f: int) -> bytes:
+    import numpy as np
+
+    from pyproj_spark.kernels.riff import encode_wav
+    s = np.floor(20000.0 * np.sin(2.0 * np.pi * f * np.arange(256)
+                                  / 8000.0))
+    return encode_wav(s.astype(np.int64), rate=8000, bits=16)
+
+
+def _image_header_blob(d: int) -> bytes:
+    import struct
+    if d % 4 == 0:
+        # real JPEG header bytes: SOI + EXIF APP1 carrying orientation +
+        # SOF0 with the dims (header-parse + exif-walk both gated;
+        # alternating byte order)
+        from pyproj_spark.kernels.jpeg import _exif_app1
+        app1 = _exif_app1(d % 8 + 1, "<" if d % 8 < 4 else ">")
+        sof = (b"\xff\xc0" + struct.pack(
+            ">HBHHB", 11, 8, d % 768 + 1, d % 1024 + 1, 1)
+            + bytes([1, 0x11, 0]))
+        return b"\xff\xd8" + app1 + sof
+    return (b"\x89PNG\r\n\x1a\n" + struct.pack(">I", 13) + b"IHDR"
+            + struct.pack(">II", d % 1024 + 1, d % 768 + 1)
+            + b"\x08\x02\x00\x00\x00")
+
+
+def _resize_blob(d: int) -> bytes:
+    """PNG, BMP or grayscale GIF (all channels = (x*7 + d) % 256) by
+    d % 3, all drawn from the same gradient."""
+    from pyproj_spark.kernels.riff import encode_bmp, encode_gif
+    w, h = d % 16 + 1, d % 12 + 1
+    if d % 3 == 0:
+        return _png_blob(d)
+    if d % 3 == 1:
+        return encode_bmp(_rgb(d, w, h))
+    return encode_gif(_rgb(d, w, h)[:, :, 0])
+
+
 def q_image_meta(spark, sf_dir):
     """Multimodal image metadata, oracle-checked end to end: each doc
-    gets a REAL PNG header constructed from its id (mapInPandas), and
+    gets a REAL PNG or JPEG header constructed from its id, and
     image_meta parses format/width/height back from the raw bytes —
     the oracle recomputes the expected dimensions arithmetically, so
     the construct->parse round trip through genuine container bytes is
     driver-gated."""
-    import struct
-    from collections.abc import Iterator
-
     from pyproj_spark.operators.multimodal import image_meta
 
-    docs = _docs(spark, sf_dir).select(
-        F.col("doc_id").cast("string").alias("url"), "doc_id")
-
-    def _blob(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyproj_spark.kernels.jpeg import _exif_app1
-        for pdf in batches:
-            payload = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                if d % 4 == 0:
-                    # real JPEG header bytes: SOI + EXIF APP1 carrying
-                    # orientation + SOF0 with the dims (header-parse +
-                    # exif-walk both gated; alternating byte order)
-                    app1 = _exif_app1(d % 8 + 1,
-                                      "<" if d % 8 < 4 else ">")
-                    sof = (b"\xff\xc0" + struct.pack(
-                        ">HBHHB", 11, 8, d % 768 + 1, d % 1024 + 1, 1)
-                        + bytes([1, 0x11, 0]))
-                    payload.append(b"\xff\xd8" + app1 + sof)
-                else:
-                    payload.append(
-                        b"\x89PNG\r\n\x1a\n" + struct.pack(">I", 13)
-                        + b"IHDR"
-                        + struct.pack(">II", d % 1024 + 1, d % 768 + 1)
-                        + b"\x08\x02\x00\x00\x00")
-            yield pd.DataFrame({"url": pdf["url"], "payload": payload})
-
-    blobs = docs.mapInPandas(_blob, "url string, payload binary")
-    meta = image_meta(blobs, "payload")
-    return meta.select(F.col("url").cast("long").alias("doc_id"),
-                       "format", "width", "height", "n_bytes",
-                       "orientation")
+    blobs = _with_blobs(_doc_urls(spark, sf_dir), _image_header_blob)
+    return image_meta(blobs, "payload").select(
+        F.col("url").cast("long").alias("doc_id"),
+        "format", "width", "height", "n_bytes", "orientation")
 
 
 SQL_IMAGE_META = """
@@ -525,47 +625,14 @@ FROM documents
 def q_png_decode(spark, sf_dir):
     """REAL pixel-level multimodal decode, oracle-checked end to end:
     each doc gets a complete valid RGB PNG (deterministic gradient
-    pixels, zlib-compressed IDAT, CRC-correct chunks) synthesized in a
-    mapInPandas stage; png_stats then INFLATES AND UNFILTERS the actual
-    byte stream (operators/multimodal.py decode_png) and reports
-    dimensions + mean pixel value, which the DuckDB oracle recomputes
-    arithmetically from the same gradient formula. This replaces the
-    former rows-only decode stub — only JPEG/audio/video decode remains
-    stubbed (codec libraries absent from the container)."""
-    import struct
-    import zlib
-    from collections.abc import Iterator
-
+    pixels, zlib-compressed IDAT, CRC-correct chunks); png_stats then
+    INFLATES AND UNFILTERS the actual byte stream
+    (operators/multimodal.py decode_png) and reports dimensions + mean
+    pixel value, which the DuckDB oracle recomputes arithmetically from
+    the same gradient formula."""
     from pyproj_spark.operators.multimodal import png_stats
 
-    docs = _spread(_docs(spark, sf_dir).select(
-        F.col("doc_id").cast("string").alias("url"), "doc_id"))
-
-    def _png(d: int) -> bytes:
-        w, h = d % 16 + 1, d % 12 + 1
-        rows = bytearray()
-        for y in range(h):
-            rows.append(0)  # filter: None
-            for x in range(w):
-                rows += bytes(((x * 7 + d) % 256, (y * 13 + d * 3) % 256,
-                               (x + y) % 256))
-
-        def chunk(t: bytes, data: bytes) -> bytes:
-            return (struct.pack(">I", len(data)) + t + data
-                    + struct.pack(">I", zlib.crc32(t + data) & 0xFFFFFFFF))
-
-        ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
-        return (b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-                + chunk(b"IDAT", zlib.compress(bytes(rows)))
-                + chunk(b"IEND", b""))
-
-    def _blob(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame({
-                "url": pdf["url"],
-                "payload": [_png(int(d)) for d in pdf["doc_id"]]})
-
-    blobs = docs.mapInPandas(_blob, "url string, payload binary")
+    blobs = _with_blobs(_doc_urls(spark, sf_dir), _png_blob)
     return png_stats(blobs, "payload").select(
         F.col("url").cast("long").alias("doc_id"),
         "width", "height", "n_channels", "mean_luma")
@@ -599,47 +666,16 @@ def q_jpeg_decode(spark, sf_dir):
     """REAL baseline-JPEG decode, oracle-checked end to end: each doc
     gets a complete valid grayscale JFIF JPEG (per-8x8-block constant
     values from a deterministic formula, all-ones quantization so the
-    DC path is exact) synthesized in a mapInPandas stage via the
-    kernels/jpeg.py ENCODER; jpeg_stats then runs the full DECODER —
-    marker parse, Huffman entropy decode, dequantize, IDCT — and the
-    DuckDB oracle recomputes mean luma arithmetically from the same
-    block formula. Constant blocks make the lossy DCT path bit-exact
-    (only the DC coefficient is nonzero and quant=1 keeps it integer),
-    so this is a value-hash gate over a genuinely decoded bitstream."""
-    from collections.abc import Iterator
-
-    import numpy as np
-
+    DC path is exact) from the kernels/jpeg.py ENCODER; jpeg_stats then
+    runs the full DECODER — marker parse, Huffman entropy decode,
+    dequantize, IDCT — and the DuckDB oracle recomputes mean luma
+    arithmetically from the same block formula. Constant blocks make
+    the lossy DCT path bit-exact (only the DC coefficient is nonzero
+    and quant=1 keeps it integer), so this is a value-hash gate over a
+    genuinely decoded bitstream."""
     from pyproj_spark.operators.multimodal import jpeg_stats
 
-    docs = _spread(_docs(spark, sf_dir).select(
-        F.col("doc_id").cast("string").alias("url"), "doc_id"))
-
-    def _blob(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyproj_spark.kernels.jpeg import encode_jpeg
-        # fixture-encode memoization (executor-side dict): the block
-        # grid depends on d only through (d%3, d%2, d%256), so there
-        # are <= 768 distinct images; the gated DECODE still runs once
-        # per row
-        cache: dict = {}
-
-        def _jpeg(d: int) -> bytes:
-            key = (d % 3 + 1, d % 2 + 1, d % 256)
-            if key not in cache:
-                bw, bh, dmod = key
-                bx, by = np.meshgrid(np.arange(bw), np.arange(bh))
-                vals = (bx * 29 + by * 31 + dmod * 17) % 256
-                img = np.repeat(np.repeat(vals, 8, 0), 8, 1) \
-                    .astype(np.uint8)
-                cache[key] = encode_jpeg(img)
-            return cache[key]
-
-        for pdf in batches:
-            yield pd.DataFrame({
-                "url": pdf["url"],
-                "payload": [_jpeg(int(d)) for d in pdf["doc_id"]]})
-
-    blobs = docs.mapInPandas(_blob, "url string, payload binary")
+    blobs = _with_blobs(_spread(_doc_urls(spark, sf_dir)), _jpeg_blob)
     return jpeg_stats(blobs, "payload").select(
         F.col("url").cast("long").alias("doc_id"),
         "width", "height", "n_channels", "mean_luma")
@@ -673,28 +709,10 @@ def q_wav_features(spark, sf_dir):
     wav_features then parses the RIFF container and decodes the raw
     PCM, and the DuckDB oracle recomputes RMS/peak/duration
     arithmetically from the same sample formula."""
-    from collections.abc import Iterator
-
-    import numpy as np
-
     from pyproj_spark.operators.multimodal import wav_features
 
-    docs = _docs(spark, sf_dir).select(
-        F.col("doc_id").cast("string").alias("url"), "doc_id")
-
-    def _wav(d: int) -> bytes:
-        from pyproj_spark.kernels.riff import encode_wav
-        n = d % 50 + 20
-        s = ((np.arange(n) * 37 + d * 11) % 200) - 100
-        return encode_wav(s, rate=8000, bits=16)
-
-    def _blob(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame({
-                "url": pdf["url"],
-                "payload": [_wav(int(d)) for d in pdf["doc_id"]]})
-
-    blobs = docs.mapInPandas(_blob, "url string, payload binary")
+    blobs = _with_blobs(_doc_urls(spark, sf_dir), lambda d: _sawtooth_wav(
+        d, n=d % 50 + 20, step=37, mul=11, period=200))
     return wav_features(blobs, "payload").select(
         F.col("url").cast("long").alias("doc_id"),
         "sample_rate", "n_samples", "n_channels",
@@ -730,40 +748,9 @@ def q_frame_sample(spark, sf_dir):
     frame, and Huffman+IDCT-decodes each kept frame. The DuckDB oracle
     recomputes the sampled frame grid and per-frame mean arithmetically
     from the same formula."""
-    from collections.abc import Iterator
-
-    import numpy as np
-
     from pyproj_spark.operators.multimodal import video_frame_sample
 
-    docs = _spread(_docs(spark, sf_dir).select(
-        F.col("doc_id").cast("string").alias("url"), "doc_id"))
-
-    def _blob(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyproj_spark.kernels.jpeg import encode_jpeg
-        from pyproj_spark.kernels.riff import encode_avi_mjpg
-        # fixture-encode memoization (executor-side dict): only 256
-        # distinct constant frames exist; the gated DECODE still runs
-        # per sampled frame
-        cache: dict = {}
-
-        def _frame(v: int) -> bytes:
-            if v not in cache:
-                cache[v] = encode_jpeg(
-                    np.full((16, 16), v, dtype=np.uint8))
-            return cache[v]
-
-        def _avi(d: int) -> bytes:
-            frames = [_frame((f * 53 + d * 17) % 256)
-                      for f in range(d % 5 + 2)]
-            return encode_avi_mjpg(frames, fps=10.0)
-
-        for pdf in batches:
-            yield pd.DataFrame({
-                "url": pdf["url"],
-                "payload": [_avi(int(d)) for d in pdf["doc_id"]]})
-
-    blobs = docs.mapInPandas(_blob, "url string, payload binary")
+    blobs = _with_blobs(_spread(_doc_urls(spark, sf_dir)), _avi_blob)
     return video_frame_sample(blobs, "payload", every_k=2).select(
         F.col("url").cast("long").alias("doc_id"),
         "frame_idx", "width", "height", "n_channels", "mean_luma")
@@ -795,56 +782,9 @@ def q_image_resize(spark, sf_dir):
     the DuckDB oracle recomputes the sampled pixel grid arithmetically
     — gating the normalize-to-fixed-shape step a training pipeline
     runs before tensorization."""
-    import struct
-    import zlib
-    from collections.abc import Iterator
-
-    import numpy as np
-
     from pyproj_spark.operators.multimodal import image_resize
 
-    docs = _spread(_docs(spark, sf_dir).select(
-        F.col("doc_id").cast("string").alias("url"), "doc_id"))
-
-    def _rgb(d: int, w: int, h: int) -> "np.ndarray":
-        x, y = np.meshgrid(np.arange(w), np.arange(h))
-        return np.stack([(x * 7 + d) % 256, (y * 13 + d * 3) % 256,
-                         (x + y) % 256], -1).astype(np.uint8)
-
-    def _png(d: int, w: int, h: int) -> bytes:
-        px = _rgb(d, w, h)
-        rows = bytearray()
-        for yy in range(h):
-            rows.append(0)
-            rows += px[yy].tobytes()
-
-        def chunk(t: bytes, data: bytes) -> bytes:
-            return (struct.pack(">I", len(data)) + t + data
-                    + struct.pack(">I", zlib.crc32(t + data) & 0xFFFFFFFF))
-
-        ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
-        return (b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-                + chunk(b"IDAT", zlib.compress(bytes(rows)))
-                + chunk(b"IEND", b""))
-
-    def _blob(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyproj_spark.kernels.riff import encode_bmp, encode_gif
-        for pdf in batches:
-            payload = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                w, h = d % 16 + 1, d % 12 + 1
-                if d % 3 == 0:
-                    payload.append(_png(d, w, h))
-                elif d % 3 == 1:
-                    payload.append(encode_bmp(_rgb(d, w, h)))
-                else:  # grayscale GIF: all channels = (x*7 + d) % 256
-                    x, _y = np.meshgrid(np.arange(w), np.arange(h))
-                    payload.append(encode_gif(
-                        ((x * 7 + d) % 256).astype(np.uint8)))
-            yield pd.DataFrame({"url": pdf["url"], "payload": payload})
-
-    blobs = docs.mapInPandas(_blob, "url string, payload binary")
+    blobs = _with_blobs(_spread(_doc_urls(spark, sf_dir)), _resize_blob)
     return image_resize(blobs, "payload", out_h=4, out_w=4,
                         method="nearest").select(
         F.col("url").cast("long").alias("doc_id"),
@@ -1000,7 +940,7 @@ def q_repetition(spark, sf_dir):
     its own list/window machinery."""
     from pyproj_spark.operators.textstats import repetition_features
 
-    docs = _spread(_docs(spark, sf_dir)).select("doc_id", "text")
+    docs = _docs(spark, sf_dir).select("doc_id", "text")
     return repetition_features(docs)
 
 
@@ -1246,37 +1186,10 @@ def q_jpeg_progressive(spark, sf_dir):
     decoder must walk all six scans (restart intervals included) to
     reconstruct the image; DuckDB recomputes the expected mean luma
     arithmetically from the same deterministic block formula."""
-    from collections.abc import Iterator
-
-    import numpy as np
-
     from pyproj_spark.operators.multimodal import jpeg_stats
 
-    docs = _spread(_docs(spark, sf_dir).select(
-        F.col("doc_id").cast("string").alias("url"), "doc_id"))
-
-    def _blob(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyproj_spark.kernels.jpeg import encode_jpeg_progressive
-        cache: dict = {}
-
-        def _jpeg(d: int) -> bytes:
-            key = (d % 2 + 1, d % 3 + 1, d % 251)
-            if key not in cache:
-                bw, bh, dmod = key
-                bx, by = np.meshgrid(np.arange(bw), np.arange(bh))
-                vals = (bx * 37 + by * 41 + dmod * 13) % 256
-                img = np.repeat(np.repeat(vals, 8, 0), 8, 1) \
-                    .astype(np.uint8)
-                cache[key] = encode_jpeg_progressive(
-                    img, restart_interval=2)
-            return cache[key]
-
-        for pdf in batches:
-            yield pd.DataFrame({
-                "url": pdf["url"],
-                "payload": [_jpeg(int(d)) for d in pdf["doc_id"]]})
-
-    blobs = docs.mapInPandas(_blob, "url string, payload binary")
+    blobs = _with_blobs(_spread(_doc_urls(spark, sf_dir)),
+                        _progressive_blob)
     return jpeg_stats(blobs, "payload").select(
         F.col("url").cast("long").alias("doc_id"),
         "width", "height", "n_channels", "mean_luma")
@@ -2217,7 +2130,7 @@ def q_entropy(spark, sf_dir):
     contributions round to nano units and sum as exact longs, so the
     per-doc aggregation order cannot leak into the gate."""
     from pyproj_spark.operators.lm import _tokens
-    toks = _tokens(_spread(_docs(spark, sf_dir)).select("doc_id", "text"),
+    toks = _tokens(_docs(spark, sf_dir).select("doc_id", "text"),
                    "text").select("doc_id", "token")
     tf = (toks.groupBy("doc_id", "token")
           .agg(F.count(F.lit(1)).alias("c")))
@@ -2989,7 +2902,7 @@ def q_canonical_docs(spark, sf_dir):
     representative. Returns (rep, canonical_id, cluster_size,
     best_len)."""
     from pyproj_spark.operators.cc import connected_components
-    docs = _spread(_docs(spark, sf_dir))
+    docs = _docs(spark, sf_dir)
     pairs = dedup.minhash_lsh_pairs(docs, num_hashes=8, bands=4,
                                     star_only=True)
     comp = connected_components(pairs)
@@ -3411,36 +3324,11 @@ def q_tone_detect(spark, sf_dir):
     recomputes the same Goertzel-style sums arithmetically from the
     sample formula. The detected frequency must match exactly and the
     dominant bin's energy share to 1e-6."""
-    from collections.abc import Iterator
-
-    import numpy as np
-
     from pyproj_spark.operators.multimodal import audio_tone_detect
 
-    docs = _spread(_docs(spark, sf_dir).select(
-        F.col("doc_id").cast("string").alias("url"), "doc_id"))
     freqs = (500, 1000, 2000, 3000)
-
-    def _blob(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyproj_spark.kernels.riff import encode_wav
-        cache: dict = {}
-
-        def _wav(d: int) -> bytes:
-            f = freqs[d % 4]
-            if f not in cache:
-                n = np.arange(256)
-                s = np.floor(20000.0
-                             * np.sin(2.0 * np.pi * f * n / 8000.0))
-                cache[f] = encode_wav(s.astype(np.int64), rate=8000,
-                                      bits=16)
-            return cache[f]
-
-        for pdf in batches:
-            yield pd.DataFrame({
-                "url": pdf["url"],
-                "payload": [_wav(int(d)) for d in pdf["doc_id"]]})
-
-    blobs = docs.mapInPandas(_blob, "url string, payload binary")
+    blobs = _with_blobs(_spread(_doc_urls(spark, sf_dir)),
+                        lambda d: _tone_wav(freqs[d % 4]))
     return audio_tone_detect(blobs).select(
         F.col("url").cast("long").alias("doc_id"),
         "detected_hz", "energy_share")
@@ -3639,7 +3527,7 @@ def q_bigram_lm(spark, sf_dir):
     shuffle); the corpus totals (T, V) are a 1-row aggregate joined by
     broadcast; per-doc accumulation sums round(logp·1e6) longs so the
     score is aggregation-order-independent."""
-    d = _spread(_docs(spark, sf_dir))
+    d = _docs(spark, sf_dir)
     toks = F.filter(F.split(F.lower(F.col("text")), "[^a-z0-9]+"),
                     lambda t: t != F.lit(""))
     bigrams = F.zip_with(
@@ -4950,55 +4838,19 @@ QUERIES_TEXT["jl_project"] = (q_jl_project, _jl_sql())
 def q_image_dhash(spark, sf_dir):
     """Near-duplicate IMAGE dedup via dHash (operators/multimodal.py::
     image_dhash): real PNG bytes synthesized per doc (18x12, the
-    image_meta pixel formulas), decoded through the REAL zlib
+    image_resize pixel formulas), decoded through the REAL zlib
     inflate+unfilter path, then integer luma -> 9x8 nearest sample ->
     64 gradient bits; per-hash duplicate counts close the dedup loop.
     The oracle recomputes luma/sampling/bits arithmetically from the
     pixel formulas — hash equality gates the whole decode+hash chain."""
-    import struct
-    import zlib
-    from collections.abc import Iterator
+    from pyproj_spark.operators.multimodal import encode_png, image_dhash
 
-    import numpy as np
-
-    from pyproj_spark.operators.multimodal import image_dhash
-
-    docs = _spread(_docs(spark, sf_dir).select(
-        F.col("doc_id").cast("string").alias("url"), "doc_id"))
-
-    W, H = 18, 12
-
-    def _png(d: int) -> bytes:
-        x, y = np.meshgrid(np.arange(W), np.arange(H))
-        px = np.stack([(x * 7 + d) % 256, (y * 13 + d * 3) % 256,
-                       (x + y) % 256], -1).astype(np.uint8)
-        rows = bytearray()
-        for yy in range(H):
-            rows.append(0)
-            rows += px[yy].tobytes()
-
-        def chunk(t: bytes, data: bytes) -> bytes:
-            return (struct.pack(">I", len(data)) + t + data
-                    + struct.pack(">I", zlib.crc32(t + data) & 0xFFFFFFFF))
-
-        ihdr = struct.pack(">IIBBBBB", W, H, 8, 2, 0, 0, 0)
-        return (b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-                + chunk(b"IDAT", zlib.compress(bytes(rows)))
-                + chunk(b"IEND", b""))
-
-    def _blob(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame({
-                "url": pdf["url"],
-                "payload": [_png(int(d)) for d in pdf["doc_id"]]})
-
-    blobs = docs.mapInPandas(_blob, "url string, payload binary")
-    hashed = image_dhash(blobs).withColumn("doc_id",
-                                           F.col("url").cast("long"))
-    from pyspark.sql import Window as W_
-    return hashed.select(
-        "doc_id", "dhash",
-        F.count(F.lit(1)).over(W_.partitionBy("dhash")).alias("n_same"))
+    blobs = _with_blobs(_spread(_doc_urls(spark, sf_dir)),
+                        lambda d: encode_png(_rgb(d, 18, 12)))
+    return image_dhash(blobs).select(
+        F.col("url").cast("long").alias("doc_id"), "dhash",
+        F.count(F.lit(1)).over(Window.partitionBy("dhash"))
+        .alias("n_same"))
 
 
 def _image_dhash_sql() -> str:
@@ -5043,28 +4895,10 @@ def q_audio_fp(spark, sf_dir):
     path, framed at 16 samples, exact integer energies, one bit per
     energy rise. The oracle recomputes frames/energies/bits from the
     sample formula — the decode+hash chain gates end to end."""
-    from collections.abc import Iterator
-
-    import numpy as np
-
     from pyproj_spark.operators.multimodal import audio_fingerprint
 
-    docs = _docs(spark, sf_dir).select(
-        F.col("doc_id").cast("string").alias("url"), "doc_id")
-
-    def _wav(d: int) -> bytes:
-        from pyproj_spark.kernels.riff import encode_wav
-        n = d % 120 + 64
-        s = ((np.arange(n) * 53 + d * 29) % 256) - 128
-        return encode_wav(s, rate=8000, bits=16)
-
-    def _blob(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame({
-                "url": pdf["url"],
-                "payload": [_wav(int(d)) for d in pdf["doc_id"]]})
-
-    blobs = docs.mapInPandas(_blob, "url string, payload binary")
+    blobs = _with_blobs(_doc_urls(spark, sf_dir), lambda d: _sawtooth_wav(
+        d, n=d % 120 + 64, step=53, mul=29, period=256))
     return audio_fingerprint(blobs).select(
         F.col("url").cast("long").alias("doc_id"), "n_frames", "fp")
 

@@ -215,6 +215,9 @@ def test_build_fires_no_job_and_caches_nothing(spark, name):
     from pyproj_spark.queries import QUERIES
     from pyproj_spark.queries_text import QUERIES_TEXT
     build = {**QUERIES, **QUERIES_TEXT}[name][0]
+    # the first read of a parquet table in a session fires a
+    # schema-inference job: open the session's source relations first
+    build(spark, SF)
     sc = spark.sparkContext
     spark.catalog.clearCache()
     group = f"build-only:{name}"
@@ -225,6 +228,18 @@ def test_build_fires_no_job_and_caches_nothing(spark, name):
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+@pytest.mark.parametrize("name", [
+    "image_meta", "png_decode", "jpeg_decode", "wav_features",
+    "frame_sample", "image_resize", "jpeg_progressive", "tone_detect",
+    "image_dhash", "audio_fp"])
+def test_multimodal_queries_map_over_arrow(spark, name):
+    """The fixture and decode stages run as mapInArrow, never through
+    pandas."""
+    from pyproj_spark.queries_text import QUERIES_TEXT
+    plan = _plan(QUERIES_TEXT[name][0](spark, SF))
+    assert "MapInArrow" in plan and "MapInPandas" not in plan
 
 
 @pytest.mark.parametrize("name", [
