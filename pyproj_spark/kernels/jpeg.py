@@ -29,6 +29,8 @@ import struct
 
 import numpy as np
 
+from pyproj_spark.kernels import decoder
+
 # ITU-T T.81 Figure A.6 zigzag order: zigzag index -> raster index
 ZIGZAG = np.array([
     0, 1, 8, 16, 9, 2, 3, 10, 17, 24, 32, 25, 18, 11, 4, 5,
@@ -178,6 +180,7 @@ def _extend(v: int, t: int) -> int:
     return v if v >= (1 << (t - 1)) else v - (1 << t) + 1
 
 
+@decoder
 def decode_jpeg(b: bytes) -> np.ndarray:
     """Decode a baseline (SOF0/1) or progressive (SOF2) JPEG to an
     (h, w, c) uint8 array (c = 1 for grayscale, 3 for YCbCr->RGB).

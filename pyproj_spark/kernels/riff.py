@@ -17,9 +17,12 @@ import struct
 
 import numpy as np
 
+from pyproj_spark.kernels import decoder
+
 # ------------------------------------------------------------------ WAV
 
 
+@decoder
 def decode_wav(b: bytes) -> tuple[np.ndarray, int]:
     """Decode a PCM WAV file to (samples, sample_rate); samples is an
     (n, channels) int32 array of the raw PCM values (8-bit unsigned
@@ -102,6 +105,7 @@ def encode_wav(samples: np.ndarray, rate: int = 16000,
 # ------------------------------------------------------------------ AVI
 
 
+@decoder
 def avi_frames(b: bytes) -> tuple[list[bytes], float]:
     """Parse an AVI container and return (frame_payloads, fps). Only
     the video stream's compressed chunks ('##dc') are returned, in
@@ -164,6 +168,7 @@ def encode_avi_mjpg(jpeg_frames: list[bytes], fps: float = 10.0
 
 # ------------------------------------------------------------------ BMP
 
+@decoder
 def decode_bmp(b: bytes) -> np.ndarray:
     """Decode an uncompressed 24/32-bit bottom-up BMP (BITMAPINFOHEADER)
     to an (h, w, 3) uint8 RGB array. Raises ValueError on malformed
@@ -213,7 +218,11 @@ def encode_bmp(pixels: np.ndarray) -> bytes:
 def _lzw_decode(min_code_size: int, data: bytes, max_pixels: int
                 ) -> list:
     """GIF-variant LZW decode (variable code width, clear/EOI codes,
-    MSB-in-LSB-first bit packing) — public GIF89a spec appendix."""
+    MSB-in-LSB-first bit packing) — public GIF89a spec appendix. The
+    minimum code size of 8-bit pixels is 2..8 (the code table starts
+    at 2 ** min_code_size entries)."""
+    if not 2 <= min_code_size <= 8:
+        raise ValueError(f"bad GIF LZW minimum code size {min_code_size}")
     clear = 1 << min_code_size
     eoi = clear + 1
     out: list = []
@@ -302,6 +311,7 @@ def _lzw_encode(min_code_size: int, values) -> bytes:
     return bytes(out)
 
 
+@decoder
 def decode_gif(b: bytes) -> np.ndarray:
     """Decode the FIRST frame of a GIF87a/89a to an (h, w, 3) uint8
     RGB array: logical-screen parse, global/local color table, real

@@ -1,7 +1,7 @@
 """General concave polygon ∩ polygon clipping with VERTEX output —
 the Weiler–Atherton / Greiner–Hormann traversal (both published:
-Weiler & Atherton 1977, Greiner & Hormann 1998) as a batched numpy
-kernel inside mapInPandas.
+Weiler & Atherton 1977, Greiner & Hormann 1998) as a numpy kernel run
+per candidate pair by one ``map_rows`` stage (``pyproj_spark/rows.py``).
 
 The graft's raster↔vector surface clips zone geometries to admin
 regions; Sutherland–Hodgman (functions/clip.py) only accepts CONVEX
@@ -25,7 +25,6 @@ vertex exactly on the other ring's edge, collinear overlapping edges
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 
 
 def _area2(ring: np.ndarray) -> float:
@@ -192,25 +191,20 @@ def clip_pair_stats(subject: np.ndarray, clip: np.ndarray) -> tuple:
 def clip_zones_exact(pairs, subj_col: str = "ring",
                      clip_col: str = "creg"):
     """Vertex-output clipping over candidate pairs: adds n_pieces /
-    n_vertices_out / area columns via one mapInPandas stage (no
+    n_vertices_out / area columns via one ``map_rows`` stage (no
     shuffle). ``pairs`` rows carry two array<struct<x,y>> columns."""
-    import pyspark.sql.types as T
+    from pyproj_spark.rows import map_rows
     base = [f for f in pairs.schema.fields
             if f.name not in (subj_col, clip_col)]
-    schema = T.StructType(base + [
-        T.StructField("n_pieces", T.IntegerType()),
-        T.StructField("n_vertices_out", T.IntegerType()),
-        T.StructField("area", T.DoubleType())])
+    schema = ", ".join(f"`{f.name}` {f.dataType.simpleString()}"
+                       for f in base)
+    schema += ", n_pieces int, n_vertices_out int, area double"
 
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                subj = np.array([(p["x"], p["y"]) for p in r[subj_col]])
-                cl = np.array([(p["x"], p["y"]) for p in r[clip_col]])
-                np_, nv, ar = clip_pair_stats(subj, cl)
-                rows.append([r[f.name] for f in base] + [np_, nv, ar])
-            yield pd.DataFrame(rows,
-                               columns=[f.name for f in schema.fields])
+    def run(*vals):
+        *keep, subj, cl = vals
+        return [(*keep, *clip_pair_stats(
+            np.array([(p["x"], p["y"]) for p in subj]),
+            np.array([(p["x"], p["y"]) for p in cl])))]
 
-    return pairs.mapInPandas(run, schema)
+    return map_rows(pairs, [f.name for f in base] + [subj_col, clip_col],
+                    schema, run)

@@ -10,7 +10,7 @@ bit-identical totals and the oracle can unroll the lattice in SQL.
 
 Execution shape (r6): tracks collapse to one array row per trajectory
 (``sort_array(collect_list(struct(seq, x, y)))`` — a regular hash
-aggregate with map-side partial aggregation), then ONE pandas-UDF
+aggregate with map-side partial aggregation), then ONE Arrow-UDF
 crossing runs the DP for a whole Arrow batch of trajectories at once,
 vectorized across trajectories with numpy (per length bucket). The
 previous shape — ``groupBy().applyInPandas`` with one Python call and
@@ -29,7 +29,6 @@ are driver literals (a route table would broadcast).
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd  # noqa: F401 — kept for callers' type hints
 import pyarrow as pa
 import pyarrow.compute as pc
 

@@ -9,8 +9,9 @@ Distributed shape (what must survive 100 TB):
   * candidate costs: one scan cross-joined against the broadcast
     segment table (at corpus scale the segment set is cell-prefiltered
     first, the pip_join/knn pattern, so the fan-out stays bounded);
-  * DP: applyInPandas per trajectory — state is steps x states
-    integers, bounded by the trajectory length, never corpus-sized;
+  * DP: one ``map_groups`` call per trajectory — state is steps x
+    states integers, bounded by the trajectory length, never
+    corpus-sized;
   * all costs are EXACT int64 (d^2 rounded once to 1e-10-degree^2
     units), so a SQL engine replays the full DP bit-for-bit.
 
@@ -24,9 +25,10 @@ columns) and SQL (ORDER BY cost, seg LIMIT 1).
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
+
+from pyproj_spark.rows import map_groups
 
 #: segment-switch penalty in the same 1e-10 deg^2 units as emissions
 LAMBDA = 2_000_000_000
@@ -54,58 +56,36 @@ def viterbi_match(pts: DataFrame, segs: DataFrame,
     """(traj_id, step, seg_id): the minimum-cost segment sequence per
     trajectory.
 
-    Execution shape (r6): the emission table collapses to one array row
-    per trajectory (sort_array(collect_list(struct(step, seg_id, em)))
-    — a hash aggregate with map-side partial agg) and the whole Arrow
-    batch of trajectories runs the DP in one pandas-UDF call. The old
-    groupBy().applyInPandas shape paid a pandas pivot + per-group
-    Python call per trajectory (~2 ms each), which dominated when AQE
-    coalesced the tiny shuffle to one task. Emission matrices are dense
-    (emission_costs is a cross join), so the sorted flat array reshapes
-    to the same steps x states matrix the pivot produced — identical
-    int64 DP, identical first-argmin tie-breaks."""
-    from pyspark.sql.functions import pandas_udf
+    Execution shape: the emission table collapses to one sorted array
+    row per trajectory (``map_groups``: a hash aggregate with map-side
+    partial agg) and each trajectory runs the DP in one Python call.
+    Emission matrices are dense (emission_costs is a cross join), so
+    the (step, seg_id)-sorted flat array reshapes to the steps x states
+    matrix — int64 DP, first-argmin tie-breaks."""
+    em = emission_costs(pts, segs).select(
+        F.col("traj_id").cast("long").alias("traj_id"),
+        F.col("step").cast("long").alias("step"),
+        F.col("seg_id").cast("int").alias("seg_id"), "em")
 
-    em = emission_costs(pts, segs)
-    arr = (em.groupBy("traj_id")
-           .agg(F.array_sort(F.collect_list(F.struct(
-               F.col("step").cast("long").alias("s"),
-               F.col("seg_id").cast("int").alias("g"),
-               F.col("em").alias("e")))).alias("_a"))
-           .select("traj_id",
-                   F.col("_a.s").alias("_steps"),
-                   F.col("_a.g").alias("_segs"),
-                   F.col("_a.e").alias("_ems")))
+    def _dp(traj, steps, seg_ids, ems):
+        steps = np.asarray(steps, np.int64)
+        seg_ids = np.asarray(seg_ids, np.int64)
+        ems = np.asarray(ems, np.int64)
+        n_seg = int(np.searchsorted(steps, steps[0], side="right"))
+        k_steps = len(steps) // n_seg
+        e = ems.reshape(k_steps, n_seg)      # rows: ascending step;
+        segs_sorted = seg_ids[:n_seg]        # cols: ascending seg
+        vs = [e[0].copy()]
+        for k in range(1, k_steps):
+            prev = vs[-1]
+            vs.append(e[k] + np.minimum(prev, prev.min() + lam))
+        path = np.empty(k_steps, dtype=np.int64)
+        path[-1] = int(np.argmin(vs[-1]))    # first min = low seg
+        for k in range(k_steps - 2, -1, -1):
+            cand = vs[k] + lam * (np.arange(n_seg) != path[k + 1])
+            path[k] = int(np.argmin(cand))
+        return [(traj, int(steps[i * n_seg]), int(segs_sorted[p]))
+                for i, p in enumerate(path)]
 
-    @pandas_udf("array<struct<step:long,seg_id:int>>")
-    def _dp(steps_s: pd.Series, segs_s: pd.Series,
-            ems_s: pd.Series) -> pd.Series:
-        out = []
-        for steps, seg_ids, ems in zip(steps_s, segs_s, ems_s):
-            steps = np.asarray(steps, np.int64)
-            seg_ids = np.asarray(seg_ids, np.int64)
-            ems = np.asarray(ems, np.int64)
-            n_seg = int(np.searchsorted(steps, steps[0], side="right"))
-            k_steps = len(steps) // n_seg
-            e = ems.reshape(k_steps, n_seg)      # rows: ascending step;
-            segs_sorted = seg_ids[:n_seg]        # cols: ascending seg
-            vs = [e[0].copy()]
-            for k in range(1, k_steps):
-                prev = vs[-1]
-                vs.append(e[k] + np.minimum(prev, prev.min() + lam))
-            path = np.empty(k_steps, dtype=np.int64)
-            path[-1] = int(np.argmin(vs[-1]))    # first min = low seg
-            for k in range(k_steps - 2, -1, -1):
-                cand = vs[k] + lam * (np.arange(n_seg) != path[k + 1])
-                path[k] = int(np.argmin(cand))
-            out.append([{"step": int(steps[i * n_seg]),
-                         "seg_id": int(segs_sorted[p])}
-                        for i, p in enumerate(path)])
-        return pd.Series(out)
-
-    return (arr.select("traj_id",
-                       F.explode(_dp("_steps", "_segs", "_ems"))
-                       .alias("_r"))
-            .select(F.col("traj_id").cast("long").alias("traj_id"),
-                    F.col("_r.step").alias("step"),
-                    F.col("_r.seg_id").alias("seg_id")))
+    return map_groups(em, ["traj_id"], ["step", "seg_id", "em"],
+                      "traj_id long, step long, seg_id int", _dp)

@@ -4,7 +4,7 @@
 The reference's ``Geod.line_length`` walks consecutive points in C
 (``pyproj/_geod.pyx:476-539``); distributed, the same dataflow is
 ``lead() over (partitionBy(line) orderBy(seq))`` -> per-segment Karney
-inverse (pandas UDF) -> ``groupBy(line).agg(sum)``. Catalyst handles
+inverse (Arrow UDF) -> ``groupBy(line).agg(sum)``. Catalyst handles
 partial aggregation; the only shuffle is the window's, reused by the
 final agg because the partition keys match.
 """
@@ -12,12 +12,12 @@ final agg because the partition keys match.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from pyproj_spark.functions.transform import geod_inverse, haversine_m
+from pyproj_spark.rows import map_groups
 
 
 def segment_lengths(points: DataFrame, line_col: str = "line_id",
@@ -55,44 +55,38 @@ def polygon_areas(points: DataFrame, poly_col: str = "poly_id",
     §2.2 G8 as a grouped DataFrame op): rows are ring vertices keyed by
     polygon id and vertex order; each group runs the Green's-theorem +
     Gauss-Legendre kernel (kernels/area.py, golden-tested against the
-    reference's values) once per polygon inside an Arrow batch via
-    applyInPandas. The cheap all-Catalyst spherical twin for in-plan
-    predicates is functions.transform.spherical_ring_area_m2."""
+    reference's values) once per polygon, its vertices in ``seq_col``
+    order (one ``map_groups`` stage). The cheap all-Catalyst spherical
+    twin for in-plan predicates is
+    functions.transform.spherical_ring_area_m2."""
     from pyproj_spark.kernels.geod import Geod
 
-    out_schema = f"{poly_col} long, area_m2 double, perimeter_m double"
+    geod = Geod(ellps=ellps)
 
-    def _area(pdf: pd.DataFrame) -> pd.DataFrame:
-        g = _GEOD_CACHE.setdefault(ellps, Geod(ellps=ellps))
-        pdf = pdf.sort_values(seq_col)
-        area, perim = g.polygon_area_perimeter(
-            pdf[lon_col].to_numpy(), pdf[lat_col].to_numpy())
-        return pd.DataFrame({poly_col: [pdf[poly_col].iloc[0]],
-                             "area_m2": [float(area)],
-                             "perimeter_m": [float(perim)]})
+    def _area(poly, _seqs, lons, lats):
+        area, perim = geod.polygon_area_perimeter(lons, lats)
+        return [(poly, float(area), float(perim))]
 
-    return points.groupBy(poly_col).applyInPandas(_area, out_schema)
-
-
-_GEOD_CACHE: dict = {}
+    return map_groups(
+        points, [poly_col], [seq_col, lon_col, lat_col],
+        f"{poly_col} long, area_m2 double, perimeter_m double", _area)
 
 
 def convex_hulls(df: DataFrame, group_col: str, lon_col: str = "lon",
                  lat_col: str = "lat") -> DataFrame:
     """Per-group planar convex hull (Andrew's monotone chain, 1979 —
     public): the footprint-estimation op (zone coverage outline,
-    cluster envelope). Sequential stack semantics route it to
-    applyInPandas per SURVEY §2.6's custom-operator rule — one
-    shuffle on the group key, numpy inside, hull size is O(sqrt of
-    points) in practice so the output stays tiny.
+    cluster envelope). Sequential stack semantics make it one
+    ``map_groups`` stage — one shuffle on the group key, the scan in
+    Python, hull size is O(sqrt of points) in practice so the output
+    stays tiny.
 
     Returns (group_col, hull) with hull = array<struct<lon, lat>> in
     counter-clockwise order starting from the lexicographically
     smallest vertex; degenerate groups (< 3 distinct points) return
     their distinct points sorted."""
-    def _hull(pdf: pd.DataFrame) -> pd.DataFrame:
-        pts = sorted(set(zip(pdf[lon_col], pdf[lat_col])))
-        g = pdf[group_col].iloc[0]
+    def _hull(g, lons, lats):
+        pts = sorted(set(zip(lons, lats)))
         if len(pts) < 3:
             hull = pts
         else:
@@ -109,15 +103,12 @@ def convex_hulls(df: DataFrame, group_col: str, lon_col: str = "lon",
             lower = half(pts)
             upper = half(reversed(pts))
             hull = lower[:-1] + upper[:-1]
-        return pd.DataFrame(
-            {group_col: [g],
-             "hull": [[{"lon": float(x), "lat": float(y)}
-                       for x, y in hull]]})
+        return [(g, [{"lon": float(x), "lat": float(y)}
+                     for x, y in hull])]
 
-    out_schema = (f"{group_col} long, "
-                  "hull array<struct<lon: double, lat: double>>")
-    return (df.select(group_col, lon_col, lat_col)
-            .groupBy(group_col).applyInPandas(_hull, out_schema))
+    return map_groups(df, [group_col], [lon_col, lat_col],
+                      f"{group_col} long, "
+                      "hull array<struct<lon: double, lat: double>>", _hull)
 
 
 def simplify_lines(df: DataFrame, group_col: str = "user_id",
@@ -127,8 +118,9 @@ def simplify_lines(df: DataFrame, group_col: str = "user_id",
     — the vector-tile reduction operator: per line, keep the minimal
     vertex subset whose chord deviation stays within eps. Lines are
     per-row-group small (a track, a ring) while the line COUNT is
-    corpus-scale, so the right Spark shape is applyInPandas per line
-    (one shuffle on the line key), the same contract as convex_hulls.
+    corpus-scale, so the right Spark shape is one ``map_groups`` call
+    per line (one shuffle on the line key), the same contract as
+    convex_hulls.
 
     Determinism: the split decision uses only +,-,*,/,sqrt (all
     IEEE-exact, no libm), with first-argmax tie-break — so an engine
@@ -136,14 +128,9 @@ def simplify_lines(df: DataFrame, group_col: str = "user_id",
     what the unrolled-split DuckDB oracle checks. Output: the kept
     (group, seq) vertex rows.
     """
-    from pyspark.sql.functions import pandas_udf
-
-    # r6 shape: one array row per line (hash agg with map-side partial
-    # aggregation) + ONE pandas-UDF call per Arrow batch of lines —
-    # the old per-group applyInPandas paid ~1 ms of pandas machinery
-    # per line, which dominated wall time on AQE-coalesced tiny
-    # stages. The split recursion below is byte-identical arithmetic.
-    def _dp_keep(xs: np.ndarray, ys: np.ndarray) -> np.ndarray:
+    def _kept(g, seqs, xs, ys):
+        xs = np.asarray(xs, np.float64)
+        ys = np.asarray(ys, np.float64)
         n = len(xs)
         keep = np.zeros(n, dtype=bool)
         keep[0] = keep[n - 1] = True
@@ -165,30 +152,14 @@ def simplify_lines(df: DataFrame, group_col: str = "user_id",
                 keep[k] = True
                 stack.append((i0, k))
                 stack.append((k, i1))
-        return keep
+        return [(g, s) for s, k in zip(seqs, keep) if k]
 
-    @pandas_udf("array<long>")
-    def _kept(seqs_s: pd.Series, xs_s: pd.Series,
-              ys_s: pd.Series) -> pd.Series:
-        out = []
-        for sq, xs, ys in zip(seqs_s, xs_s, ys_s):
-            xs = np.asarray(xs, np.float64)
-            ys = np.asarray(ys, np.float64)
-            keep = _dp_keep(xs, ys)
-            out.append(np.asarray(sq, np.int64)[keep])
-        return pd.Series(out)
-
-    pts = F.array_sort(F.collect_list(F.struct(
-        F.col(seq_col).cast("long").alias("s"),
-        F.col(x_col).cast("double").alias("x"),
-        F.col(y_col).cast("double").alias("y"))))
-    return (df.select(group_col, seq_col, x_col, y_col)
-            .groupBy(group_col).agg(pts.alias("_p"))
-            .select(group_col,
-                    F.explode(_kept(F.col("_p.s"), F.col("_p.x"),
-                                    F.col("_p.y"))).alias(seq_col))
-            .select(F.col(group_col).cast("long").alias(group_col),
-                    F.col(seq_col).cast("long").alias(seq_col)))
+    pts = df.select(F.col(group_col).cast("long").alias(group_col),
+                    F.col(seq_col).cast("long").alias(seq_col),
+                    F.col(x_col).cast("double").alias("_x"),
+                    F.col(y_col).cast("double").alias("_y"))
+    return map_groups(pts, [group_col], [seq_col, "_x", "_y"],
+                      f"{group_col} long, {seq_col} long", _kept)
 
 
 def resample_tracks(points: DataFrame, user_col: str = "user_id",

@@ -2,7 +2,7 @@
 
 Images/audio/video are carried as ``binary`` columns with typed
 metadata; decode / feature-extract run as one Arrow-batched
-``mapInArrow`` stage per operator (``map_rows``) over the binary
+``mapInArrow`` stage per operator (``rows.map_rows``) over the binary
 column. Every decode is REAL, implemented from the public specs over
 raw bytes with stdlib + numpy only: container headers (format + pixel
 dimensions for PNG/GIF/BMP/JPEG), PNG pixels (zlib IDAT inflate +
@@ -14,44 +14,13 @@ AVI/MJPG video frames (``kernels/riff.py``). Compressed audio
 
 from __future__ import annotations
 
-import functools
-from collections.abc import Callable, Iterable, Sequence
+from collections.abc import Callable, Iterable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-@functools.cache
-def _schemas(ddl: str):
-    """(Spark StructType, Arrow schema) of a DDL string, parsed once per
-    process."""
-    from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import _parse_datatype_string
-    struct = _parse_datatype_string(ddl)
-    return struct, to_arrow_schema(struct)
-
-
-def map_rows(df: DataFrame, cols: Sequence[str], schema: str,
-             fn: Callable[..., Iterable[tuple]]) -> DataFrame:
-    """Map each row of ``df[cols]`` through the plain Python function
-    ``fn(*values)``, which returns zero or more output tuples in the
-    column order of ``schema``, as one ``mapInArrow`` stage. ``schema``
-    is the stage's only declaration of its output: each Arrow batch is
-    built straight from it."""
-    struct, arrow = _schemas(schema)
-
-    def _map(batches):
-        import pyarrow as pa
-        for batch in batches:
-            out = [row for vals in zip(*(c.to_pylist()
-                                         for c in batch.columns))
-                   for row in fn(*vals)]
-            cols_out = zip(*out) if out else [()] * len(arrow)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(c, f.type) for c, f in zip(cols_out, arrow)],
-                schema=arrow)
-
-    return df.select(*cols).mapInArrow(_map, struct)
+from pyproj_spark.kernels import decoder
+from pyproj_spark.rows import map_rows
 
 
 def _decode_rows(df: DataFrame, bin_col: str, schema: str,
@@ -132,6 +101,7 @@ def image_meta(df: DataFrame, bin_col: str = "payload") -> DataFrame:
     return map_rows(df, ["url", bin_col], IMAGE_META_SCHEMA, meta)
 
 
+@decoder
 def decode_png(b: bytes):
     """REAL PNG pixel decode from raw bytes — stdlib zlib only (IDAT
     inflate + per-scanline unfilter), no image library. Supports 8-bit

@@ -13,8 +13,9 @@ plan fragment so CI logs are actionable:
                        through ONE task (the pack_sequences lesson —
                        fixed there with a two-phase prefix sum).
   row-python-udf       BatchEvalPython = row-at-a-time Python in the
-                       plan; only Arrow stages (ArrowEvalPython /
-                       FlatMapGroupsInPandas / MapInPandas &c.) pass.
+                       plan; only Arrow stages (ArrowEvalPython for
+                       Column UDFs, MapInArrow for ``rows.map_rows``)
+                       pass.
   unpushed-filter      a post-scan Filter re-checks a column the
                        parquet scan could have pushed (scan shows no
                        PushedFilters for it).
@@ -81,7 +82,8 @@ def lint_plan(df_or_plan) -> list[Finding]:
         out.append(Finding(
             "row-python-udf", "error",
             "BatchEvalPython: row-at-a-time Python UDF in the hot "
-            "path (use a pandas UDF / mapInPandas)"))
+            "path (use an Arrow UDF for a Column, "
+            "pyproj_spark.rows.map_rows for rows)"))
 
     # wide-scan: compare the scan ReadSchema width with the widest
     # later Project width (heuristic; scans without ReadSchema skip)

@@ -17,8 +17,6 @@ from __future__ import annotations
 import functools
 import math
 
-import pandas as pd  # noqa: F401 — resolves pandas-UDF type hints
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -1045,30 +1043,21 @@ QUERIES["knn_ring"] = (q_knn_ring, SQL_KNN_RING)
 def q_wkt_roundtrip(spark, sf_dir):
     """Distributed WKT round trip: every point's UTM CRS is serialized
     to WKT2 driver-side (120-row broadcast dimension), then PARSED BACK
-    inside a vectorized pandas UDF on the executors (CRS.from_wkt with a
-    per-batch cache — one parse per distinct WKT). The recovered EPSG
+    in one ``map_rows`` stage on the executors (CRS.from_wkt with a
+    per-task cache — one parse per distinct WKT). The recovered EPSG
     code and central meridian must equal the oracle's pure arithmetic —
     so WKT parsing itself is driver-gated every round."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import (DoubleType, LongType, StructField,
-                                   StructType)
-
     from pyproj_spark.crs.crs import CRS
+    from pyproj_spark.rows import map_rows
 
-    schema = StructType([StructField("code", LongType()),
-                         StructField("lon_0", DoubleType())])
+    parsed: dict = {}
 
-    @pandas_udf(schema)
-    def _parse_wkt(wkt: pd.Series) -> pd.DataFrame:
-        from functools import lru_cache
-
-        @lru_cache(maxsize=256)
-        def parse(w):
-            c = CRS.from_wkt(w)
-            return (c.to_epsg(), float(c.proj_params.get("lon_0", 0.0)))
-
-        return pd.DataFrame([parse(w) for w in wkt],
-                            columns=["code", "lon_0"])
+    def _parse_wkt(epsg, wkt):
+        if wkt not in parsed:
+            c = CRS.from_wkt(wkt)
+            parsed[wkt] = (c.to_epsg(),
+                           float(c.proj_params.get("lon_0", 0.0)))
+        return [(epsg, *parsed[wkt])]
 
     mapping = [(32600 + z, CRS.from_epsg(32600 + z).to_wkt())
                for z in range(1, 61)]
@@ -1081,10 +1070,9 @@ def q_wkt_roundtrip(spark, sf_dir):
     epsg = F.when(F.col("lat") >= 0, zone + 32600).otherwise(zone + 32700)
     joined = pts.select("doc_id", epsg.alias("epsg")) \
         .join(F.broadcast(mdf), "epsg")
-    parsed = joined.withColumn("_p", _parse_wkt(F.col("wkt")))
-    return (parsed.groupBy("epsg",
-                           F.col("_p.code").alias("rt_code"),
-                           F.col("_p.lon_0").alias("lon_0"))
+    return (map_rows(joined, ["epsg", "wkt"],
+                     "epsg long, rt_code long, lon_0 double", _parse_wkt)
+            .groupBy("epsg", "rt_code", "lon_0")
             .agg(F.count("*").alias("cnt")))
 
 
@@ -1799,34 +1787,19 @@ def q_pipeline_e2e(spark, sf_dir):
     from pyproj_spark.functions.tiles import tile_xy
     from pyproj_spark.operators.extract import (extract_anchors,
                                                 normalize_and_project)
-    from pyproj_spark.sources.warc import build_warc, warc_pages
+    from pyproj_spark.sources.warc import warc_date, warc_files, warc_pages
 
     d = _doc_points(spark, sf_dir) \
         .join(_t(spark, sf_dir, "documents").select("doc_id", "text"),
               "doc_id")
 
-    def _build(key, pdf):
-        pdf = pdf.sort_values("doc_id")
-        pages = []
-        for r in pdf.itertuples():
-            iso = pd.Timestamp("2024-01-01") \
-                + pd.Timedelta(seconds=int(r.doc_id))
-            html = (f"<html><body><p>{r.text}</p><p>@geo({r.lon!r},"
-                    f"{r.lat!r})</p></body></html>").encode()
-            pages.append((f"https://ex.org/{int(r.doc_id)}",
-                          iso.strftime("%Y-%m-%dT%H:%M:%SZ"), html))
-        wid = int(key[0])
-        return pd.DataFrame({"warc_id": [wid],
-                             "content": [build_warc(
-                                 pages, gzip_members=bool(wid % 2))]})
+    def page(doc_id, text, lon, lat):
+        html = (f"<html><body><p>{text}</p><p>@geo({lon!r},"
+                f"{lat!r})</p></body></html>").encode()
+        return (f"https://ex.org/{doc_id}", warc_date(1704067200 + doc_id),
+                html)
 
-    # explicit repartition on the group key: AQE would coalesce the
-    # tiny groupBy shuffle to one partition and serialize the gzip
-    # WARC build + parse on a single core (guide §2.5)
-    d = (d.withColumn("warc_id", F.floor(F.col("doc_id") / 25))
-         .repartition(spark.sparkContext.defaultParallelism, "warc_id"))
-    warcs = (d.groupBy("warc_id")
-             .applyInPandas(_build, "warc_id long, content binary"))
+    warcs = warc_files(d, ["doc_id", "text", "lon", "lat"], 25, page)
     pages = warc_pages(warcs).select("url", "text")
     anchors = extract_anchors(pages, normalize_crs=False)
     xy = normalize_and_project(F.col("x"), F.col("y"), F.col("src_crs"))
@@ -2071,7 +2044,7 @@ def q_raster_pyramid(spark, sf_dir):
     re-rasterization of the raw points. floor(X*K/2) ==
     floor(floor(X*K)/2), so block-merging IS the coarser
     rasterization, exactly. Output: sparse (tx, ty, px, py, n) at z=4.
-    tests/test_pipeline_tiling.py ties the applyInPandas per-tile
+    tests/test_pipeline_tiling.py ties the per-tile map_groups
     rasterizer to the same global-pixel math."""
     pts = _doc_points(spark, sf_dir)
     k = 512.0  # 2^5 tiles * 16 px
@@ -7373,7 +7346,7 @@ def q_hmm_match(spark, sf_dir):
     12-segment road table — min sum(d2) + LAMBDA per segment switch —
     for 8-point trajectories (traj = doc_id/8). Candidate costs are
     one broadcast-crossed scan; the DP runs per-trajectory in
-    applyInPandas with EXACT int64 costs (`operators/hmm.py`), so the
+    one map_groups stage with EXACT int64 costs (`operators/hmm.py`), so the
     oracle replays the full forward recursion AND the backward
     argmin path reconstruction in unrolled SQL, bit for bit. The
     path-coherent upgrade of snap_roads: a noisy point near a wrong
@@ -10804,9 +10777,8 @@ def q_quadkey_compact(spark, sf_dir):
     collapsed children — no geometry, no floats anywhere. This is
     the op that turns a 10^9-tile occupancy list into the compact
     region index a tile server actually loads."""
-    from pyspark.sql.functions import pandas_udf
-
     from pyproj_spark.functions.tiles import quadkey, tile_xy_from_lonlat
+    from pyproj_spark.rows import map_rows
     pts = _doc_points(spark, sf_dir)
     tx, ty = tile_xy_from_lonlat(F.col("lon"), F.col("lat"), 8)
     cur = (pts.select(tx.alias("tx"), ty.alias("ty"))
@@ -10826,23 +10798,19 @@ def q_quadkey_compact(spark, sf_dir):
     # present; re-attempted collapses of leftover lengths are no-ops
     # because rounds only remove length-L keys and add length-(L-1)
     # keys, never new length-L siblings.
-    @pandas_udf("array<string>")
-    def _compact(groups: pd.Series) -> pd.Series:
-        out = []
-        for arr in groups:
-            keys = set(arr)
-            for lv in (8, 7, 6):
-                for p in {k[:-1] for k in keys if len(k) == lv}:
-                    ch = {p + d for d in "0123"}
-                    if ch <= keys:
-                        keys -= ch
-                        keys.add(p)
-            out.append(sorted(keys))
-        return pd.Series(out)
+    def _compact(keys):
+        keys = set(keys)
+        for lv in (8, 7, 6):
+            for p in {k[:-1] for k in keys if len(k) == lv}:
+                ch = {p + d for d in "0123"}
+                if ch <= keys:
+                    keys -= ch
+                    keys.add(p)
+        return [(k,) for k in sorted(keys)]
 
-    comp = (cur.groupBy(F.substring("qk", 1, 5).alias("p5"))
-            .agg(F.collect_set("qk").alias("ks"))
-            .select(F.explode(_compact("ks")).alias("qk")))
+    comp = map_rows(cur.groupBy(F.substring("qk", 1, 5).alias("p5"))
+                    .agg(F.collect_set("qk").alias("ks")),
+                    ["ks"], "qk string", _compact)
     return comp.select("qk", F.length("qk").alias("level")) \
         .orderBy("qk")
 

@@ -11,8 +11,6 @@ from __future__ import annotations
 
 import functools
 
-import pandas as pd  # noqa: F401 — resolves pandas-UDF type hints
-
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -471,17 +469,16 @@ SELECT id_a, rank, id_b, sim FROM ranked WHERE rank <= 3
 # An encode that depends on doc_id only through a few residues is
 # memoized per Python worker; the gated decode still runs once per row.
 
-def _doc_urls(spark, sf_dir):
-    return _docs(spark, sf_dir).select(
-        F.col("doc_id").cast("string").alias("url"), "doc_id")
-
-
 def _with_blobs(docs, blob):
-    """``(url, payload)`` with ``payload = blob(doc_id)``. A fixture
-    that raises fails its task: no decode-or-skip here."""
-    from pyproj_spark.operators.multimodal import map_rows
-    return map_rows(docs, ["url", "doc_id"], "url string, payload binary",
-                    lambda url, d: [(url, blob(d))])
+    """``(url, payload)`` per row of the documents table, with url the
+    doc id as a string and ``payload = blob(doc_id)``. A fixture that
+    raises fails its task: no decode-or-skip here. Decoders that pay
+    per row take ``_spread(_docs(...))``: the memoized relation is
+    spread, so its scan-partition probe runs once per session."""
+    from pyproj_spark.rows import map_rows
+    url = F.col("doc_id").cast("string").alias("url")
+    return map_rows(docs, [url, "doc_id"], "url string, payload binary",
+                    lambda u, d: [(u, blob(d))])
 
 
 def _rgb(d: int, w: int, h: int):
@@ -603,7 +600,7 @@ def q_image_meta(spark, sf_dir):
     driver-gated."""
     from pyproj_spark.operators.multimodal import image_meta
 
-    blobs = _with_blobs(_doc_urls(spark, sf_dir), _image_header_blob)
+    blobs = _with_blobs(_docs(spark, sf_dir), _image_header_blob)
     return image_meta(blobs, "payload").select(
         F.col("url").cast("long").alias("doc_id"),
         "format", "width", "height", "n_bytes", "orientation")
@@ -632,7 +629,7 @@ def q_png_decode(spark, sf_dir):
     the same gradient formula."""
     from pyproj_spark.operators.multimodal import png_stats
 
-    blobs = _with_blobs(_doc_urls(spark, sf_dir), _png_blob)
+    blobs = _with_blobs(_docs(spark, sf_dir), _png_blob)
     return png_stats(blobs, "payload").select(
         F.col("url").cast("long").alias("doc_id"),
         "width", "height", "n_channels", "mean_luma")
@@ -675,7 +672,7 @@ def q_jpeg_decode(spark, sf_dir):
     genuinely decoded bitstream."""
     from pyproj_spark.operators.multimodal import jpeg_stats
 
-    blobs = _with_blobs(_spread(_doc_urls(spark, sf_dir)), _jpeg_blob)
+    blobs = _with_blobs(_spread(_docs(spark, sf_dir)), _jpeg_blob)
     return jpeg_stats(blobs, "payload").select(
         F.col("url").cast("long").alias("doc_id"),
         "width", "height", "n_channels", "mean_luma")
@@ -711,7 +708,7 @@ def q_wav_features(spark, sf_dir):
     arithmetically from the same sample formula."""
     from pyproj_spark.operators.multimodal import wav_features
 
-    blobs = _with_blobs(_doc_urls(spark, sf_dir), lambda d: _sawtooth_wav(
+    blobs = _with_blobs(_docs(spark, sf_dir), lambda d: _sawtooth_wav(
         d, n=d % 50 + 20, step=37, mul=11, period=200))
     return wav_features(blobs, "payload").select(
         F.col("url").cast("long").alias("doc_id"),
@@ -750,7 +747,7 @@ def q_frame_sample(spark, sf_dir):
     from the same formula."""
     from pyproj_spark.operators.multimodal import video_frame_sample
 
-    blobs = _with_blobs(_spread(_doc_urls(spark, sf_dir)), _avi_blob)
+    blobs = _with_blobs(_spread(_docs(spark, sf_dir)), _avi_blob)
     return video_frame_sample(blobs, "payload", every_k=2).select(
         F.col("url").cast("long").alias("doc_id"),
         "frame_idx", "width", "height", "n_channels", "mean_luma")
@@ -784,7 +781,7 @@ def q_image_resize(spark, sf_dir):
     runs before tensorization."""
     from pyproj_spark.operators.multimodal import image_resize
 
-    blobs = _with_blobs(_spread(_doc_urls(spark, sf_dir)), _resize_blob)
+    blobs = _with_blobs(_spread(_docs(spark, sf_dir)), _resize_blob)
     return image_resize(blobs, "payload", out_h=4, out_w=4,
                         method="nearest").select(
         F.col("url").cast("long").alias("doc_id"),
@@ -1188,7 +1185,7 @@ def q_jpeg_progressive(spark, sf_dir):
     arithmetically from the same deterministic block formula."""
     from pyproj_spark.operators.multimodal import jpeg_stats
 
-    blobs = _with_blobs(_spread(_doc_urls(spark, sf_dir)),
+    blobs = _with_blobs(_spread(_docs(spark, sf_dir)),
                         _progressive_blob)
     return jpeg_stats(blobs, "payload").select(
         F.col("url").cast("long").alias("doc_id"),
@@ -1223,45 +1220,26 @@ def q_warc_ingest(spark, sf_dir):
     """WARC ingestion, oracle-checked end to end: documents are
     serialized into multi-record WARC/1.0 files (20 pages per file,
     warcinfo + request + response records; odd files use the
-    Common-Crawl gzip-member-per-record layout) in an applyInPandas
-    build stage, then sources/warc.py parses the raw bytes back —
-    Content-Length framing, type filtering, gzip inflate, HTTP header
-    split, tag-stripping text extraction, lang attribute — and the
-    oracle recomputes url/timestamp/html-hash/text-hash arithmetically
-    from the same deterministic page construction. Round-tripping the
-    corpus through real container bytes gates the byte-identity
-    contract of the input_hint table shape."""
-    from pyproj_spark.sources.warc import build_warc, warc_pages
+    Common-Crawl gzip-member-per-record layout) in one
+    ``map_groups`` stage (``warc.warc_files``), then sources/warc.py
+    parses the raw bytes back — Content-Length framing, type
+    filtering, gzip inflate, HTTP header split, tag-stripping text
+    extraction, lang attribute — and the oracle recomputes
+    url/timestamp/html-hash/text-hash arithmetically from the same
+    deterministic page construction. Round-tripping the corpus through
+    real container bytes gates the byte-identity contract of the
+    input_hint table shape."""
+    from pyproj_spark.sources.warc import warc_date, warc_files, warc_pages
 
-    docs = _docs(spark, sf_dir).select("doc_id", "text", "lang")
+    def page(doc_id, text, lang):
+        html = (f'<html lang="{lang}"><head><script>var x=1;'
+                f'</script></head><body><p>{text}</p></body>'
+                f'</html>').encode()
+        return (f"https://ex.org/{doc_id}",
+                warc_date(1704067200 + 60 * doc_id), html)
 
-    def _build(key, pdf):
-        pdf = pdf.sort_values("doc_id")
-        pages = []
-        for d, text, lang in zip(pdf["doc_id"], pdf["text"],
-                                 pdf["lang"]):
-            iso = pd.Timestamp("2024-01-01") \
-                + pd.Timedelta(seconds=60 * int(d))
-            html = (f'<html lang="{lang}"><head><script>var x=1;'
-                    f'</script></head><body><p>{text}</p></body>'
-                    f'</html>').encode()
-            pages.append((f"https://ex.org/{int(d)}",
-                          iso.strftime("%Y-%m-%dT%H:%M:%SZ"), html))
-        wid = int(key[0])
-        return pd.DataFrame({"warc_id": [wid],
-                             "content": [build_warc(
-                                 pages, gzip_members=bool(wid % 2))]})
-
-    # explicit repartition on the group key: AQE would coalesce the
-    # tiny groupBy shuffle to one partition and serialize the WARC
-    # build + parse chain on a single core (guide §2.5 — explicit
-    # user repartitions keep their partition count under AQE)
-    n_par = spark.sparkContext.defaultParallelism
-    docs = (docs.withColumn("warc_id",
-                            F.floor(F.col("doc_id") / 20))
-            .repartition(n_par, "warc_id"))
-    warcs = (docs.groupBy("warc_id")
-             .applyInPandas(_build, "warc_id long, content binary"))
+    warcs = warc_files(_docs(spark, sf_dir), ["doc_id", "text", "lang"],
+                       20, page)
     pages = warc_pages(warcs)
     return pages.select(
         F.regexp_extract("url", r"/(\d+)$", 1).cast("long")
@@ -3327,7 +3305,7 @@ def q_tone_detect(spark, sf_dir):
     from pyproj_spark.operators.multimodal import audio_tone_detect
 
     freqs = (500, 1000, 2000, 3000)
-    blobs = _with_blobs(_spread(_doc_urls(spark, sf_dir)),
+    blobs = _with_blobs(_spread(_docs(spark, sf_dir)),
                         lambda d: _tone_wav(freqs[d % 4]))
     return audio_tone_detect(blobs).select(
         F.col("url").cast("long").alias("doc_id"),
@@ -4845,7 +4823,7 @@ def q_image_dhash(spark, sf_dir):
     pixel formulas — hash equality gates the whole decode+hash chain."""
     from pyproj_spark.operators.multimodal import encode_png, image_dhash
 
-    blobs = _with_blobs(_spread(_doc_urls(spark, sf_dir)),
+    blobs = _with_blobs(_spread(_docs(spark, sf_dir)),
                         lambda d: encode_png(_rgb(d, 18, 12)))
     return image_dhash(blobs).select(
         F.col("url").cast("long").alias("doc_id"), "dhash",
@@ -4897,7 +4875,7 @@ def q_audio_fp(spark, sf_dir):
     sample formula — the decode+hash chain gates end to end."""
     from pyproj_spark.operators.multimodal import audio_fingerprint
 
-    blobs = _with_blobs(_doc_urls(spark, sf_dir), lambda d: _sawtooth_wav(
+    blobs = _with_blobs(_docs(spark, sf_dir), lambda d: _sawtooth_wav(
         d, n=d % 120 + 64, step=53, mul=29, period=256))
     return audio_fingerprint(blobs).select(
         F.col("url").cast("long").alias("doc_id"), "n_frames", "fp")

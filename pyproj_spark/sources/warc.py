@@ -8,17 +8,18 @@ is NEVER scanned for delimiters, so HTML containing ``\\r\\n\\r\\n``
 Common-Crawl convention of one gzip member per record are supported
 (multi-member inflate via zlib, no temp files).
 
-The Spark surface is :func:`warc_pages` — a ``mapInPandas`` stage, one
-Arrow batch of WARC payloads in, page rows out. At corpus scale the
-payloads arrive from a binary source (``spark.read.format
-("binaryFile")`` or an Iceberg binary column); each ~1 GB WARC file is
-one row, so partition count == file count and the stage is trivially
-parallel with no shuffle.
+The Spark surface is :func:`warc_pages` — one ``map_rows`` stage
+(``pyproj_spark/rows.py``), each WARC payload in, its page rows out.
+At corpus scale the payloads arrive from a binary source
+(``spark.read.format("binaryFile")`` or an Iceberg binary column);
+each ~1 GB WARC file is one row, so partition count == file count and
+the stage is trivially parallel with no shuffle.
 
 A deterministic fixture WRITER (:func:`build_warc`) produces valid
 warcinfo + request + response record sequences so the parse path —
 record framing, type filtering, HTTP header split, gzip members — is
-exercised end-to-end without network access.
+exercised end-to-end without network access; :func:`warc_files` runs
+it over a DataFrame, one archive per block of doc ids.
 """
 
 from __future__ import annotations
@@ -26,12 +27,15 @@ from __future__ import annotations
 import datetime as dt
 import gzip
 import re
+import time
 import zlib
+from collections.abc import Callable, Sequence
 from html import unescape
 
-import pandas as pd
-
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+
+from pyproj_spark.rows import map_groups, map_rows
 
 #: the pages-table schema produced by warc_pages
 PAGES_SCHEMA = ("url string, warc_ts timestamp, html binary, "
@@ -47,27 +51,38 @@ _WS_RE = re.compile(r"\s+")
 
 # ------------------------------------------------------------- parsing
 
-def _gunzip_members(b: bytes) -> bytes:
+def _inflate(b: bytes, strict: bool) -> tuple[bytes, int]:
     """Inflate a concatenation of gzip members (the Common-Crawl
-    record-per-member layout)."""
+    record-per-member layout): (bytes, n_bad). A damaged member raises
+    ValueError when ``strict``; otherwise the members inflated before it
+    are kept and it counts as one bad record."""
     out = bytearray()
     while b:
         d = zlib.decompressobj(wbits=31)
-        out += d.decompress(b)
-        out += d.flush()
+        try:
+            out += d.decompress(b)
+            out += d.flush()
+        except zlib.error as e:
+            if strict:
+                raise ValueError(f"corrupt gzip member in WARC: {e}")
+            return bytes(out), 1
         if not d.eof:
-            raise ValueError("truncated gzip member in WARC")
+            if strict:
+                raise ValueError("truncated gzip member in WARC")
+            return bytes(out), 1
         b = d.unused_data
-    return bytes(out)
+    return bytes(out), 0
 
 
-def parse_warc(payload: bytes) -> list[dict]:
-    """Parse WARC/1.0 bytes (plain or gzip-membered) into response
-    records: [{url, warc_ts, http_status, content_type, html}], in
-    file order. warcinfo/request/metadata records are skipped; any
-    framing violation raises ValueError."""
+def _parse(payload: bytes, strict: bool) -> tuple[list[dict], int]:
+    """(response records, n_bad) of a WARC payload. A framing violation
+    raises ValueError when ``strict``; otherwise it drops the REST of
+    the file (Content-Length framing cannot resynchronize reliably —
+    scanning for the next 'WARC/' magic could land inside a response
+    body that embeds one) and counts one bad record."""
+    bad = 0
     if payload[:2] == b"\x1f\x8b":
-        payload = _gunzip_members(payload)
+        payload, bad = _inflate(payload, strict)
     records = []
     pos, n = 0, len(payload)
     while pos < n:
@@ -75,26 +90,55 @@ def parse_warc(payload: bytes) -> list[dict]:
             pos += 2
         if pos >= n:
             break
-        end = payload.find(b"\r\n\r\n", pos)
-        if end < 0:
-            raise ValueError("truncated WARC record header")
-        lines = payload[pos:end].decode("utf-8", "replace").split("\r\n")
-        if not lines[0].startswith("WARC/"):
-            raise ValueError("missing WARC version line")
-        fields = {}
-        for ln in lines[1:]:
-            k, _, v = ln.partition(":")
-            fields[k.strip().lower()] = v.strip()
-        if "content-length" not in fields:
-            raise ValueError("WARC record without Content-Length")
-        clen = int(fields["content-length"])
-        body = payload[end + 4:end + 4 + clen]
-        if len(body) != clen:
-            raise ValueError("truncated WARC record body")
+        try:
+            end = payload.find(b"\r\n\r\n", pos)
+            if end < 0:
+                raise ValueError("truncated WARC record header")
+            lines = payload[pos:end].decode("utf-8", "replace") \
+                .split("\r\n")
+            if not lines[0].startswith("WARC/"):
+                raise ValueError("missing WARC version line")
+            fields = {}
+            for ln in lines[1:]:
+                k, _, v = ln.partition(":")
+                fields[k.strip().lower()] = v.strip()
+            if "content-length" not in fields:
+                raise ValueError("WARC record without Content-Length")
+            clen = int(fields["content-length"])
+            body = payload[end + 4:end + 4 + clen]
+            if len(body) != clen:
+                raise ValueError("truncated WARC record body")
+        except ValueError:
+            if strict:
+                raise
+            bad += 1
+            break
         pos = end + 4 + clen
         if fields.get("warc-type") == "response":
-            records.append(_response_record(fields, body))
-    return records
+            try:
+                records.append(_response_record(fields, body))
+            except ValueError:
+                if strict:
+                    raise
+                bad += 1
+    return records, bad
+
+
+def parse_warc(payload: bytes) -> list[dict]:
+    """Parse WARC/1.0 bytes (plain or gzip-membered) into response
+    records: [{url, warc_ts, http_status, content_type, html}], in
+    file order. warcinfo/request/metadata records are skipped; any
+    framing violation raises ValueError."""
+    return _parse(payload, strict=True)[0]
+
+
+def parse_warc_permissive(payload: bytes) -> tuple[list[dict], int]:
+    """Like parse_warc but salvages what it can from a damaged file:
+    returns (records, n_bad). A framing violation drops the rest of
+    the file; a gzip member error keeps the members already inflated.
+    Real crawl archives contain truncated tails, so the scale path
+    must degrade per-file, not per-job."""
+    return _parse(payload, strict=False)
 
 
 def _response_record(fields: dict, body: bytes) -> dict:
@@ -213,101 +257,67 @@ def build_warc(pages: list[tuple[str, str, bytes]],
 
 # ------------------------------------------------------ Spark surface
 
-def parse_warc_permissive(payload: bytes) -> tuple[list[dict], int]:
-    """Like parse_warc but salvages what it can from a damaged file:
-    returns (records, n_bad). A framing violation drops the REST of
-    the file (Content-Length framing cannot resynchronize reliably —
-    scanning for the next 'WARC/' magic could land inside a response
-    body that embeds one); a gzip member error keeps the members
-    already inflated. Real crawl archives contain truncated tails, so
-    the scale path must degrade per-file, not per-job."""
-    bad = 0
-    if payload[:2] == b"\x1f\x8b":
-        out = bytearray()
-        while payload:
-            d = zlib.decompressobj(wbits=31)
-            try:
-                out += d.decompress(payload)
-                out += d.flush()
-            except zlib.error:
-                bad += 1
-                break
-            if not d.eof:
-                bad += 1
-                break
-            payload = d.unused_data
-        payload = bytes(out)
-    records = []
-    pos, n = 0, len(payload)
-    while pos < n:
-        while payload[pos:pos + 2] == b"\r\n":
-            pos += 2
-        if pos >= n:
-            break
-        try:
-            end = payload.find(b"\r\n\r\n", pos)
-            if end < 0:
-                raise ValueError("truncated header")
-            lines = payload[pos:end].decode("utf-8", "replace") \
-                .split("\r\n")
-            if not lines[0].startswith("WARC/"):
-                raise ValueError("missing version line")
-            fields = {}
-            for ln in lines[1:]:
-                k, _, v = ln.partition(":")
-                fields[k.strip().lower()] = v.strip()
-            clen = int(fields["content-length"])
-            body = payload[end + 4:end + 4 + clen]
-            if len(body) != clen:
-                raise ValueError("truncated body")
-        except (ValueError, KeyError):
-            bad += 1
-            break  # framing lost: drop the rest of this file
-        pos = end + 4 + clen
-        if fields.get("warc-type") == "response":
-            try:
-                records.append(_response_record(fields, body))
-            except ValueError:
-                bad += 1
-    return records, bad
-
-
 def warc_pages(warcs: DataFrame, payload_col: str = "content",
                on_error: str = "fail") -> DataFrame:
     """WARC payloads -> pages rows (input_hint schema + http_status /
-    content_type). One mapInPandas stage; no shuffle.
+    content_type). One ``map_rows`` stage; no shuffle.
 
     ``on_error="fail"`` (default) raises on any malformed input;
     ``"skip"`` salvages intact records and counts the rest — at crawl
     scale a single truncated archive must cost its own tail, not the
     job. Skipped-record counts surface in the ``n_bad`` column
     (0 for rows from clean files) so the pipeline can alert on decay
-    without a second pass."""
+    without a second pass. A NULL payload yields no rows in either
+    mode."""
     if on_error not in ("fail", "skip"):
         raise ValueError(f"on_error must be fail|skip: {on_error}")
-    cols = ["url", "warc_ts", "html", "text", "lang", "http_status",
-            "content_type", "n_bad"]
+    strict = on_error == "fail"
 
-    def _parse(batches):
-        for pdf in batches:
-            rows = []
-            for payload in pdf[payload_col]:
-                if on_error == "fail":
-                    recs, nbad = parse_warc(bytes(payload)), 0
-                else:
-                    recs, nbad = parse_warc_permissive(bytes(payload))
-                for r in recs:
-                    html = decode_html(r["html"], r["content_type"])
-                    rows.append((r["url"], r["warc_ts"], r["html"],
-                                 html_to_text(html), html_lang(html),
-                                 r["http_status"], r["content_type"],
-                                 nbad))
-                if not recs and nbad:
-                    # fully-corrupt archive: without a sentinel its
-                    # bad-record count would vanish with its rows and
-                    # the "alert without a second pass" contract breaks
-                    rows.append((None, None, None, None, None,
-                                 None, None, nbad))
-            yield pd.DataFrame(rows, columns=cols)
+    def pages(payload):
+        if payload is None:
+            return []
+        recs, nbad = _parse(payload, strict)
+        rows = []
+        for r in recs:
+            html = decode_html(r["html"], r["content_type"])
+            rows.append((r["url"], r["warc_ts"], r["html"],
+                         html_to_text(html), html_lang(html),
+                         r["http_status"], r["content_type"], nbad))
+        if not recs and nbad:
+            # fully-corrupt archive: without a sentinel its bad-record
+            # count would vanish with its rows and the "alert without
+            # a second pass" contract breaks
+            rows.append((None,) * 7 + (nbad,))
+        return rows
 
-    return warcs.mapInPandas(_parse, PAGES_SCHEMA + ", n_bad int")
+    return map_rows(warcs, [payload_col], PAGES_SCHEMA + ", n_bad int",
+                    pages)
+
+
+def warc_date(epoch_s: int) -> str:
+    """The WARC-Date string (ISO 8601, UTC) of a Unix time."""
+    return time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime(epoch_s))
+
+
+def warc_files(docs: DataFrame, cols: Sequence[str], per_file: int,
+               page: Callable[..., tuple[str, str, bytes]]) -> DataFrame:
+    """Fixture archives ``(warc_id long, content binary)`` built from
+    the rows of ``docs``: file ``floor(doc_id / per_file)`` holds those
+    rows in ``doc_id`` order, each as the page ``page(*values of cols)``
+    = (url, iso_ts, html_bytes); odd files use the Common-Crawl
+    gzip-member-per-record layout. ``cols`` starts with ``doc_id``.
+
+    The repartition on the file key is explicit: AQE would coalesce
+    the tiny group shuffle to one partition and run every WARC build
+    (and the parse after it) on one core; an explicit repartition
+    keeps its partition count under AQE."""
+    n = docs.sparkSession.sparkContext.defaultParallelism
+    docs = (docs.withColumn("warc_id", F.floor(F.col("doc_id") / per_file))
+            .repartition(n, "warc_id"))
+
+    def build(wid, *col_lists):
+        pages = [page(*vals) for vals in zip(*col_lists)]
+        return [(wid, build_warc(pages, gzip_members=bool(wid % 2)))]
+
+    return map_groups(docs, ["warc_id"], cols,
+                      "warc_id long, content binary", build)

@@ -157,7 +157,7 @@ def test_spark_clip_zones_exact_operator(spark):
         np_, nv, a = clip_pair_stats(P, Q)
         assert out[pid]["n_pieces"] == np_
         assert out[pid]["area"] == pytest.approx(a, abs=1e-10)
-    # no shuffle: single mapInPandas stage over the scan
+    # no shuffle: single map_rows (mapInArrow) stage over the scan
     plan = clip_zones_exact(df)._jdf.queryExecution().executedPlan() \
         .toString()
     assert "Exchange" not in plan

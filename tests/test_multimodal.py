@@ -1,13 +1,16 @@
 """Decode-or-skip across the multimodal operators (operators/multimodal.py):
-a NULL or undecodable payload never fails the task."""
+a NULL or undecodable payload never fails the task, and a malformed
+stream reaches the operators as ValueError, never as a raw error."""
 
 from __future__ import annotations
 
 import numpy as np
 import pytest
 
-from pyproj_spark.kernels.jpeg import encode_jpeg
-from pyproj_spark.kernels.riff import encode_avi_mjpg, encode_wav
+from pyproj_spark.kernels.jpeg import decode_jpeg, encode_jpeg
+from pyproj_spark.kernels.riff import (avi_frames, decode_bmp, decode_gif,
+                                       decode_wav, encode_avi_mjpg,
+                                       encode_bmp, encode_gif, encode_wav)
 from pyproj_spark.operators import multimodal as mm
 
 _PNG = mm.encode_png(np.arange(48, dtype=np.uint8).reshape(4, 4, 3))
@@ -45,3 +48,37 @@ def test_null_and_junk_payloads_are_skipped(spark, name):
     else:
         assert rows and {r.url for r in rows} == {"ok"}
         assert bad == []
+
+
+def _avi_decode(b: bytes):
+    return [decode_jpeg(f) for f in avi_frames(b)[0]]
+
+
+_GRADIENT = (np.arange(6 * 5 * 3) * 7 % 256).astype(np.uint8) \
+    .reshape(6, 5, 3)
+STREAMS = {
+    "png": (_PNG, mm.decode_png),
+    "wav": (_WAV, decode_wav),
+    "bmp": (encode_bmp(_GRADIENT), decode_bmp),
+    "gif": (encode_gif((np.arange(30) % 5).reshape(6, 5)), decode_gif),
+    "jpeg": (_JPEG, decode_jpeg),
+    "avi": (encode_avi_mjpg([_JPEG] * 2, fps=10.0), _avi_decode),
+}
+
+
+@pytest.mark.parametrize("fmt", sorted(STREAMS))
+def test_truncated_or_corrupt_stream_raises_value_error(fmt):
+    """Every truncation of a valid stream, and 300 one-byte
+    corruptions of it, either decode or raise ValueError /
+    NotImplementedError, the errors decode-or-skip catches: a raw
+    struct/zlib/index error would fail the whole task."""
+    blob, decode = STREAMS[fmt]
+    decode(blob)
+    rng = np.random.default_rng(7)
+    flips = [blob[:p] + bytes([v]) + blob[p + 1:] for p, v in zip(
+        rng.integers(0, len(blob), 300), rng.integers(0, 256, 300))]
+    for bad in [blob[:n] for n in range(len(blob))] + flips:
+        try:
+            decode(bad)
+        except (ValueError, NotImplementedError):
+            pass

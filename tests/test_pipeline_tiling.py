@@ -205,7 +205,7 @@ def test_pipeline_hgridshift_step():
 
 
 def test_raster_pyramid_consistency(spark):
-    """The applyInPandas per-tile rasterizer, the native global-pixel
+    """The map_groups per-tile rasterizer, the native global-pixel
     raster, and the 2x2 pyramid downsample must tell one story:
     per-tile pixels re-expressed globally equal the native raster, and
     block-merging the fine level equals rasterizing coarse directly."""
@@ -234,7 +234,7 @@ def test_raster_pyramid_consistency(spark):
                 .toPandas().set_index(["gx", "gy"])["n"].to_dict())
 
     fine = native(5)
-    # applyInPandas rasterizer agrees with the native global grid
+    # per-tile rasterizer agrees with the native global grid
     tiled = rasterize_tiles(pts, zoom=5, tile_px=16).toPandas()
     tiled_map = {(r.tx * 16 + r.px, r.ty * 16 + r.py): r.n
                  for r in tiled.itertuples()}

@@ -233,13 +233,52 @@ def test_build_fires_no_job_and_caches_nothing(spark, name):
 @pytest.mark.parametrize("name", [
     "image_meta", "png_decode", "jpeg_decode", "wav_features",
     "frame_sample", "image_resize", "jpeg_progressive", "tone_detect",
-    "image_dhash", "audio_fp"])
+    "image_dhash", "audio_fp", "pipeline_e2e", "warc_ingest", "simplify",
+    "hmm_match", "quadkey_compact", "wkt_roundtrip"])
 def test_multimodal_queries_map_over_arrow(spark, name):
-    """The fixture and decode stages run as mapInArrow, never through
-    pandas."""
+    """The fixture, decode, WARC and per-group stages run as
+    mapInArrow, never through pandas."""
+    from pyproj_spark.queries import QUERIES
     from pyproj_spark.queries_text import QUERIES_TEXT
-    plan = _plan(QUERIES_TEXT[name][0](spark, SF))
-    assert "MapInArrow" in plan and "MapInPandas" not in plan
+    plan = _plan({**QUERIES, **QUERIES_TEXT}[name][0](spark, SF))
+    assert "MapInArrow" in plan
+    assert "MapInPandas" not in plan
+    assert "FlatMapGroupsInPandas" not in plan
+
+
+def test_no_pandas_map_stage_in_engine_source():
+    """Rows reach Python through ``rows.map_rows`` only: no
+    ``applyInPandas`` / ``mapInPandas`` call anywhere in the engine
+    outside ``streaming/`` (whose ``applyInPandasWithState`` keeps
+    per-key state across micro-batches)."""
+    import pathlib
+    import re
+
+    import pyproj_spark
+    root = pathlib.Path(pyproj_spark.__file__).parent
+    hits = [f"{path.relative_to(root)}:{i}"
+            for path in sorted(root.rglob("*.py"))
+            if "streaming" not in path.relative_to(root).parts
+            for i, line in enumerate(path.read_text().splitlines(), 1)
+            if re.search(r"\b(applyInPandas|mapInPandas)\(", line)]
+    assert hits == []
+
+
+@pytest.mark.parametrize("name", [
+    "jpeg_decode", "frame_sample", "image_resize", "jpeg_progressive",
+    "tone_detect", "image_dhash"])
+def test_blob_spread_exchanges_only_the_projected_column(spark, name):
+    """These decoders' fixture stage spreads the memoized documents
+    relation, and column pruning still narrows the round-robin
+    exchange (and the scan) to ``doc_id``, the one column it needs."""
+    import re
+
+    from pyproj_spark.queries_text import QUERIES_TEXT
+    lines = _plan(QUERIES_TEXT[name][0](spark, SF)).splitlines()
+    at = [i for i, line in enumerate(lines)
+          if "Exchange RoundRobinPartitioning" in line]
+    assert len(at) == 1
+    assert re.search(r"FileScan parquet \[doc_id#\d+L\]", lines[at[0] + 1])
 
 
 @pytest.mark.parametrize("name", [

@@ -1,5 +1,5 @@
 """Round-6 optimization internals: the scale-adaptive scan spread and
-the batched (one-pandas-UDF-call-per-Arrow-batch) DP rewrites must be
+the batched DP rewrites (one array row per trajectory) must be
 behavior-identical to the per-group forms they replaced."""
 
 import numpy as np

@@ -113,9 +113,22 @@ def test_spark_skip_mode_fully_corrupt_archive(spark):
     assert len([r for r in out if r.url is not None]) == 3
 
 
+@pytest.mark.parametrize("on_error", ["fail", "skip"])
+def test_spark_null_payload_yields_no_rows(spark, on_error):
+    """A NULL payload is no archive: no rows and no sentinel, in both
+    modes, and the task goes on to the next file."""
+    df = spark.createDataFrame(
+        [(0, None), (1, build_warc(PAGES))],
+        "warc_id long, content binary")
+    out = warc_pages(df, on_error=on_error).collect()
+    assert sorted(r.url for r in out) == [u for u, _t, _h in PAGES]
+    assert {r.n_bad for r in out} == {0}
+
+
 def test_streaming_ingestion(spark, tmp_path):
-    """warc_pages composes with readStream: the same mapInPandas plan
-    runs incrementally over arriving archive files."""
+    """warc_pages composes with readStream: the same ``map_rows``
+    (mapInArrow) plan runs incrementally over arriving archive
+    files."""
     import os
     d = str(tmp_path / "stream_in")
     os.makedirs(d)
