@@ -10,7 +10,7 @@ proj-string/EPSG parsing, datum shift, Karney geodesics) as:
   ``pyproj.Transformer.from_crs`` — reference
   ``pyproj/transformer.py:667-752``);
 * Spark-facing column functions (``pyproj_spark.functions``) — scalar
-  pandas/Arrow UDFs for the iterative kernels, native Catalyst
+  Arrow UDFs for the iterative kernels, native Catalyst
   expressions everywhere the math is closed-form (cell ids, tiles,
   bboxes, reverse_azimuth);
 * DataFrame-composed spatial operators (``pyproj_spark.operators``) —

@@ -1,12 +1,15 @@
-"""Spark column functions for CRS transforms — scalar pandas/Arrow UDFs.
+"""Spark column functions for CRS transforms — scalar Arrow UDFs.
 
 One Arrow batch in -> one out, never per-row Python (the engine-wide
-rule from BASELINE.json input_hint). The TransformSpec is resolved on
-the driver (plan once — reference ``docs/advanced_examples.rst:269-291``
-shows why) and captured in the UDF closure; each python worker
-materializes the numpy kernel once per spec via the module-level cache
-in ``pyproj_spark.plans.spec`` (the Spark analogue of the reference's
-per-thread ``TransformerLocal``, ``pyproj/transformer.py:416-474``).
+rule from BASELINE.json input_hint); every kernel crosses through
+``rows.map_arrays``. The TransformSpec is resolved on the driver (plan
+once — reference ``docs/advanced_examples.rst:269-291`` shows why) and
+captured in the UDF closure; each python worker materializes the numpy
+kernel once per spec via the module-level cache in
+``pyproj_spark.plans.spec`` (the Spark analogue of the reference's
+per-thread ``TransformerLocal``, ``pyproj/transformer.py:416-474``),
+and each pipeline, ITRF frame pair and ellipsoid once via the
+``functools.cache``d constructors below.
 
 Noop elision: if src == dst CRS the returned Column is built from the
 input columns directly — no UDF enters the plan at all
@@ -15,15 +18,15 @@ input columns directly — no UDF enters the plan at all
 
 from __future__ import annotations
 
+import functools
+
 import numpy as np
-import pandas as pd  # noqa: F401 — kept for callers' type hints
-import pyarrow as pa
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.functions import arrow_udf
 
 from pyproj_spark.crs.crs import CRS
 from pyproj_spark.plans.spec import TransformSpec, get_kernel
+from pyproj_spark.rows import map_arrays
 
 
 def transform_xy(crs_from, crs_to, x: Column, y: Column,
@@ -52,30 +55,15 @@ def transform_xy(crs_from, crs_to, x: Column, y: Column,
                             F.lit(0).cast("int").alias("op_id"))
         return F.struct(x.cast("double").alias("x"),
                         y.cast("double").alias("y"))
-
     if with_op_id:
-        @arrow_udf("struct<x:double,y:double,op_id:int>")
-        def _xf_op(xs: pa.Array, ys: pa.Array) -> pa.Array:
-            k = get_kernel(spec)
-            xo, yo, _, ops = k.call_with_ops(
-                xs.to_numpy(zero_copy_only=False),
-                ys.to_numpy(zero_copy_only=False))
-            return pa.StructArray.from_arrays(
-                [pa.array(xo), pa.array(yo),
-                 pa.array(ops.astype("int32"))],
-                names=["x", "y", "op_id"])
+        def _xf_op(xs, ys):
+            xo, yo, _, ops = get_kernel(spec).call_with_ops(xs, ys)
+            return xo, yo, ops
 
-        return _xf_op(x, y)
-
-    @arrow_udf("struct<x:double,y:double>")
-    def _xf(xs: pa.Array, ys: pa.Array) -> pa.Array:
-        k = get_kernel(spec)
-        xo, yo, _ = k(xs.to_numpy(zero_copy_only=False),
-                      ys.to_numpy(zero_copy_only=False))
-        return pa.StructArray.from_arrays(
-            [pa.array(xo), pa.array(yo)], names=["x", "y"])
-
-    return _xf(x, y)
+        return map_arrays("struct<x:double,y:double,op_id:int>", _xf_op,
+                          x, y)
+    return map_arrays("struct<x:double,y:double>",
+                      lambda xs, ys: get_kernel(spec)(xs, ys)[:2], x, y)
 
 
 def transform_xy_keyed(crs_from, crs_by_key: dict, key: Column,
@@ -97,25 +85,16 @@ def transform_xy_keyed(crs_from, crs_by_key: dict, key: Column,
                                    always_xy=always_xy)
              for k, v in crs_by_key.items()}
 
-    @arrow_udf("struct<x:double,y:double>")
-    def _xfk(keys: pa.Array, xs: pa.Array, ys: pa.Array) -> pa.Array:
-        kn = keys.to_numpy(zero_copy_only=False)
-        xn = np.asarray(xs.to_numpy(zero_copy_only=False),
-                        dtype="float64")
-        yn = np.asarray(ys.to_numpy(zero_copy_only=False),
-                        dtype="float64")
+    def _xfk(kn, xn, yn):
         xo = np.full(len(xn), np.nan)
         yo = np.full(len(yn), np.nan)
         for kv, spec in specs.items():
             m = kn == kv
             if m.any():
-                kern = get_kernel(spec)
-                xm, ym, _ = kern(xn[m], yn[m])
-                xo[m], yo[m] = xm, ym
-        return pa.StructArray.from_arrays(
-            [pa.array(xo), pa.array(yo)], names=["x", "y"])
+                xo[m], yo[m], _ = get_kernel(spec)(xn[m], yn[m])
+        return xo, yo
 
-    return _xfk(key, x, y)
+    return map_arrays("struct<x:double,y:double>", _xfk, key, x, y)
 
 
 def transform_xyz(crs_from, crs_to, x: Column, y: Column, z: Column,
@@ -128,21 +107,14 @@ def transform_xyz(crs_from, crs_to, x: Column, y: Column, z: Column,
         return F.struct(x.cast("double").alias("x"),
                         y.cast("double").alias("y"),
                         z.cast("double").alias("z"))
-
-    @arrow_udf("struct<x:double,y:double,z:double>")
-    def _xf(xs: pa.Array, ys: pa.Array, zs: pa.Array) -> pa.Array:
-        k = get_kernel(spec)
-        xo, yo, zo = k(xs.to_numpy(zero_copy_only=False),
-                       ys.to_numpy(zero_copy_only=False),
-                       zs.to_numpy(zero_copy_only=False))
-        return pa.StructArray.from_arrays(
-            [pa.array(xo), pa.array(yo), pa.array(zo)],
-            names=["x", "y", "z"])
-
-    return _xf(x, y, z)
+    return map_arrays("struct<x:double,y:double,z:double>",
+                      lambda *xyz: get_kernel(spec)(*xyz), x, y, z)
 
 
-_PIPELINE_CACHE: dict = {}
+@functools.cache
+def _pipeline(pipeline: str):
+    from pyproj_spark.plans.pipeline import PipelineKernel
+    return PipelineKernel(pipeline)
 
 
 def transform_pipeline(pipeline: str, x: Column, y: Column,
@@ -151,31 +123,19 @@ def transform_pipeline(pipeline: str, x: Column, y: Column,
     struct<x,y,z>. The DataFrame form of the reference's
     ``Transformer.from_pipeline(...).transform(...)``
     (``pyproj/transformer.py:270-330``): the string is validated on the
-    driver, each python worker parses it once (module cache keyed by
-    the string — the kernel holds only step closures), and whole Arrow
-    batches cross in one call."""
-    from pyproj_spark.plans.pipeline import PipelineKernel
-    PipelineKernel(pipeline)  # driver-side validation: raise HERE
-
-    @arrow_udf("struct<x:double,y:double,z:double>")
-    def _pl(xs: pa.Array, ys: pa.Array, zs: pa.Array) -> pa.Array:
-        k = _PIPELINE_CACHE.get(pipeline)
-        if k is None:
-            from pyproj_spark.plans.pipeline import PipelineKernel as PK
-            k = _PIPELINE_CACHE[pipeline] = PK(pipeline)
-        xo, yo, zo = k(
-            np.asarray(xs.to_numpy(zero_copy_only=False), dtype="float64"),
-            np.asarray(ys.to_numpy(zero_copy_only=False), dtype="float64"),
-            np.asarray(zs.to_numpy(zero_copy_only=False), dtype="float64"))
-        return pa.StructArray.from_arrays(
-            [pa.array(xo), pa.array(yo), pa.array(zo)],
-            names=["x", "y", "z"])
-
+    driver, each python worker parses it once (cached by the string —
+    the kernel holds only step closures), and whole Arrow batches cross
+    in one call."""
+    _pipeline(pipeline)  # driver-side validation: raise HERE
     zc = F.lit(0.0) if z is None else z.cast("double")
-    return _pl(x, y, zc)
+    return map_arrays("struct<x:double,y:double,z:double>",
+                      lambda *xyz: _pipeline(pipeline)(*xyz), x, y, zc)
 
 
-_ITRF_CACHE: dict = {}
+@functools.cache
+def _itrf(frame_from: str, frame_to: str):
+    from pyproj_spark.kernels.itrf import ITRFTransformer
+    return ITRFTransformer(frame_from, frame_to)
 
 
 def transform_itrf(frame_from: str, frame_to: str, x: Column, y: Column,
@@ -187,105 +147,53 @@ def transform_itrf(frame_from: str, frame_to: str, x: Column, y: Column,
     published IERS rates are evaluated at each row's decimal year
     before the 14-parameter Helmert applies. Frames are validated on
     the driver; workers cache one kernel per frame pair."""
-    from pyproj_spark.kernels.itrf import ITRFTransformer
-    ITRFTransformer(frame_from, frame_to)  # driver-side validation
-    key = (frame_from, frame_to)
+    _itrf(frame_from, frame_to)  # driver-side validation
 
-    @arrow_udf("struct<x:double,y:double,z:double>")
-    def _itrf(xs: pa.Array, ys: pa.Array, zs: pa.Array,
-              ts: pa.Array) -> pa.Array:
-        tr = _ITRF_CACHE.get(key)
-        if tr is None:
-            from pyproj_spark.kernels.itrf import ITRFTransformer as IT
-            tr = _ITRF_CACHE[key] = IT(*key)
-        xo, yo, zo, _ = tr.transform(
-            np.asarray(xs.to_numpy(zero_copy_only=False), dtype="float64"),
-            np.asarray(ys.to_numpy(zero_copy_only=False), dtype="float64"),
-            zz=np.asarray(zs.to_numpy(zero_copy_only=False),
-                          dtype="float64"),
-            tt=np.asarray(ts.to_numpy(zero_copy_only=False),
-                          dtype="float64"))
-        return pa.StructArray.from_arrays(
-            [pa.array(xo), pa.array(yo), pa.array(zo)],
-            names=["x", "y", "z"])
+    def _xf(xs, ys, zs, ts):
+        return _itrf(frame_from, frame_to).transform(
+            xs, ys, zz=zs, tt=ts)[:3]
 
-    return _itrf(x.cast("double"), y.cast("double"),
-                 z.cast("double"), t.cast("double"))
+    return map_arrays("struct<x:double,y:double,z:double>", _xf,
+                      x.cast("double"), y.cast("double"),
+                      z.cast("double"), t.cast("double"))
+
+
+@functools.cache
+def _geod(ellps: str):
+    from pyproj_spark.kernels.geod import Geod
+    return Geod(ellps=ellps)
 
 
 def geod_inverse(ellps: str, lon1: Column, lat1: Column, lon2: Column,
                  lat2: Column) -> Column:
-    """struct<az12,az21,dist> — Karney inverse as a pandas UDF.
+    """struct<az12,az21,dist> — Karney inverse as an Arrow UDF.
     az21 is the back azimuth (pyproj default convention,
     ``pyproj/_geod.pyx:294-295``)."""
-
-    @arrow_udf("struct<az12:double,az21:double,dist:double>")
-    def _inv(a: pa.Array, b: pa.Array, c: pa.Array,
-             d: pa.Array) -> pa.Array:
-        g = _geod_cache(ellps)
-        az12, az21, dist = g.inv(a.to_numpy(zero_copy_only=False),
-                                 b.to_numpy(zero_copy_only=False),
-                                 c.to_numpy(zero_copy_only=False),
-                                 d.to_numpy(zero_copy_only=False))
-        return pa.StructArray.from_arrays(
-            [pa.array(np.asarray(az12, dtype="float64")),
-             pa.array(np.asarray(az21, dtype="float64")),
-             pa.array(np.asarray(dist, dtype="float64"))],
-            names=["az12", "az21", "dist"])
-
-    return _inv(lon1, lat1, lon2, lat2)
+    return map_arrays("struct<az12:double,az21:double,dist:double>",
+                      lambda *a: _geod(ellps).inv(*a),
+                      lon1, lat1, lon2, lat2)
 
 
 def geod_forward(ellps: str, lon: Column, lat: Column, az: Column,
                  dist: Column) -> Column:
-    """struct<lon,lat,backaz> — Karney direct as a pandas UDF."""
-
-    @arrow_udf("struct<lon:double,lat:double,backaz:double>")
-    def _fwd(a: pa.Array, b: pa.Array, c: pa.Array,
-             d: pa.Array) -> pa.Array:
-        g = _geod_cache(ellps)
-        lo, la, baz = g.fwd(a.to_numpy(zero_copy_only=False),
-                            b.to_numpy(zero_copy_only=False),
-                            c.to_numpy(zero_copy_only=False),
-                            d.to_numpy(zero_copy_only=False))
-        return pa.StructArray.from_arrays(
-            [pa.array(np.asarray(lo, dtype="float64")),
-             pa.array(np.asarray(la, dtype="float64")),
-             pa.array(np.asarray(baz, dtype="float64"))],
-            names=["lon", "lat", "backaz"])
-
-    return _fwd(lon, lat, az, dist)
+    """struct<lon,lat,backaz> — Karney direct as an Arrow UDF."""
+    return map_arrays("struct<lon:double,lat:double,backaz:double>",
+                      lambda *a: _geod(ellps).fwd(*a),
+                      lon, lat, az, dist)
 
 
 def proj_factors(crs, lon: Column, lat: Column) -> Column:
-    """struct<h,k,areal> — Proj.get_factors (T8) as a pandas UDF:
+    """struct<h,k,areal> — Proj.get_factors (T8) as an Arrow UDF:
     meridional scale, parallel scale, areal scale per point (reference
     ``pyproj/proj.py:204-278``)."""
 
-    @arrow_udf("struct<h:double,k:double,areal:double>")
-    def _fac(lo: pa.Array, la: pa.Array) -> pa.Array:
+    def _fac(lo, la):
         from pyproj_spark.proj import Proj
-        f = Proj(crs).get_factors(lo.to_numpy(zero_copy_only=False),
-                                  la.to_numpy(zero_copy_only=False))
-        return pa.StructArray.from_arrays(
-            [pa.array(np.asarray(f.meridional_scale, dtype="float64")),
-             pa.array(np.asarray(f.parallel_scale, dtype="float64")),
-             pa.array(np.asarray(f.areal_scale, dtype="float64"))],
-            names=["h", "k", "areal"])
+        f = Proj(crs).get_factors(lo, la)
+        return f.meridional_scale, f.parallel_scale, f.areal_scale
 
-    return _fac(lon, lat)
-
-
-_GEODS: dict = {}
-
-
-def _geod_cache(ellps: str):
-    g = _GEODS.get(ellps)
-    if g is None:
-        from pyproj_spark.kernels.geod import Geod
-        g = Geod(ellps=ellps)
-        _GEODS[ellps] = g
-    return g
+    return map_arrays("struct<h:double,k:double,areal:double>", _fac,
+                      lon, lat)
 
 
 def reverse_azimuth(az: Column) -> Column:

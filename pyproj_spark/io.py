@@ -41,3 +41,9 @@ def session_memo(spark: SparkSession, key, make):
 def read_parquet_cached(spark: SparkSession, path: str) -> DataFrame:
     path = os.path.abspath(path)
     return session_memo(spark, path, lambda: spark.read.parquet(path))
+
+
+def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """The fixture table ``<sf_dir>/<name>.parquet``, memoized as above:
+    plan-side only, every action still scans the parquet files."""
+    return read_parquet_cached(spark, f"{sf_dir}/{name}.parquet")

@@ -3,7 +3,7 @@
 Every kernel is vectorized over flat float64 arrays, mirroring the
 reference's columnar buffer model (``pyproj/utils.py:89-143``,
 ``pyproj/_transformer.pyx:807-827``) but with numpy instead of C. The
-Spark layer wraps these in scalar pandas/Arrow UDFs; tests call them
+Spark layer wraps these in scalar Arrow UDFs; tests call them
 directly.
 """
 

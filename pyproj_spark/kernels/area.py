@@ -26,8 +26,8 @@ so each edge integral is a smooth 1-D integral evaluated by panel
 Gauss-Legendre quadrature to machine precision.  This trades the paper's
 truncated C4 series for exact quadrature — same asymptotic cost per
 edge, no series-coefficient risk, and it is only used on small
-dimension tables (zones) or inside per-ring pandas UDFs, never in the
-per-page hot path.
+dimension tables (zones) or inside per-ring ``rows.map_rows`` stages,
+never in the per-page hot path.
 """
 
 from __future__ import annotations

@@ -4,7 +4,7 @@ Mirrors the API semantics of ``pyproj/geod.py`` (reference
 ``pyproj/geod.py:239-421`` fwd/inv, ``:423-534`` npts, ``:536-846``
 intermediate, ``:848-920`` line lengths, ``:1150-1184``
 reverse_azimuth), vectorized over numpy arrays. The Spark layer exposes
-these as pandas-UDF kernels; line/polygon aggregations are expressed as
+these as Arrow-UDF kernels; line/polygon aggregations are expressed as
 window + groupBy compositions instead (SURVEY.md §2.2 G6-G8).
 """
 

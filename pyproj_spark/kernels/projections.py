@@ -9,7 +9,7 @@ in 50-digit arithmetic by tools/verify_tm_series.py.
 
 These kernels are the Spark analogue of the reference's PROJ pipeline
 steps (``pyproj/_transformer.pyx:807-827`` executes them in C); here
-they run inside scalar pandas/Arrow UDFs, one Arrow batch per call.
+they run inside scalar Arrow UDFs, one Arrow batch per call.
 Failed points become NaN/inf in-band, matching pyproj's inf-on-error
 convention (``pyproj/_transformer.pyx:828-837``).
 """

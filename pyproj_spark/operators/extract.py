@@ -19,13 +19,12 @@ from __future__ import annotations
 import re
 
 import numpy as np
-import pandas as pd  # noqa: F401 — resolves pandas-UDF type hints
-import pyarrow as pa  # module-level: arrow_udf resolves string hints here
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pyproj_spark.functions.transform import transform_xy
+from pyproj_spark.crs.crs import CRS
+from pyproj_spark.plans.spec import TransformSpec, get_kernel
+from pyproj_spark.rows import map_arrays
 
 ANCHOR_RE = r"@geo\((-?\d+\.\d+),(-?\d+\.\d+)(?:,(EPSG:\d+))?\)"
 _ANCHOR_RE_PY = re.compile(ANCHOR_RE)
@@ -63,7 +62,7 @@ def extract_anchors(pages: DataFrame, normalize_crs: bool = True
     )
     if not normalize_crs:
         return a
-    # Single-pass mixed-CRS normalization: ONE pandas UDF groups each
+    # Single-pass mixed-CRS normalization: ONE Arrow UDF groups each
     # Arrow batch by src_crs and runs the per-CRS kernel on each group
     # (kernels are planned once per worker, cached by spec). No driver
     # collect(), no per-CRS scan/union — the fact table is read exactly
@@ -86,21 +85,17 @@ def _epsg_code(src_crs) -> "F.Column":
     return F.split(src_crs, ":").getItem(1).cast("int")
 
 
-def _to_4326(xs: pa.Array, ys: pa.Array, codes: pa.Array
+def _to_4326(x: np.ndarray, y: np.ndarray, codes: np.ndarray
              ) -> tuple[np.ndarray, np.ndarray]:
     """Fresh float64 lon/lat arrays of one Arrow batch: the rows of each
     distinct EPSG code other than 4326 go through that code's cached
     kernel in one call."""
-    from pyproj_spark.crs.crs import CRS
-    from pyproj_spark.plans.spec import TransformSpec, get_kernel
-
-    x = np.asarray(xs.to_numpy(zero_copy_only=False), dtype=np.float64).copy()
-    y = np.asarray(ys.to_numpy(zero_copy_only=False), dtype=np.float64).copy()
-    cn = codes.to_numpy(zero_copy_only=False)
-    for code in np.unique(cn):
+    x = np.asarray(x, dtype=np.float64).copy()
+    y = np.asarray(y, dtype=np.float64).copy()
+    for code in np.unique(codes):
         if code == 4326:
             continue
-        ii = np.flatnonzero(cn == code)
+        ii = np.flatnonzero(codes == code)
         k = get_kernel(TransformSpec(CRS.from_epsg(int(code)).srs,
                                      "EPSG:4326", always_xy=True))
         x[ii], y[ii], _ = k(x[ii], y[ii])
@@ -111,48 +106,29 @@ def normalize_to_4326(x, y, src_crs):
     """struct<x,y> Arrow-UDF: transform mixed-CRS coordinate columns to
     EPSG:4326 lon/lat, batching per distinct src_crs inside each Arrow
     batch (the per-worker kernel cache makes replans free). The CRS
-    column crosses the boundary as its native-extracted int EPSG code.
-    r6: ``arrow_udf`` (pyarrow arrays in/out) skips the Arrow->pandas
-    Series materialization on both sides of the crossing — the numpy
-    kernel math is byte-identical (same float64 buffers)."""
-    from pyspark.sql.functions import arrow_udf
-
-    @arrow_udf("struct<x:double,y:double>")
-    def _norm(xs: pa.Array, ys: pa.Array, codes: pa.Array) -> pa.Array:
-        xo, yo = _to_4326(xs, ys, codes)
-        return pa.StructArray.from_arrays(
-            [pa.array(xo), pa.array(yo)], names=["x", "y"])
-
-    return _norm(x, y, _epsg_code(src_crs))
+    column crosses the boundary as its native-extracted int EPSG code,
+    and pyarrow arrays (no pandas Series) cross on both sides."""
+    return map_arrays("struct<x:double,y:double>", _to_4326,
+                      x, y, _epsg_code(src_crs))
 
 
 def normalize_and_project(x, y, src_crs, target: str = "EPSG:3857"):
-    """struct<lon,lat,px,py> pandas-UDF: ONE Python crossing that both
+    """struct<lon,lat,px,py> Arrow-UDF: ONE Python crossing that both
     normalizes mixed-CRS anchors to EPSG:4326 AND projects them to the
     target CRS. The flagship pipeline uses this instead of two chained
     UDFs — halving Arrow traffic matters more than anything else in the
     hot path (each ArrowEvalPython node is a full serialize/deserialize
     of the anchor stream)."""
-    from pyspark.sql.functions import arrow_udf
+    spec = TransformSpec("EPSG:4326", CRS.from_user_input(target).srs,
+                         always_xy=True)
 
-    from pyproj_spark.crs.crs import CRS
-    from pyproj_spark.plans.spec import TransformSpec, get_kernel
-
-    tgt_srs = CRS.from_user_input(target).srs
-
-    # arrow_udf (Spark 4.1): pyarrow arrays in/out — no Arrow->pandas
-    # Series round trip; same numpy kernels on the same float64
-    # buffers, so the output bits are identical (oracle-gated).
-    @arrow_udf("struct<lon:double,lat:double,px:double,py:double>")
-    def _np2(xs: pa.Array, ys: pa.Array, codes: pa.Array) -> pa.Array:
+    def _np2(xs, ys, codes):
         lon, lat = _to_4326(xs, ys, codes)
-        kt = get_kernel(TransformSpec("EPSG:4326", tgt_srs, always_xy=True))
-        px, py, _ = kt(lon, lat)
-        return pa.StructArray.from_arrays(
-            [pa.array(lon), pa.array(lat), pa.array(px), pa.array(py)],
-            names=["lon", "lat", "px", "py"])
+        px, py, _ = get_kernel(spec)(lon, lat)
+        return lon, lat, px, py
 
-    return _np2(x, y, _epsg_code(src_crs))
+    return map_arrays("struct<lon:double,lat:double,px:double,py:double>",
+                      _np2, x, y, _epsg_code(src_crs))
 
 
 def extract_anchors_py(text: str) -> list[tuple[str, float, float, str]]:

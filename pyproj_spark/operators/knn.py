@@ -6,7 +6,7 @@ planner would make:
 
 * :func:`knn_to_zones` — the right side is a DIMENSION table (zones,
   POIs): broadcast it, haversine pre-rank natively in codegen, exact
-  Karney re-rank (pandas UDF) only on the top candidates, window top-k.
+  Karney re-rank (Arrow UDF) only on the top candidates, window top-k.
   Zero shuffle of the fact side except the final per-query window, which
   AQE coalesces.
 

@@ -8,11 +8,11 @@ The graft's flagship join (SURVEY.md §2.6): instead of a theta-join
      (zones are a dimension table);
   3. equi-join on cell = the only join, map-side via broadcast hash join
      (zero shuffle of the fact table);
-  4. exact even-odd crossing test as a vectorized pandas UDF, batched per
-     zone inside each Arrow batch (ring geometry is identical across a
-     zone's rows, so the inner loop is one numpy pass per distinct zone).
-     The rings are collected once per zones frame and shipped with
-     sparkContext.broadcast.
+  4. exact even-odd crossing test as a scalar Arrow UDF
+     (``rows.map_arrays``), batched per zone inside each Arrow batch
+     (ring geometry is identical across a zone's rows, so the inner loop
+     is one numpy pass per distinct zone). The rings are collected once
+     per zones frame and shipped with sparkContext.broadcast.
 
 Exact-match contract: :func:`point_in_ring_np` is the one definition of
 the even-odd test — the brute-force oracle in tests (FIXTURES.md §9)
@@ -25,14 +25,11 @@ wrapping vertex longitudes into the point's local frame.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import BooleanType
 
 from pyproj_spark.functions import cells
+from pyproj_spark.rows import map_arrays
 
 
 def point_in_ring_np(lon: np.ndarray, lat: np.ndarray,
@@ -101,35 +98,6 @@ def ring_contains(lon: Column, lat: Column, ring) -> Column:
     return tot % 2 == 1
 
 
-def _make_pip_udf(rings_bc):
-    """PIP filter reading the {zone_id: (lons, lats)} ring table from a
-    SparkContext BROADCAST — shipped once per executor, not pickled into
-    every task closure (at 10^5 zones a closure would re-serialize the
-    whole table per task). The ring geometry never crosses Arrow per row
-    (it is identical across a zone's candidate rows; shipping it as a
-    struct column multiplied the batch payload by the ring size)."""
-
-    @pandas_udf(BooleanType())
-    def _pip(zone_id: pd.Series, lon: pd.Series,
-             lat: pd.Series) -> pd.Series:
-        rings = rings_bc.value
-        lon_v = lon.to_numpy()
-        lat_v = lat.to_numpy()
-        out = np.zeros(len(lon_v), dtype=bool)
-        # rows arrive join-ordered: group by zone_id (one numpy pass per
-        # distinct zone inside the batch) — zone_id is the key; a
-        # geometry-derived key would collide for zones sharing vertices
-        for zid, idx in zone_id.groupby(zone_id).groups.items():
-            r = rings.get(zid)
-            if r is None or len(r[0]) == 0:
-                continue
-            ii = np.asarray(idx)
-            out[ii] = point_in_ring_np(lon_v[ii], lat_v[ii], r[0], r[1])
-        return pd.Series(out)
-
-    return _pip
-
-
 def pip_join(anchors: DataFrame, zones: DataFrame,
              res: int = cells.DEFAULT_RES,
              lon_col: str = "lon", lat_col: str = "lat") -> DataFrame:
@@ -158,6 +126,24 @@ def pip_join(anchors: DataFrame, zones: DataFrame,
         rings_bc = zones.__dict__["_pip_rings_bc"] = sc.broadcast(rings)
     zc = zones.select("zone_id", F.explode("cells").alias("cell"))
     cand = a.join(F.broadcast(zc), "cell")
-    hit = cand.filter(_make_pip_udf(rings_bc)(
-        F.col("zone_id"), F.col(lon_col), F.col(lat_col)))
+
+    def _pip(zone_id, lon, lat):
+        # the ring table is read from the broadcast (shipped once per
+        # executor, not pickled into every task closure); the geometry
+        # never crosses Arrow per row. Rows arrive join-ordered: one
+        # numpy pass per distinct zone_id in the batch (zone_id is the
+        # key; a geometry-derived key would collide for zones sharing
+        # vertices)
+        rings = rings_bc.value
+        out = np.zeros(len(lon), dtype=bool)
+        order = np.argsort(zone_id, kind="stable")
+        zids, starts = np.unique(zone_id[order], return_index=True)
+        for zid, ii in zip(zids.tolist(), np.split(order, starts[1:])):
+            r = rings.get(zid)
+            if r is not None and len(r[0]):
+                out[ii] = point_in_ring_np(lon[ii], lat[ii], r[0], r[1])
+        return out
+
+    hit = cand.filter(map_arrays("boolean", _pip, F.col("zone_id"),
+                                 F.col(lon_col), F.col(lat_col)))
     return hit.drop("cell")

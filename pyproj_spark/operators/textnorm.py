@@ -4,11 +4,11 @@ precomposed é hash/dedup identically) plus removal of C0 control
 characters (except tab/newline), DEL, zero-width characters
 (ZWSP/ZWNJ/ZWJ) and the BOM.
 
-NFC has no Catalyst builtin, so this is a scalar pandas UDF over
-``unicodedata`` — Arrow-batched, and a genuinely independent
-implementation from the DuckDB oracle's ``nfc_normalize`` (ICU-side),
-which makes the cross-engine gate a real conformance check rather
-than the same code run twice.
+NFC has no Catalyst builtin, so this is a scalar Arrow UDF
+(``rows.map_arrays``) over ``unicodedata`` — Arrow-batched, and a
+genuinely independent implementation from the DuckDB oracle's
+``nfc_normalize`` (ICU-side), which makes the cross-engine gate a real
+conformance check rather than the same code run twice.
 """
 
 from __future__ import annotations
@@ -16,9 +16,9 @@ from __future__ import annotations
 import re
 import unicodedata
 
-import pandas as pd
 from pyspark.sql import Column
-from pyspark.sql.functions import pandas_udf
+
+from pyproj_spark.rows import map_arrays
 
 #: stripped AFTER NFC: C0 controls minus \t\n, DEL, zero-widths, BOM
 STRIP_RE = re.compile(
@@ -31,8 +31,6 @@ def normalize_py(s: str) -> str:
 
 
 def normalize_text(col: Column) -> Column:
-    @pandas_udf("string")
-    def _norm(s: pd.Series) -> pd.Series:
-        return s.map(lambda x: None if x is None else normalize_py(x))
-
-    return _norm(col)
+    return map_arrays(
+        "string",
+        lambda s: [None if v is None else normalize_py(v) for v in s], col)

@@ -14,8 +14,8 @@ plan fragment so CI logs are actionable:
                        fixed there with a two-phase prefix sum).
   row-python-udf       BatchEvalPython = row-at-a-time Python in the
                        plan; only Arrow stages (ArrowEvalPython for
-                       Column UDFs, MapInArrow for ``rows.map_rows``)
-                       pass.
+                       ``rows.map_arrays``, MapInArrow for
+                       ``rows.map_rows``) pass.
   unpushed-filter      a post-scan Filter re-checks a column the
                        parquet scan could have pushed (scan shows no
                        PushedFilters for it).
@@ -82,7 +82,7 @@ def lint_plan(df_or_plan) -> list[Finding]:
         out.append(Finding(
             "row-python-udf", "error",
             "BatchEvalPython: row-at-a-time Python UDF in the hot "
-            "path (use an Arrow UDF for a Column, "
+            "path (use pyproj_spark.rows.map_arrays for a Column, "
             "pyproj_spark.rows.map_rows for rows)"))
 
     # wide-scan: compare the scan ReadSchema width with the widest

@@ -17,21 +17,15 @@ from __future__ import annotations
 import functools
 import math
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from pyproj_spark.functions import cells
 from pyproj_spark.functions.transform import haversine_m, transform_xy
+from pyproj_spark.io import read_table as _t
 from pyproj_spark.operators.pip import _ring_edges, pip_join, ring_contains
 
 # ---------------------------------------------------------------- helpers
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    # memoized source relation (pyproj_spark/io.py): plan-side only —
-    # every action still scans the parquet files
-    from pyproj_spark.io import read_parquet_cached
-    return read_parquet_cached(spark, f"{sf_dir}/{name}.parquet")
-
 
 #: deterministic point derivation from doc_id (same text in SQL below)
 def _doc_points(spark, sf_dir):
@@ -101,7 +95,7 @@ def _make_zones_df(spark):
 # ------------------------------------------------------------ geo queries
 
 def q_webmerc_transform(spark, sf_dir):
-    """T3: batch CRS transform 4326->3857 through the pandas-UDF kernel.
+    """T3: batch CRS transform 4326->3857 through the Arrow-UDF kernel.
     The oracle recomputes with DuckDB's ln/tan — independent check of the
     kernel math (SURVEY.md §2.1 T3)."""
     pts = _doc_points(spark, sf_dir)
@@ -756,9 +750,9 @@ def q_stateplane(spark, sf_dir):
     ``pyproj/transformer.py:184-230``). The oracle recomputes the full
     Snyder LCC-2SP closed form in DuckDB from the published EPSG
     sexagesimal parameters — an independent check of both the catalog
-    parameters and the projection kernel. Each zone's pandas-UDF kernel
+    parameters and the projection kernel. Each zone's Arrow-UDF kernel
     is planned once and broadcast; zone dispatch happens INSIDE one
-    pandas-UDF pass (transform_xy_keyed) so the source is scanned once
+    Arrow-UDF pass (transform_xy_keyed) so the source is scanned once
     — a per-zone branch-and-union would rescan it once per zone."""
     from pyproj_spark.functions.transform import transform_xy_keyed
 
@@ -859,7 +853,7 @@ def q_nad27_stateplane(spark, sf_dir):
     the oracle recomputes the full Snyder LCC-2SP closed form in
     DuckDB from the SP-235 sexagesimal constants, independently
     checking catalog parameters, clrk66 constants, ftUS conversion,
-    and the projection kernel. One scan, one pandas-UDF crossing
+    and the projection kernel. One scan, one Arrow-UDF crossing
     (transform_xy_keyed), zone dispatch inside the kernel."""
     from pyproj_spark.functions.transform import transform_xy_keyed
 
@@ -1167,7 +1161,7 @@ def q_vertical_shift(spark, sf_dir):
     841-985 z semantics): gravity-related heights H on a synthetic
     vertical datum become ellipsoidal heights h = H + N(lon, lat)
     through the registered geoid surface (kernels/grids.py::GeoidGrid,
-    PROJ's vgridshift), fused with the horizontal leg in ONE pandas-UDF
+    PROJ's vgridshift), fused with the horizontal leg in ONE Arrow-UDF
     crossing (transform_xyz on CompoundCRS(4326+vertical) -> EPSG:4979).
     The oracle recomputes the bilinear undulation from the geoid's
     closed-form node values — the same replay pattern as grid_shift."""
@@ -1421,7 +1415,7 @@ def q_geocent_transform(spark, sf_dir):
     """3D kernel path (T3 z-variant): geodetic lon/lat/h -> EPSG:4978
     geocentric XYZ through transform_xyz; the oracle recomputes the
     closed-form geodetic->geocentric conversion (N = a/sqrt(1-e2 sin2),
-    X = (N+h) cos cos, ...) so the 3D pandas-UDF crossing and the
+    X = (N+h) cos cos, ...) so the 3D Arrow-UDF crossing and the
     datum kernel are value-hash-gated."""
     from pyproj_spark.functions.transform import transform_xyz
     pts = _doc_points(spark, sf_dir).withColumn(
@@ -1533,7 +1527,7 @@ QUERIES["geod_sphere"] = (q_geod_sphere, SQL_GEOD_SPHERE)
 
 
 def q_factors(spark, sf_dir):
-    """T8 driver-gated: Proj.get_factors through the pandas-UDF path on
+    """T8 driver-gated: Proj.get_factors through the Arrow-UDF path on
     Web Mercator, whose factors have closed forms the oracle recomputes
     (k = h = sec phi, areal = sec^2 phi — spherical convention, PROJ
     does the same for webmerc). |lat| <= 60 keeps the finite-difference
@@ -4116,7 +4110,7 @@ def q_s2_pip(spark, sf_dir):
     boundary sliver is refined. The oracle is the covering-blind SQL_PIP: hash
     equality proves the covering dropped no candidate AND that no
     certain range leaked an outside point. Contrast with pip_join
-    (geocell equality covering + pandas-UDF exact test)."""
+    (geocell equality covering + Arrow-UDF exact test)."""
     from pyproj_spark.functions import s2cell
     zr, levels = _s2_pip_covering()
     pts = _doc_points(spark, sf_dir)
@@ -6588,7 +6582,7 @@ def q_gauss_kruger(spark, sf_dir):
     coefficient doubles, hyperbolics spelled via exp/ln identities —
     an independent end-to-end check of catalog parameters, krass
     constants, and the transverse-Mercator kernel. One scan, zone
-    dispatch inside one pandas-UDF crossing (transform_xy_keyed)."""
+    dispatch inside one Arrow-UDF crossing (transform_xy_keyed)."""
     from pyproj_spark.functions.transform import transform_xy_keyed
 
     docs = _t(spark, sf_dir, "documents").select(
@@ -6682,7 +6676,7 @@ def q_krovak_grid(spark, sf_dir):
     (EPSG method 9819, S-JTSK / Krovak East North = EPSG:5514; the
     kernel reproduces the EPSG guidance-note worked example to 2 cm —
     tests/test_projections_round5.py::TestKrovak). Deterministic
-    points over the CZ/SK window go through ONE pandas-UDF crossing
+    points over the CZ/SK window go through ONE Arrow-UDF crossing
     (Transformer.from_crs(4156, 5514), reference transformer.py:
     184-230); the oracle replays the full closed form — gaussian
     sphere, oblique rotation, conformal cone — in DuckDB from the
@@ -6766,7 +6760,7 @@ def q_world_proj(spark, sf_dir):
     Tripel (the reference reaches all three via +proj strings,
     pyproj/crs/crs.py:236-320). Deterministic world-spanning points
     (chosen off the equator/central-meridian special branches) go
-    through three Transformer.from_crs pipelines — one pandas-UDF
+    through three Transformer.from_crs pipelines — one Arrow-UDF
     crossing each — and the oracle replays every closed form in
     DuckDB: the exact rectifying-latitude meridian-arc series for
     Bonne (kernel-constant doubles, the gauss_kruger pattern), the
@@ -6910,7 +6904,7 @@ def q_hammer_aitoff(spark, sf_dir):
     """Companion world-projection gate: Hammer (equal-area 2:1
     ellipse) and Aitoff — the modified-azimuthal pair (equatorial
     LAEA / AEQD with halved longitudes and doubled x; Snyder pp.
-    160-163 and 230). Same shape as world_proj: one pandas-UDF
+    160-163 and 230). Same shape as world_proj: one Arrow-UDF
     crossing per projection, whole-meter BIGINT output, full closed
     forms replayed in DuckDB. wintri = mean(eqc, aitoff) is locked in
     tests/test_projections_world.py, so this gate plus world_proj
@@ -7058,7 +7052,7 @@ def q_rd_grid(spark, sf_dir):
     (Amersfoort / RD New, EPSG:28992; kernel reproduces the EPSG
     guidance-note worked example to 2 mm —
     tests/test_projections_round5.py::TestObliqueStereographic).
-    Deterministic points over the NL window go through ONE pandas-UDF
+    Deterministic points over the NL window go through ONE Arrow-UDF
     crossing (Transformer.from_crs(4289, 28992), reference
     transformer.py:184-230); the oracle replays the conformal-sphere
     double projection in DuckDB from the kernel's plan-time constant

@@ -14,21 +14,13 @@ import functools
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from pyproj_spark.io import read_table as _t
 from pyproj_spark.operators import dedup, similarity, textstats
+from pyproj_spark.operators.skew import spread_small_scan as _spread
 
 
 def _docs(spark, sf_dir):
-    # memoized source relation (pyproj_spark/io.py): plan-side only
-    from pyproj_spark.io import read_parquet_cached
-    return read_parquet_cached(spark, f"{sf_dir}/documents.parquet")
-
-
-def _tt(spark, sf_dir, name):
-    from pyproj_spark.io import read_parquet_cached
-    return read_parquet_cached(spark, f"{sf_dir}/{name}.parquet")
-
-from pyproj_spark.operators.skew import spread_small_scan as _spread
-
+    return _t(spark, sf_dir, "documents")
 
 
 _NORM_SQL = ("trim(regexp_replace(regexp_replace(lower(text), "
@@ -313,7 +305,7 @@ ORDER BY id_a, id_b
 
 
 def q_embedding_topk(spark, sf_dir):
-    emb = _tt(spark, sf_dir, "embeddings")
+    emb = _t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10) \
                  .withColumnRenamed("vec_id", "qid")
     return similarity.cosine_topk(emb.filter(F.col("vec_id") < 1000),
@@ -348,7 +340,7 @@ def q_ivf_ann(spark, sf_dir):
     nprobe cells -> exact cosine re-rank inside the probed cells. The
     whole pipeline (centroids, quantization, probing, re-rank) is
     reproduced in DuckDB SQL and hash-checked."""
-    emb = _tt(spark, sf_dir, "embeddings")
+    emb = _t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10) \
                  .withColumnRenamed("vec_id", "qid")
     return similarity.ivf_topk(emb.filter(F.col("vec_id") < 500), queries,
@@ -414,7 +406,7 @@ def q_ann_lsh(spark, sf_dir):
     deterministic, so the full signature -> bucket -> re-rank pipeline
     is reproduced in DuckDB SQL and hash-checked (recall vs brute force
     is additionally measured in tests)."""
-    emb = _tt(spark, sf_dir, "embeddings")
+    emb = _t(spark, sf_dir, "embeddings")
     return similarity.ann_topk_lsh(emb.filter(F.col("vec_id") < 500),
                                    k=3, n_planes=4, dim=64)
 
@@ -1053,7 +1045,7 @@ def q_embedding_neardup(spark, sf_dir):
     # norms hoisted to one pass per VECTOR (the semdedup convention):
     # the pair stage then does one dot per pair instead of dot + two
     # norms — same sqrt/product/round ops on the same values
-    emb = _tt(spark, sf_dir, "embeddings") \
+    emb = _t(spark, sf_dir, "embeddings") \
         .filter(F.col("vec_id") < 300) \
         .select("vec_id", F.col("embedding").cast("array<double>")
                 .alias("v")) \
@@ -1510,7 +1502,7 @@ def q_kmeans(spark, sf_dir):
     oracle (the SAME passes unrolled in SQL CTEs) replays every
     assignment bit-for-bit."""
     from pyproj_spark.operators.kmeans import kmeans
-    emb = _tt(spark, sf_dir, "embeddings") \
+    emb = _t(spark, sf_dir, "embeddings") \
         .select("vec_id",
                 F.col("embedding").cast("array<double>").alias("v"))
     return kmeans(emb, k=8, iters=1)
@@ -1636,7 +1628,7 @@ def q_rrf_fusion(spark, sf_dir):
     exposure — and ties break on doc_id."""
     from pyproj_spark.operators.search import bm25_search
     b = bm25_search(_docs(spark, sf_dir), _BM25_QUERIES, top_k=10)
-    emb = _tt(spark, sf_dir, "embeddings") \
+    emb = _t(spark, sf_dir, "embeddings") \
         .filter(F.col("vec_id") < 1000)
     qv = emb.filter(F.col("vec_id").isin(1, 2, 3)) \
         .withColumnRenamed("vec_id", "qid")
@@ -2230,7 +2222,7 @@ def q_quantile_sketch(spark, sf_dir):
     sample — Spark's distributed TakeOrdered IS the sketch merge, and
     the integer index rule makes the estimate engine-identical."""
     from pyproj_spark.operators.sketch import bottomk_quantiles
-    ev = _tt(spark, sf_dir, "events")
+    ev = _t(spark, sf_dir, "events")
     return bottomk_quantiles(ev, "value", "event_id")
 
 
@@ -2372,7 +2364,7 @@ def q_markov_events(spark, sf_dir):
     as an exact integer count ratio — the navigation-model /
     next-action analytic over clickstream-shaped data."""
     from pyspark.sql import Window
-    ev = _tt(spark, sf_dir, "events")
+    ev = _t(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     seq = (ev.withColumn("next_type",
                          F.lead("event_type").over(w))
@@ -3104,7 +3096,7 @@ def q_text_normalize(spark, sf_dir):
     deterministic 'dirty' tail — a decomposed e+COMBINING-ACUTE, a
     zero-width space, a BEL control, CJK — built with IDENTICAL
     chr()-arithmetic in both engines; Spark normalizes via the
-    unicodedata pandas UDF, DuckDB via its own ICU-side
+    unicodedata Arrow UDF, DuckDB via its own ICU-side
     nfc_normalize + RE2 strip. Two INDEPENDENT Unicode
     implementations must produce byte-identical text (md5-gated) —
     the strongest kind of oracle row in the suite."""
@@ -3433,7 +3425,7 @@ def q_semdedup(spark, sf_dir):
     removed iff a lower-id representative has rounded cosine >= 0.30
     (canonical-minimum survivor, the `canonical_docs` convention)."""
     from pyproj_spark.operators.similarity import semdedup
-    emb = _tt(spark, sf_dir, "embeddings") \
+    emb = _t(spark, sf_dir, "embeddings") \
         .select("vec_id",
                 F.col("embedding").cast("array<double>").alias("v"))
     return semdedup(emb, k=8, iters=1, threshold=0.30,
@@ -3918,9 +3910,9 @@ def q_sq8_ann(spark, sf_dir):
     stats agg is exact integers, so the oracle replays the WHOLE
     pipeline — stats, codes, scores, ranks — bit-for-bit in SQL."""
     from pyproj_spark.operators import similarity
-    emb = _tt(spark, sf_dir, "embeddings") \
+    emb = _t(spark, sf_dir, "embeddings") \
         .filter(F.col("vec_id") < 1000)
-    queries = (_tt(spark, sf_dir, "embeddings")
+    queries = (_t(spark, sf_dir, "embeddings")
                .filter(F.col("vec_id") < 8)
                .withColumnRenamed("vec_id", "qid"))
     return similarity.sq8_topk(emb, queries, k=5)
@@ -3984,9 +3976,9 @@ def q_pq_ann(spark, sf_dir):
     hash-matches the ranking — the full train/encode/search pipeline
     cross-checked across engines."""
     from pyproj_spark.operators import similarity
-    emb = _tt(spark, sf_dir, "embeddings") \
+    emb = _t(spark, sf_dir, "embeddings") \
         .filter(F.col("vec_id") < 1000)
-    queries = (_tt(spark, sf_dir, "embeddings")
+    queries = (_t(spark, sf_dir, "embeddings")
                .filter(F.col("vec_id") < 8)
                .withColumnRenamed("vec_id", "qid"))
     return similarity.pq_adc_topk(emb, queries, k=5)
@@ -4078,9 +4070,9 @@ def q_ivfpq(spark, sf_dir):
     training, and hash-matches the final ranking — the whole
     index build + search cross-checked across engines."""
     from pyproj_spark.operators import similarity
-    emb = _tt(spark, sf_dir, "embeddings") \
+    emb = _t(spark, sf_dir, "embeddings") \
         .filter(F.col("vec_id") < 1000)
-    queries = (_tt(spark, sf_dir, "embeddings")
+    queries = (_t(spark, sf_dir, "embeddings")
                .filter(F.col("vec_id") < 8)
                .withColumnRenamed("vec_id", "qid"))
     return similarity.ivfpq_topk(emb, queries, k=5)
@@ -4783,7 +4775,7 @@ def q_jl_project(spark, sf_dir):
     from the shared md5-parity literals and replays the quantized
     fold index-wise."""
     from pyproj_spark.operators.similarity import jl_project
-    emb = _tt(spark, sf_dir, "embeddings")
+    emb = _t(spark, sf_dir, "embeddings")
     return jl_project(emb, k=16, dim=64)
 
 

@@ -3,7 +3,7 @@
 The confs here are the ones that matter at 100 TB: AQE (runtime
 re-planning + skew-join splitting), a shuffle-partition count sized to
 the local core count (on a real cluster this is set per-job), and Arrow
-batching for the pandas-UDF kernels (the Spark analogue of pyproj's
+batching for the Arrow-UDF kernels (the Spark analogue of pyproj's
 64-point micro-batches — reference ``pyproj/transformer.py:1096-1099`` —
 but sized for Arrow transfer amortization, not C-call overhead).
 
@@ -44,7 +44,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-#: Arrow batch size for pandas-UDF kernels. pyproj uses 64-point batches
+#: Arrow batch size for Arrow-UDF kernels. pyproj uses 64-point batches
 #: because its per-call overhead is one C call; ours is a JVM->Python
 #: Arrow round trip whose per-batch overhead dominates at small sizes —
 #: measured on the flagship pipeline (5M anchor rows): 10k-row batches

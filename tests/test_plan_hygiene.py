@@ -246,22 +246,37 @@ def test_multimodal_queries_map_over_arrow(spark, name):
     assert "FlatMapGroupsInPandas" not in plan
 
 
-def test_no_pandas_map_stage_in_engine_source():
-    """Rows reach Python through ``rows.map_rows`` only: no
-    ``applyInPandas`` / ``mapInPandas`` call anywhere in the engine
-    outside ``streaming/`` (whose ``applyInPandasWithState`` keeps
-    per-key state across micro-batches)."""
+def _engine_calls(pattern: str, allowed=()) -> list[str]:
+    """``path:line`` of every engine source line outside ``streaming/``
+    and the ``allowed`` files that matches ``pattern``."""
     import pathlib
     import re
 
     import pyproj_spark
     root = pathlib.Path(pyproj_spark.__file__).parent
-    hits = [f"{path.relative_to(root)}:{i}"
+    return [f"{path.relative_to(root)}:{i}"
             for path in sorted(root.rglob("*.py"))
             if "streaming" not in path.relative_to(root).parts
+            and path.relative_to(root).as_posix() not in allowed
             for i, line in enumerate(path.read_text().splitlines(), 1)
-            if re.search(r"\b(applyInPandas|mapInPandas)\(", line)]
-    assert hits == []
+            if re.search(pattern, line)]
+
+
+def test_no_pandas_map_stage_in_engine_source():
+    """Rows reach Python through ``rows.map_rows`` only: no
+    ``applyInPandas`` / ``mapInPandas`` call anywhere in the engine
+    outside ``streaming/`` (whose ``applyInPandasWithState`` keeps
+    per-key state across micro-batches)."""
+    assert _engine_calls(r"\b(applyInPandas|mapInPandas)\(") == []
+
+
+def test_scalar_python_udfs_only_through_map_arrays():
+    """Columns reach Python through ``rows.map_arrays`` only: no
+    ``arrow_udf(`` / ``pandas_udf(`` call anywhere in the engine outside
+    ``rows.py``, ``operators/dtw.py`` (whose two Arrow UDFs walk list
+    offsets, not numpy columns) and ``streaming/``."""
+    assert _engine_calls(r"\b(arrow_udf|pandas_udf)\(",
+                         ("rows.py", "operators/dtw.py")) == []
 
 
 @pytest.mark.parametrize("name", [
