@@ -65,8 +65,9 @@ def _face_uv_np(lon, lat):
         (ax >= ay) & (ax >= az), np.where(x >= 0, 0, 3),
         np.where(ay >= az, np.where(y >= 0, 1, 4),
                  np.where(z >= 0, 2, 5)))
-    # S2 face->(u,v) convention (s2coords.h valid_face_xyz_to_uv)
-    with np.errstate(divide="ignore", invalid="ignore"):
+    # S2 face->(u,v) convention (s2coords.h valid_face_xyz_to_uv);
+    # np.select discards the off-face quotients, which may overflow
+    with np.errstate(divide="ignore", invalid="ignore", over="ignore"):
         u = np.select(
             [face == 0, face == 1, face == 2, face == 3, face == 4],
             [y / x, -x / y, -x / z, z / x, z / y], default=-y / z)

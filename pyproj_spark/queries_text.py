@@ -9,14 +9,17 @@ Cross-engine determinism notes:
 
 from __future__ import annotations
 
-import functools
-
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from pyproj_spark.io import read_table as _t
 from pyproj_spark.operators import dedup, similarity, textstats
 from pyproj_spark.operators.skew import spread_small_scan as _spread
+from pyproj_spark.sources.blobs import (avi_blob, image_header_blob,
+                                        jpeg_blob, png_blob,
+                                        progressive_blob, resize_blob,
+                                        rgb, sawtooth_wav, tone_wav,
+                                        with_blobs)
 
 
 def _docs(spark, sf_dir):
@@ -456,132 +459,6 @@ SELECT id_a, rank, id_b, sim FROM ranked WHERE rank <= 3
 
 
 # ------------------------------------------------ multimodal fixture blobs
-# Each decode query below synthesizes real container bytes per doc from
-# doc_id in one map_rows stage, then runs the gated decoder over them.
-# An encode that depends on doc_id only through a few residues is
-# memoized per Python worker; the gated decode still runs once per row.
-
-def _with_blobs(docs, blob):
-    """``(url, payload)`` per row of the documents table, with url the
-    doc id as a string and ``payload = blob(doc_id)``. A fixture that
-    raises fails its task: no decode-or-skip here. Decoders that pay
-    per row take ``_spread(_docs(...))``: the memoized relation is
-    spread, so its scan-partition probe runs once per session."""
-    from pyproj_spark.rows import map_rows
-    url = F.col("doc_id").cast("string").alias("url")
-    return map_rows(docs, [url, "doc_id"], "url string, payload binary",
-                    lambda u, d: [(u, blob(d))])
-
-
-def _rgb(d: int, w: int, h: int):
-    """The w x h RGB gradient every image fixture is drawn from."""
-    import numpy as np
-    x, y = np.meshgrid(np.arange(w), np.arange(h))
-    return np.stack([(x * 7 + d) % 256, (y * 13 + d * 3) % 256,
-                     (x + y) % 256], -1).astype(np.uint8)
-
-
-def _png_blob(d: int) -> bytes:
-    from pyproj_spark.operators.multimodal import encode_png
-    return encode_png(_rgb(d, d % 16 + 1, d % 12 + 1))
-
-
-def _blocks8(vals):
-    """Each value of a block grid blown up to a constant 8x8 block."""
-    import numpy as np
-    return np.repeat(np.repeat(vals, 8, 0), 8, 1).astype(np.uint8)
-
-
-@functools.cache
-def _baseline_jpeg(bw: int, bh: int, dmod: int) -> bytes:
-    import numpy as np
-
-    from pyproj_spark.kernels.jpeg import encode_jpeg
-    bx, by = np.meshgrid(np.arange(bw), np.arange(bh))
-    return encode_jpeg(_blocks8((bx * 29 + by * 31 + dmod * 17) % 256))
-
-
-def _jpeg_blob(d: int) -> bytes:
-    return _baseline_jpeg(d % 3 + 1, d % 2 + 1, d % 256)
-
-
-@functools.cache
-def _progressive_jpeg(bw: int, bh: int, dmod: int) -> bytes:
-    import numpy as np
-
-    from pyproj_spark.kernels.jpeg import encode_jpeg_progressive
-    bx, by = np.meshgrid(np.arange(bw), np.arange(bh))
-    return encode_jpeg_progressive(
-        _blocks8((bx * 37 + by * 41 + dmod * 13) % 256),
-        restart_interval=2)
-
-
-def _progressive_blob(d: int) -> bytes:
-    return _progressive_jpeg(d % 2 + 1, d % 3 + 1, d % 251)
-
-
-@functools.cache
-def _mjpg_frame(v: int) -> bytes:
-    import numpy as np
-
-    from pyproj_spark.kernels.jpeg import encode_jpeg
-    return encode_jpeg(np.full((16, 16), v, dtype=np.uint8))
-
-
-def _avi_blob(d: int) -> bytes:
-    from pyproj_spark.kernels.riff import encode_avi_mjpg
-    return encode_avi_mjpg([_mjpg_frame((f * 53 + d * 17) % 256)
-                            for f in range(d % 5 + 2)], fps=10.0)
-
-
-def _sawtooth_wav(d: int, n: int, step: int, mul: int, period: int
-                  ) -> bytes:
-    """n samples of ((i * step + d * mul) % period) - period // 2."""
-    import numpy as np
-
-    from pyproj_spark.kernels.riff import encode_wav
-    s = ((np.arange(n) * step + d * mul) % period) - period // 2
-    return encode_wav(s, rate=8000, bits=16)
-
-
-@functools.cache
-def _tone_wav(f: int) -> bytes:
-    import numpy as np
-
-    from pyproj_spark.kernels.riff import encode_wav
-    s = np.floor(20000.0 * np.sin(2.0 * np.pi * f * np.arange(256)
-                                  / 8000.0))
-    return encode_wav(s.astype(np.int64), rate=8000, bits=16)
-
-
-def _image_header_blob(d: int) -> bytes:
-    import struct
-    if d % 4 == 0:
-        # real JPEG header bytes: SOI + EXIF APP1 carrying orientation +
-        # SOF0 with the dims (header-parse + exif-walk both gated;
-        # alternating byte order)
-        from pyproj_spark.kernels.jpeg import _exif_app1
-        app1 = _exif_app1(d % 8 + 1, "<" if d % 8 < 4 else ">")
-        sof = (b"\xff\xc0" + struct.pack(
-            ">HBHHB", 11, 8, d % 768 + 1, d % 1024 + 1, 1)
-            + bytes([1, 0x11, 0]))
-        return b"\xff\xd8" + app1 + sof
-    return (b"\x89PNG\r\n\x1a\n" + struct.pack(">I", 13) + b"IHDR"
-            + struct.pack(">II", d % 1024 + 1, d % 768 + 1)
-            + b"\x08\x02\x00\x00\x00")
-
-
-def _resize_blob(d: int) -> bytes:
-    """PNG, BMP or grayscale GIF (all channels = (x*7 + d) % 256) by
-    d % 3, all drawn from the same gradient."""
-    from pyproj_spark.kernels.riff import encode_bmp, encode_gif
-    w, h = d % 16 + 1, d % 12 + 1
-    if d % 3 == 0:
-        return _png_blob(d)
-    if d % 3 == 1:
-        return encode_bmp(_rgb(d, w, h))
-    return encode_gif(_rgb(d, w, h)[:, :, 0])
-
 
 def q_image_meta(spark, sf_dir):
     """Multimodal image metadata, oracle-checked end to end: each doc
@@ -592,7 +469,7 @@ def q_image_meta(spark, sf_dir):
     driver-gated."""
     from pyproj_spark.operators.multimodal import image_meta
 
-    blobs = _with_blobs(_docs(spark, sf_dir), _image_header_blob)
+    blobs = with_blobs(_docs(spark, sf_dir), image_header_blob)
     return image_meta(blobs, "payload").select(
         F.col("url").cast("long").alias("doc_id"),
         "format", "width", "height", "n_bytes", "orientation")
@@ -621,7 +498,7 @@ def q_png_decode(spark, sf_dir):
     the same gradient formula."""
     from pyproj_spark.operators.multimodal import png_stats
 
-    blobs = _with_blobs(_docs(spark, sf_dir), _png_blob)
+    blobs = with_blobs(_docs(spark, sf_dir), png_blob)
     return png_stats(blobs, "payload").select(
         F.col("url").cast("long").alias("doc_id"),
         "width", "height", "n_channels", "mean_luma")
@@ -664,7 +541,7 @@ def q_jpeg_decode(spark, sf_dir):
     genuinely decoded bitstream."""
     from pyproj_spark.operators.multimodal import jpeg_stats
 
-    blobs = _with_blobs(_spread(_docs(spark, sf_dir)), _jpeg_blob)
+    blobs = with_blobs(_spread(_docs(spark, sf_dir)), jpeg_blob)
     return jpeg_stats(blobs, "payload").select(
         F.col("url").cast("long").alias("doc_id"),
         "width", "height", "n_channels", "mean_luma")
@@ -700,7 +577,7 @@ def q_wav_features(spark, sf_dir):
     arithmetically from the same sample formula."""
     from pyproj_spark.operators.multimodal import wav_features
 
-    blobs = _with_blobs(_docs(spark, sf_dir), lambda d: _sawtooth_wav(
+    blobs = with_blobs(_docs(spark, sf_dir), lambda d: sawtooth_wav(
         d, n=d % 50 + 20, step=37, mul=11, period=200))
     return wav_features(blobs, "payload").select(
         F.col("url").cast("long").alias("doc_id"),
@@ -739,7 +616,7 @@ def q_frame_sample(spark, sf_dir):
     from the same formula."""
     from pyproj_spark.operators.multimodal import video_frame_sample
 
-    blobs = _with_blobs(_spread(_docs(spark, sf_dir)), _avi_blob)
+    blobs = with_blobs(_spread(_docs(spark, sf_dir)), avi_blob)
     return video_frame_sample(blobs, "payload", every_k=2).select(
         F.col("url").cast("long").alias("doc_id"),
         "frame_idx", "width", "height", "n_channels", "mean_luma")
@@ -773,7 +650,7 @@ def q_image_resize(spark, sf_dir):
     runs before tensorization."""
     from pyproj_spark.operators.multimodal import image_resize
 
-    blobs = _with_blobs(_spread(_docs(spark, sf_dir)), _resize_blob)
+    blobs = with_blobs(_spread(_docs(spark, sf_dir)), resize_blob)
     return image_resize(blobs, "payload", out_h=4, out_w=4,
                         method="nearest").select(
         F.col("url").cast("long").alias("doc_id"),
@@ -1177,8 +1054,7 @@ def q_jpeg_progressive(spark, sf_dir):
     arithmetically from the same deterministic block formula."""
     from pyproj_spark.operators.multimodal import jpeg_stats
 
-    blobs = _with_blobs(_spread(_docs(spark, sf_dir)),
-                        _progressive_blob)
+    blobs = with_blobs(_spread(_docs(spark, sf_dir)), progressive_blob)
     return jpeg_stats(blobs, "payload").select(
         F.col("url").cast("long").alias("doc_id"),
         "width", "height", "n_channels", "mean_luma")
@@ -3297,8 +3173,8 @@ def q_tone_detect(spark, sf_dir):
     from pyproj_spark.operators.multimodal import audio_tone_detect
 
     freqs = (500, 1000, 2000, 3000)
-    blobs = _with_blobs(_spread(_docs(spark, sf_dir)),
-                        lambda d: _tone_wav(freqs[d % 4]))
+    blobs = with_blobs(_spread(_docs(spark, sf_dir)),
+                       lambda d: tone_wav(freqs[d % 4]))
     return audio_tone_detect(blobs).select(
         F.col("url").cast("long").alias("doc_id"),
         "detected_hz", "energy_share")
@@ -4815,8 +4691,8 @@ def q_image_dhash(spark, sf_dir):
     pixel formulas — hash equality gates the whole decode+hash chain."""
     from pyproj_spark.operators.multimodal import encode_png, image_dhash
 
-    blobs = _with_blobs(_spread(_docs(spark, sf_dir)),
-                        lambda d: encode_png(_rgb(d, 18, 12)))
+    blobs = with_blobs(_spread(_docs(spark, sf_dir)),
+                       lambda d: encode_png(rgb(d, 18, 12)))
     return image_dhash(blobs).select(
         F.col("url").cast("long").alias("doc_id"), "dhash",
         F.count(F.lit(1)).over(Window.partitionBy("dhash"))
@@ -4867,7 +4743,7 @@ def q_audio_fp(spark, sf_dir):
     sample formula — the decode+hash chain gates end to end."""
     from pyproj_spark.operators.multimodal import audio_fingerprint
 
-    blobs = _with_blobs(_docs(spark, sf_dir), lambda d: _sawtooth_wav(
+    blobs = with_blobs(_docs(spark, sf_dir), lambda d: sawtooth_wav(
         d, n=d % 120 + 64, step=53, mul=29, period=256))
     return audio_fingerprint(blobs).select(
         F.col("url").cast("long").alias("doc_id"), "n_frames", "fp")

@@ -36,11 +36,45 @@ message, and its DataFrame query context still names the operation,
 but no longer the Python call site. pyspark reads the conf once per
 process, at the first Column call made under an active session, so the
 first session of a process decides.
+
+Two more confs cut the fixed cost of each query stage; results do not
+change (4 vCPU, ``local[2]``):
+
+* The Python workers talk to the JVM over a Unix domain socket, not
+  loopback TCP. Over TCP each Arrow or ``mapInArrow`` task waited
+  40-48 ms (median 41.7) in ``pyarrow.ipc.open_stream`` for the JVM's
+  first Arrow message; over the Unix socket the wait is 0.07-0.57 ms
+  (timed in the worker). That ~40 ms looks like Linux's delayed-ACK
+  floor meeting Nagle on an unflagged loopback socket. A 500-row,
+  one-task Arrow-UDF job to the noop sink took 80 ms over TCP and
+  41 ms over the socket; the native job takes 17-19 ms. Spark names
+  each socket ``<dir>/.<uuid4>.sock``, 43 characters past the
+  directory, and AF_UNIX paths stop at 108 bytes. Spark's default
+  directory is ``java.io.tmpdir``, which a caller may point deep into
+  a work tree (perfbench does), so :func:`socket_dir` is a short
+  directory under ``/tmp`` instead. The socket mode skips the worker
+  auth secret: the directory's owner and its mode 0700 keep other
+  local users off the daemon.
+* ``spark.sql.codegen.cache.maxEntries`` is 1000, not 100. The
+  perfbench query mix compiles 107 classes on its first pass, so the
+  default cache evicted them and each later pass recompiled 22-53
+  classes whose source had not changed; with 1000 a later pass
+  compiles none. The
+  conf is static: the first session of a JVM decides.
+
+Over 12 alternating perfbench pairs the two took query_mix
+``op_p50_s_ref`` from 0.319 to 0.232 s. The flagship, whose 65k-row
+batches keep the socket busy, lost 1-3% of its throughput, most of it
+to the socket.
 """
 
 from __future__ import annotations
 
+import atexit
+import functools
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import SparkSession
 
@@ -67,6 +101,16 @@ def default_parallelism() -> int:
 #: disappear under these flags (see bench.py methodology notes).
 STEADY_JVM_OPTS = ("-XX:ReservedCodeCacheSize=1g -XX:+UseParallelGC "
                    "-XX:CICompilerCount=4 -Xms20g")
+
+
+@functools.cache
+def socket_dir() -> str:
+    """The directory of this process's Python-worker sockets: short,
+    under ``/tmp`` whatever ``TMPDIR`` or ``java.io.tmpdir`` say, mode
+    0700, and removed when the process exits."""
+    path = tempfile.mkdtemp(prefix="pyspark-", dir="/tmp")
+    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    return path
 
 
 def get_spark(app_name: str = "pyproj_spark", cores: int | None = None,
@@ -98,6 +142,9 @@ def get_spark(app_name: str = "pyproj_spark", cores: int | None = None,
         .config("spark.ui.enabled", "false")
         .config("spark.python.daemon.module", "pyproj_spark.worker_daemon")
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        .config("spark.python.unix.domain.socket.enabled", "true")
+        .config("spark.python.unix.domain.socket.dir", socket_dir())
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     if java_opts:
         builder = builder.config("spark.driver.extraJavaOptions",
